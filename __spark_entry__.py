@@ -233,8 +233,9 @@ def q12_idf(spark, sf):
     # N folded into the plan (broadcast 1-row agg + cross join): a separate
     # d.count() would scan the corpus twice.
     # df(word) = docs containing the word: doc_id is the documents table's
-    # row key (unique at every sf), so per-row array_distinct already makes
-    # (doc_id, word) globally unique and the explode can feed the word
+    # row key (unique at every sf; tests/test_queries.py checks it), so
+    # per-row array_distinct already makes (doc_id, word) globally unique
+    # and the explode can feed the word
     # aggregation DIRECTLY — one exchange (partial word counts) instead of
     # two (the old (doc_id, word) distinct shuffled every pair first).
     d = _spread_by(_t(spark, sf, "documents"), "doc_id")

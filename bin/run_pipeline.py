@@ -37,7 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--out", required=True, help="output root (triples/, vertices/, edges/)")
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--no-resume", action="store_true")
-    p.add_argument("--salt-buckets", type=int, default=8)
     p.add_argument("--lsh", action="store_true", help="LSH-blocked fuzzy linking")
     p.add_argument("--salience", action="store_true",
                    help="annotate vertices with PageRank entity salience")
@@ -79,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
     cfg = PipelineConfig(
         checkpoint_dir=args.checkpoint_dir,
         resume=not args.no_resume,
-        salt_buckets=args.salt_buckets,
         use_lsh_blocking=args.lsh,
         dedup_snapshots=args.dedup_snapshots,
     )

@@ -9,7 +9,7 @@ Spark DataFrame plans over local dictionary tables:
 - triple extraction over Common-Crawl-style ``pages(url, warc_ts, html,
   text, lang)`` (boilerplate-stripping extraction as a vectorized Arrow UDF,
   byte-identical per url),
-- entity linking = broadcast/salted alias-dictionary joins with optional
+- entity linking = broadcast alias-dictionary joins with optional
   MinHash-LSH blocking (replaces Spotlight/Falcon REST: reference
   pretreatment/DataExtract.py:127-198),
 - candidate predicate generation = joins against a local ``kg_triples``

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -69,12 +69,10 @@ class PipelineConfig:
     # orchestration
     checkpoint_dir: str | None = None
     resume: bool = True
-    extra: dict = field(default_factory=dict, compare=False, hash=False)
 
     def config_hash(self) -> str:
         """Stable content hash for stage-manifest resume checks."""
         d = asdict(self)
-        d.pop("extra", None)
         d.pop("checkpoint_dir", None)
         d.pop("resume", None)
         blob = json.dumps(d, sort_keys=True, default=str).encode()

@@ -29,7 +29,7 @@ to the word — the round-trip invariant tests rely on), matching the
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -161,8 +161,3 @@ def make_bpe_udf(merges: list[tuple[str, str]]):
         return text.map(run)
 
     return bpe_pieces
-
-
-def bpe_pieces_col(text: Column, merges: list[tuple[str, str]]) -> Column:
-    """Column wrapper around :func:`make_bpe_udf`."""
-    return make_bpe_udf(merges)(text)

@@ -1,11 +1,11 @@
-"""Join strategy helpers: broadcast, salted (skew-defeating), LSH-blocked.
+"""Salted (skew-defeating) equi-join.
 
 The reference's every 'join' is a per-row HTTP call in a Python loop
 (pretreatment/DataExtract.py:22-63,127-198).  Here joins are explicit Spark
 joins with scale-aware physical strategies:
 
-- **broadcast** when the dictionary side fits on executors (aliases,
-  ontology);
+- **broadcast** (``F.broadcast`` at the call site) when the dictionary
+  side fits on executors (aliases, ontology);
 - **salted shuffle** when the probe side has Zipfian head keys (head
   entities: the reference serializes on them at DataExtract.py:222; at
   10^12 docs one hot key would stall a single reducer for hours) — the key
@@ -21,10 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from predicate_finder_spark.functions.hashing import md5_bucket
-
-
-def broadcast_join(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    return big.join(F.broadcast(small), on, how)
 
 
 def salted_join(

@@ -48,8 +48,8 @@ def corrupt_triples(
     back fewer than ``n_neg`` — by design, never mislabeled.
 
     ``with_source=True`` appends ``src_subj, src_obj`` (the uncorrupted
-    triple) so margin-loss trainers (operators/kg_embed.py) can pair each
-    negative with its positive."""
+    triple) so margin-loss trainers can pair each negative with its
+    positive."""
     base = triples.select("subj", "pred", "obj").distinct()
     ents = entities.select(F.col(entity_col).alias("_ent")).distinct()
     n_ent = ents.count()

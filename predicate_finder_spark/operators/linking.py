@@ -4,7 +4,7 @@ Replaces DBpedia Spotlight / Falcon REST calls (reference
 pretreatment/DataExtract.py:127-198) with dictionary joins:
 
 stage 1 (candidate generation): equi-join mentions ⋈ aliases on the
-  normalized surface — broadcast when the dictionary fits, salted shuffle
+  normalized surface — broadcast when the dictionary fits, shuffled
   otherwise; optional MinHash-LSH blocking for fuzzy surfaces;
 stage 2 (disambiguation): top-1 entity per span by link prior (plays the
   role of Spotlight's similarityScore, DataExtract.py:146), then
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from predicate_finder_spark.functions.hashing import char_shingles, lsh_bands, minhash_signature
 from predicate_finder_spark.functions.similarity import jaro_winkler_udf
-from predicate_finder_spark.operators.joins import salted_join
 
 
 def link_mentions(
@@ -26,15 +25,14 @@ def link_mentions(
     aliases: DataFrame,
     min_prior: float = 0.0,
     broadcast_dict: bool = True,
-    salt_buckets: int = 0,
     top1_per_surface: bool = False,
 ) -> DataFrame:
     """mentions ⋈ aliases -> linked mentions with (entity, prior).
 
     ``broadcast_dict=True`` is right whenever the alias dictionary fits in
     executor memory (DBpedia surface forms ~ a few GB: broadcastable on big
-    executors; else set ``salt_buckets`` > 0 for a salted shuffle join that
-    spreads Zipfian head surfaces over reducers).
+    executors; else a shuffled join, with AQE's skew-join split spreading
+    Zipfian head surfaces over reducers).
 
     ``top1_per_surface=True`` moves disambiguation to the DICTIONARY side:
     for exact-surface linking, the post-join per-span argmax (prior desc,
@@ -61,9 +59,6 @@ def link_mentions(
         )
     if broadcast_dict:
         joined = mentions.join(F.broadcast(dic), "surface", "inner")
-    elif salt_buckets > 1:
-        joined = salted_join(mentions, dic, ["surface"], buckets=salt_buckets,
-                             salt_source="url")
     else:
         joined = mentions.join(dic, "surface", "inner")
     return joined

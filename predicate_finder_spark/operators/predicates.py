@@ -9,13 +9,16 @@ guarded by the reference's "exactly one row" rule (DataExtract.py:120-123).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from predicate_finder_spark.functions.text import camel_split, uri_localname
 from predicate_finder_spark.operators.joins import salted_join
+
+# Largest KG (optimizer size estimate) whose side of the candidate join is
+# broadcast: a dictionary-side hash relation of a few hundred MB per
+# executor, well under the 8 GB broadcast limit.
+KG_BROADCAST_MAX_BYTES = 128 << 20
 
 
 def _plan_stat_bytes(df: DataFrame) -> int:
@@ -75,7 +78,6 @@ def candidate_predicates(
     blacklist: tuple[str, ...] = ("#", "subject", "wiki", "hypernym", "gender"),
     salt_buckets: int = 0,
     kg_prededuped: bool = False,
-    broadcast_kg: bool | None = None,
 ) -> DataFrame:
     """pairs ⋈ kg_triples in BOTH directions (entity-as-subject and
     entity-as-object, reference DataExtract.py:25-41), blacklist-filtered
@@ -146,17 +148,11 @@ def candidate_predicates(
         # it fits removes the probe's (__sid, __oid) exchange outright AND
         # keeps the probe partitioned by (url, sent_id), which the top-1
         # window downstream reuses — two exchanges of the widest data gone.
-        # ``broadcast_kg=None`` decides from the optimizer's size estimate
-        # against a configurable cap (default 128 MB — a dictionary-side
-        # hash relation of a few hundred MB per executor, well under the
-        # 8 GB broadcast limit); a DBpedia-scale KG blows the cap and falls
+        # The decision keys on the optimizer's size estimate against
+        # KG_BROADCAST_MAX_BYTES; a DBpedia-scale KG blows the cap and falls
         # back to the shuffled join, so the decision is scale-adaptive.
-        if broadcast_kg is None:
-            cap = int(
-                os.environ.get("SPARK_GRAFT_KG_BROADCAST_MAX", str(128 << 20))
-            )
-            broadcast_kg = _plan_stat_bytes(kg_triples) <= cap
-        build = F.broadcast(kg_enc) if broadcast_kg else kg_enc
+        fits = _plan_stat_bytes(kg_triples) <= KG_BROADCAST_MAX_BYTES
+        build = F.broadcast(kg_enc) if fits else kg_enc
         j = both.join(build, ["__sid", "__oid"], "inner")
     # no dropDuplicates here: duplicate candidates (the same pair mentioned
     # at two positions in a sentence) are legitimate evidence rows, and the

@@ -19,7 +19,6 @@ do not change.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -129,12 +128,3 @@ def make_syntax_path_udf(parse_fn=heuristic_parse):
         return pd.Series(out)
 
     return syntax_path_udf
-
-
-def add_syntax_path(pairs_df, tokens_col: str = "tokens",
-                    src_col: str = "start", dst_col: str = "start2") -> Column:
-    """Convenience: column expression adding the path between two mention
-    head positions (used as the matcher's 2nd channel, reference
-    mgnn/test.py:139-145)."""
-    udf = make_syntax_path_udf()
-    return udf(F.col(tokens_col), F.col(src_col), F.col(dst_col))

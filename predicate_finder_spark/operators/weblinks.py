@@ -64,9 +64,12 @@ def outlink_edges(
     # in the same select as the explode, ExtractGenerator computes it in
     # the Project ABOVE the Generate.  That placement is deliberate — a
     # per-page hoist (own select below the generator's) was tried and
-    # measured 3.4x SLOWER at 200k pages (host_graph 6.7 s -> 22.8 s):
-    # the explode drops link-less pages, so edge rows are FEWER than page
-    # rows on this corpus and per-edge evaluation does less total work.
+    # measured 3.4x SLOWER at 200k pages (host_graph 6.7 s -> 22.8 s).
+    # Row counts do not explain it: every synthetic page carries two
+    # distinct nav hrefs, so edge rows outnumber page rows about 2:1.  The
+    # cause is unverified — plans/r06 holds only per-edge plans, so it can
+    # show neither a codegen boundary nor a wider row (html carried through
+    # the hoisted Project) in the per-page variant.
     src = canonicalize_url(F.col(url_col)) if canonicalize else F.col(url_col)
     dst = F.explode(F.array_distinct(extract_outlinks(F.col(html_col))))
     edges = pages.select(src.alias("src"), dst.alias("__dst"))
@@ -101,8 +104,9 @@ def anchor_texts(
     # src canonicalization runs per exploded <a> element (ExtractGenerator
     # keeps it in the Project above the Generate).  Deliberate: a per-page
     # hoist below the generator was tried and measured ~1.8x slower at
-    # 200k pages (1.43 s -> 2.60 s) — the explode drops pages without <a>
-    # elements, so element rows are fewer than page rows on this corpus.
+    # 200k pages (1.43 s -> 2.60 s), although every page has at least two
+    # <a> elements, so element rows outnumber page rows.  The cause is
+    # unverified (see outlink_edges).
     src = canonicalize_url(F.col(url_col)) if canonicalize else F.col(url_col)
     exploded = pages.select(src.alias("src"), el)
     dst = F.regexp_extract("__el", _HREF_PATTERN, 1)

@@ -66,15 +66,9 @@ def get_spark(
         # (__sid, __oid) / block keys then skip both sides' sorts.  The
         # per-partition build is bounded by the shuffle partition sizing
         # (AQE advisory size), and AQE's skew-join split stays on as the
-        # OOM backstop.  SPARK_GRAFT_PREFER_SMJ=1 restores sort-merge.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            "true" if os.environ.get("SPARK_GRAFT_PREFER_SMJ") == "1" else "false",
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCAL_MAP", "256m"),
-        )
+        # OOM backstop.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
         # Arrow transfer for every pandas UDF / toPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bigger Arrow batches amortize per-batch UDF overhead and feed the

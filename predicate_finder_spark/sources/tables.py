@@ -241,16 +241,3 @@ def checkpoint_stage(
         m["metrics"]["write_sec"] = round(time.time() - t0, 3)
         _write_manifest_atomic(path, m)
     return read_stage(spark, path)
-
-
-# ---------------------------------------------------------------------------
-# driver testdata convenience loaders
-# ---------------------------------------------------------------------------
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-def load_testdata(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES):
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}

@@ -3,6 +3,7 @@ vs its oracle_sql() via DuckDB at sf0.001 (order-insensitive compare)."""
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 
@@ -64,6 +65,21 @@ def test_query_matches_oracle(spark, name):
 
 def test_oracle_keys_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_q12_documents_doc_id_unique():
+    """q12_idf counts df straight from the per-document explode, which is
+    exact only while documents.doc_id is the table's unique row key: check
+    that key at every scale factor present next to SF_DIR."""
+    sf_dirs = sorted(glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*")))
+    if not sf_dirs:
+        pytest.skip("no sf* testdata directories")
+    for sf_dir in sf_dirs:
+        docs = os.path.join(sf_dir, "documents.parquet")
+        n, n_ids = duckdb.sql(
+            f"SELECT count(*), count(DISTINCT doc_id) FROM read_parquet('{docs}')"
+        ).fetchone()
+        assert n == n_ids, f"{docs}: {n} rows, {n_ids} distinct doc_id"
 
 
 def test_q56_approx_quantiles_tolerance(spark):
