@@ -20,10 +20,11 @@ for Iceberg snapshot appends, same rationale as sources/tables.py):
     state_dir/batches/<batch_id>/urls/      urls processed by this delta
     state_dir/batches/<batch_id>/_batch.json   atomic commit marker
 
-A batch exists iff its ``_batch.json`` marker committed (tmp + rename);
-a crash mid-batch leaves no marker, the partial dirs are ignored, and
-the next run reprocesses that delta — idempotent by construction, no
-cleanup step.  Readers take the union of committed batches only.
+A batch exists iff its ``_batch.json`` marker committed (through
+``sources.tables.commit_json``); a crash mid-batch leaves no marker, the
+partial dirs are ignored, and the next run reprocesses that delta —
+idempotent by construction, no cleanup step.  Readers take the union of
+committed batches only.
 
 Scale shape at 10^12 docs: delta detection is ONE anti-join of the
 snapshot against the processed-url table (shuffle on url, AQE-handled
@@ -37,16 +38,16 @@ runs.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from predicate_finder_spark.config import PipelineConfig
 from predicate_finder_spark.plans.pipeline import extract_triples
-from predicate_finder_spark.sources.tables import read_manifest, write_stage
+from predicate_finder_spark.sources.tables import commit_json, read_json, write_stage
 
 _BATCH_MARKER = "_batch.json"
 
@@ -55,29 +56,34 @@ def _batches_dir(state_dir: str) -> str:
     return os.path.join(state_dir, "batches")
 
 
-def committed_batches(state_dir: str, include_replaced: bool = False) -> list[str]:
-    """Batch ids with a committed marker, in commit order (ties: name).
+def committed_batches(state_dir: str) -> list[str]:
+    """Visible committed batch ids, in commit order (ties: name).
 
     Batches listed in any committed marker's ``replaces`` field (written
-    by :func:`compact_batches`) are hidden unless ``include_replaced`` —
-    the compacted batch IS their content, Iceberg-snapshot style."""
+    by :func:`compact_batches`) are hidden — the compacted batch IS their
+    content, Iceberg-snapshot style."""
     bd = _batches_dir(state_dir)
     if not os.path.isdir(bd):
         return []
     out, replaced = [], set()
     for name in os.listdir(bd):
-        marker = os.path.join(bd, name, _BATCH_MARKER)
-        try:
-            with open(marker) as f:
-                meta = json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
+        meta = read_json(os.path.join(bd, name, _BATCH_MARKER))
+        if meta is None:
             continue  # torn or absent marker: batch never happened
         out.append((meta.get("committed_at", 0.0), name))
         replaced.update(meta.get("replaces", []))
-    names = [name for _, name in sorted(out)]
-    if include_replaced:
-        return names
-    return [n for n in names if n not in replaced]
+    return [name for _, name in sorted(out) if name not in replaced]
+
+
+def _union_batches(
+    spark: SparkSession, state_dir: str, names: list[str], table: str
+) -> DataFrame | None:
+    """Union of ``<batch>/<table>`` over the named batches, in order, or
+    None when none of them carries the table."""
+    bd = _batches_dir(state_dir)
+    paths = [os.path.join(bd, n, table) for n in names]
+    frames = [spark.read.parquet(p) for p in paths if os.path.isdir(p)]
+    return reduce(DataFrame.unionByName, frames) if frames else None
 
 
 def incremental_state(
@@ -100,36 +106,17 @@ def incremental_state(
                 f"(committed: {names}) — it may have been compacted away"
             )
         names = names[: names.index(as_of) + 1]
-    if not names:
-        return None, None
-    bd = _batches_dir(state_dir)
-    triples = [spark.read.parquet(os.path.join(bd, n, "triples")) for n in names]
-    urls = [spark.read.parquet(os.path.join(bd, n, "urls")) for n in names]
-    t = triples[0]
-    for x in triples[1:]:
-        t = t.unionByName(x)
-    u = urls[0]
-    for x in urls[1:]:
-        u = u.unionByName(x)
-    return t, u
+    return (
+        _union_batches(spark, state_dir, names, "triples"),
+        _union_batches(spark, state_dir, names, "urls"),
+    )
 
 
 def seen_content_hashes(spark: SparkSession, state_dir: str) -> DataFrame | None:
     """Union of committed batches' content-hash tables (``hashes/`` dirs),
     or None when no committed batch carries one.  Batches committed before
     content-dedup existed (or with it off) simply contribute nothing."""
-    bd = _batches_dir(state_dir)
-    frames = []
-    for name in committed_batches(state_dir):
-        p = os.path.join(bd, name, "hashes")
-        if os.path.isdir(p):
-            frames.append(spark.read.parquet(p))
-    if not frames:
-        return None
-    out = frames[0]
-    for x in frames[1:]:
-        out = out.unionByName(x)
-    return out
+    return _union_batches(spark, state_dir, committed_batches(state_dir), "hashes")
 
 
 def extract_triples_incremental(
@@ -206,9 +193,9 @@ def extract_triples_incremental(
         else _empty_like(spark)
     )
     ch = cfg.config_hash()
-    # commit order: data tables first, marker last (tmp + rename) — the
+    # commit order: data tables first, marker last (commit_json) — the
     # batch becomes visible atomically with both tables in place
-    write_stage(tri, os.path.join(batch_dir, "triples"), "inc_triples", ch)
+    m = write_stage(tri, os.path.join(batch_dir, "triples"), "inc_triples", ch)
     write_stage(
         delta.select("url").distinct(), os.path.join(batch_dir, "urls"),
         "inc_urls", ch,
@@ -218,18 +205,12 @@ def extract_triples_incremental(
             delta.select(F.md5("text").alias("_h")).distinct(),
             os.path.join(batch_dir, "hashes"), "inc_hashes", ch,
         )
-    marker = {
+    commit_json(os.path.join(batch_dir, _BATCH_MARKER), {
         "batch_id": batch_id,
         "config_hash": ch,
         "committed_at": time.time(),
-        "triples_rows": (read_manifest(os.path.join(batch_dir, "triples")) or {}).get(
-            "rows"
-        ),
-    }
-    tmp = os.path.join(batch_dir, _BATCH_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(marker, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(batch_dir, _BATCH_MARKER))
+        "triples_rows": m["rows"],
+    })
 
     cum, _ = incremental_state(spark, state_dir)
     return cum
@@ -269,29 +250,18 @@ def compact_batches(
     triples, urls = incremental_state(spark, state_dir)
     new_id = "compact-" + hashlib.md5("|".join(names).encode()).hexdigest()[:12]
     batch_dir = os.path.join(bd, new_id)
-    write_stage(triples, os.path.join(batch_dir, "triples"), "inc_triples", "compact")
+    m = write_stage(triples, os.path.join(batch_dir, "triples"), "inc_triples", "compact")
     write_stage(urls, os.path.join(batch_dir, "urls"), "inc_urls", "compact")
-    hash_frames = [
-        spark.read.parquet(os.path.join(bd, n, "hashes"))
-        for n in names
-        if os.path.isdir(os.path.join(bd, n, "hashes"))
-    ]
-    if hash_frames:
-        h = hash_frames[0]
-        for x in hash_frames[1:]:
-            h = h.unionByName(x)
+    h = _union_batches(spark, state_dir, names, "hashes")
+    if h is not None:
         write_stage(h.distinct(), os.path.join(batch_dir, "hashes"),
                     "inc_hashes", "compact")
-    marker = {
+    commit_json(os.path.join(batch_dir, _BATCH_MARKER), {
         "batch_id": new_id,
         "committed_at": time.time(),
         "replaces": names,
-        "triples_rows": (read_manifest(os.path.join(batch_dir, "triples")) or {}).get("rows"),
-    }
-    tmp = os.path.join(batch_dir, _BATCH_MARKER + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(marker, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(batch_dir, _BATCH_MARKER))
+        "triples_rows": m["rows"],
+    })
     if remove_old:
         import shutil
 

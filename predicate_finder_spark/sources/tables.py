@@ -6,6 +6,9 @@ north_rule requirements implemented here:
   stage name, config hash, schema, row count, and per-file row counts.  A
   rerun with the same config hash skips the stage (idempotent resume); a
   killed run leaves no half-visible stage (temp dir + rename).
+- **one commit protocol**: the package's only commit point.  Stage dirs
+  publish by rename; manifests and ``plans/incremental`` batch markers by
+  :func:`commit_json`, read back by :func:`read_json` (torn = absent).
 - **Iceberg seam**: when an Iceberg catalog is configured on the session
   (spark.sql.catalog.*), ``TableFormat.iceberg`` writes via writeTo();
   the sandbox has no Iceberg jar, so the parquet+manifest layout is the
@@ -30,28 +33,27 @@ def manifest_path(path: str) -> str:
     return os.path.join(path, MANIFEST)
 
 
-def read_manifest(path: str) -> dict | None:
-    mp = manifest_path(path)
-    if not os.path.exists(mp):
-        return None
-    try:
-        with open(mp) as f:
-            return json.load(f)
-    except (json.JSONDecodeError, OSError):
-        # a torn/unreadable manifest means "stage not committed": resume
-        # recomputes the stage instead of crashing on every later run
-        return None
-
-
-def _write_manifest_atomic(path: str, manifest: dict) -> None:
-    """All manifest writes go through tmp + os.replace so a crash mid-write
-    can never leave a truncated _manifest.json (which would permanently
-    break resume for the stage)."""
-    mp = manifest_path(path)
-    tmp = mp + ".tmp"
+def commit_json(file_path: str, obj: dict) -> None:
+    """Publish ``obj`` at ``file_path`` atomically (tmp file + os.replace):
+    a crash mid-write never leaves a truncated marker or manifest."""
+    tmp = file_path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, mp)
+        json.dump(obj, f, indent=2, sort_keys=True)
+    os.replace(tmp, file_path)
+
+
+def read_json(file_path: str) -> dict | None:
+    """The committed JSON at ``file_path``, or None when missing or torn:
+    "never committed", so resume redoes the work instead of crashing."""
+    try:
+        with open(file_path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def read_manifest(path: str) -> dict | None:
+    return read_json(manifest_path(path))
 
 
 def stage_complete(
@@ -131,6 +133,7 @@ def write_stage(
     Iceberg partition transforms): a reader filtering on those columns gets
     partition pruning — only matching directories are listed and scanned.
     """
+    t0 = time.time()
     tmp = path + ".__tmp__"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
@@ -166,10 +169,9 @@ def write_stage(
         "partitions": partitions,
         "inputs": inputs or [],
         "input_fingerprint": input_fp,
-        "metrics": metrics or {},
+        "metrics": {**(metrics or {}), "write_sec": round(time.time() - t0, 3)},
     }
-    with open(os.path.join(tmp, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
+    commit_json(manifest_path(tmp), manifest)
     if os.path.exists(path):
         shutil.rmtree(path)
     os.rename(tmp, path)
@@ -229,15 +231,8 @@ def checkpoint_stage(
     t0 = time.time()
     df = df_fn()
     plan_sec = round(time.time() - t0, 3)
-    t0 = time.time()
     write_stage(
         df, path, stage, config_hash, inputs=inputs, input_fp=fp,
-        metrics={"plan_sec": plan_sec, "write_sec": None},  # patched below
+        metrics={"plan_sec": plan_sec},
     )
-    # record the measured write wall in the committed manifest (metrics are
-    # advisory; the atomic rename already happened)
-    m = read_manifest(path)
-    if m is not None:
-        m["metrics"]["write_sec"] = round(time.time() - t0, 3)
-        _write_manifest_atomic(path, m)
     return read_stage(spark, path)

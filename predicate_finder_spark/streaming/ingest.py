@@ -1,10 +1,12 @@
-"""Incremental ingest: new page snapshots -> streaming extraction -> sink.
+"""Incremental ingest: new page snapshots -> streaming extraction ->
+incremental state.
 
 The reference is batch-only (SURVEY.md §2.10); this is the incremental
 analog the north_star sketches: ``readStream`` on the pages table ->
 watermarked event-time windows -> the same stateless extraction UDFs ->
-``foreachBatch`` append.  Every pipeline operator is per-document or a join
-against static dictionaries, so streaming needs no custom state.
+``foreachBatch`` commits to an incremental state dir (``plans/incremental``,
+read with ``incremental_state``).  Every pipeline operator is per-document
+or a join against static dictionaries, so streaming needs no custom state.
 """
 
 from __future__ import annotations
@@ -58,46 +60,40 @@ def streaming_triples(
     kg_triples: DataFrame,
     ontology: DataFrame,
     embeddings: DataFrame,
-    out_path: str,
+    state_dir: str,
+    checkpoint_dir: str,
+    scorer_dicts: tuple[dict, dict],
     cfg=None,
     max_files_per_trigger: int = 4,
-    checkpoint_dir: str | None = None,
 ) -> None:
-    """Incremental triple extraction: stream page files -> per-microbatch
-    run the SAME batch operators -> append to a parquet triples sink.
+    """Stream page files and commit micro-batch ``epoch_id`` as batch
+    ``epoch-<epoch_id>`` of the incremental state dir ``state_dir``
+    (``plans.incremental.extract_triples_incremental``); read the
+    cumulative triples with ``incremental_state``.
 
-    foreachBatch gives exactly-once-per-batch semantics against the file
-    source's checkpointed offsets; because every operator is a pure
-    function of its batch plus static dictionaries, the union of streamed
-    batches equals the batch run over the whole corpus (tested).
-
-    ``checkpoint_dir`` persists source offsets: a later invocation with the
-    same checkpoint processes only files added since — the incremental
-    resume path.  Without it every invocation reprocesses (and re-appends)
-    the whole directory.
+    ``checkpoint_dir`` keeps epoch ids stable across restarts: a later run
+    processes only files added since, and an epoch Spark replays (crash
+    after the batch commit, before the offset commit) is a committed no-op.
+    ``scorer_dicts`` pins corpus-level scorer state, as in
+    ``extract_triples_incremental``, so the cumulative state equals the
+    batch run over the whole corpus (tested).
     """
-    from predicate_finder_spark.operators.extract import extract_pages
-    from predicate_finder_spark.operators.mentions import explode_sentences
-    from predicate_finder_spark.operators.scoring import build_idf
-    from predicate_finder_spark.plans.pipeline import extract_triples
-
-    # IDF is corpus-level state: build it ONCE from the static snapshot and
-    # hold it fixed across microbatches (per-batch IDF would drift scores)
-    idf = build_idf(explode_sentences(extract_pages(spark.read.parquet(pages_path)))).cache()
-    idf.count()
-
-    stream = read_page_stream(spark, pages_path, max_files_per_trigger)
+    from predicate_finder_spark.plans.incremental import extract_triples_incremental
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        tri = extract_triples(
-            spark, batch_df, aliases, kg_triples, ontology, embeddings, cfg, idf=idf
+        extract_triples_incremental(
+            spark, batch_df, aliases, kg_triples, ontology, embeddings,
+            state_dir, batch_id=f"epoch-{epoch_id:08d}", cfg=cfg,
+            scorer_dicts=scorer_dicts,
         )
-        tri.write.mode("append").parquet(out_path)
 
-    writer = stream.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
+    q = (
+        read_page_stream(spark, pages_path, max_files_per_trigger)
+        .writeStream.foreachBatch(process)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
     try:
         q.awaitTermination()
     finally:

@@ -200,7 +200,9 @@ def test_time_travel_and_compaction(spark, corpus, dicts, tmp_path_factory):
     new_id = compact_batches(spark, state)
     assert new_id is not None
     assert committed_batches(state) == [new_id]
-    assert committed_batches(state, include_replaced=True) == ["b1", "b2", new_id]
+    # replaced batches are hidden, not deleted: dirs and markers stay on disk
+    for b in ("b1", "b2"):
+        assert os.path.exists(os.path.join(state, "batches", b, "_batch.json"))
     t2, u2 = incremental_state(spark, state)
     assert _sorted_triples(t2) == full
     assert u2.count() == pages.select("url").distinct().count()

@@ -1,33 +1,82 @@
-"""Incremental ingest: streamed triple extraction == batch extraction;
-rerank scorer strategy end-to-end."""
+"""Incremental ingest: streamed triple extraction == batch extraction and
+survives an epoch replay; rerank scorer strategy end-to-end."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from predicate_finder_spark.config import PipelineConfig
 from predicate_finder_spark.operators.evaluate import precision_recall
-from predicate_finder_spark.plans.pipeline import extract_triples
+from predicate_finder_spark.operators.extract import extract_pages
+from predicate_finder_spark.operators.mentions import explode_sentences
+from predicate_finder_spark.operators.scoring import build_idf
+from predicate_finder_spark.plans.incremental import committed_batches, incremental_state
+from predicate_finder_spark.plans.pipeline import build_scorer_dicts, extract_triples
 from predicate_finder_spark.streaming.ingest import streaming_triples
 from predicate_finder_spark.synth import synth_corpus
 
 
-def test_streaming_triples_equal_batch(spark, tmp_path):
+@pytest.fixture(scope="module")
+def stream_input(spark, tmp_path_factory):
+    """A 60-page corpus as 4 parquet files, plus its pinned scorer state."""
     t = synth_corpus(spark, 60)
-    pages_path = str(tmp_path / "pages")
-    out_path = str(tmp_path / "triples_stream")
+    pages_path = str(tmp_path_factory.mktemp("stream_input") / "pages")
     t["pages"].repartition(4).write.parquet(pages_path)
+    idf = build_idf(explode_sentences(extract_pages(spark.read.parquet(pages_path))))
+    d = build_scorer_dicts(idf, t["kg_triples"], t["ontology"], t["embeddings"])
+    return t, pages_path, d
 
+
+def _stream(spark, stream_input, state_dir, checkpoint_dir):
+    t, pages_path, d = stream_input
     streaming_triples(
         spark, pages_path, t["aliases"], t["kg_triples"], t["ontology"],
-        t["embeddings"], out_path, max_files_per_trigger=2,
+        t["embeddings"], state_dir, checkpoint_dir, d, max_files_per_trigger=2,
     )
-    streamed = spark.read.parquet(out_path).select("url", "subj", "pred", "obj")
+
+
+def _sorted_triples(df):
+    return sorted(
+        (r["url"], r["subj"], r["pred"], r["obj"], round(r["score"], 9))
+        for r in df.collect()
+    )
+
+
+def test_streaming_triples_equal_batch(spark, stream_input, tmp_path):
+    state = str(tmp_path / "state")
+    _stream(spark, stream_input, state, str(tmp_path / "cp"))
+    streamed, _ = incremental_state(spark, state)
+    t, pages_path, d = stream_input
     batch = extract_triples(
         spark, spark.read.parquet(pages_path), t["aliases"], t["kg_triples"],
-        t["ontology"], t["embeddings"],
-    ).select("url", "subj", "pred", "obj")
-    a = {tuple(r) for r in streamed.collect()}
-    b = {tuple(r) for r in batch.collect()}
-    assert a == b and len(a) > 0
+        t["ontology"], t["embeddings"], scorer_dicts=d,
+    )
+    a = _sorted_triples(streamed)
+    assert a == _sorted_triples(batch) and len(a) > 0
+
+
+def test_streaming_replay_is_exactly_once(spark, stream_input, tmp_path):
+    """A crash after an epoch's batch commit and before Spark's offset
+    commit (simulated by deleting the last ``commits/<n>`` file) makes the
+    restart replay that epoch; the cumulative triples must not change."""
+    state, cp = str(tmp_path / "state"), str(tmp_path / "cp")
+    _stream(spark, stream_input, state, cp)
+    before = _sorted_triples(incremental_state(spark, state)[0])
+    commits = os.path.join(cp, "commits")
+    epochs = sorted(int(n) for n in os.listdir(commits) if n.isdigit())
+    assert len(epochs) >= 2 and len(before) > 0
+    last = os.path.join(commits, str(epochs[-1]))
+    os.remove(last)
+    crc = os.path.join(commits, f".{epochs[-1]}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+    _stream(spark, stream_input, state, cp)
+    assert os.path.exists(last)  # the epoch really was replayed
+    assert _sorted_triples(incremental_state(spark, state)[0]) == before
+    assert committed_batches(state) == [f"epoch-{e:08d}" for e in epochs]
 
 
 def test_rerank_scorer_strategy(spark):
