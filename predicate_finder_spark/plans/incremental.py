@@ -23,12 +23,23 @@ for Iceberg snapshot appends, same rationale as sources/tables.py):
 A batch exists iff its ``_batch.json`` marker committed (through
 ``sources.tables.commit_json``); a crash mid-batch leaves no marker, the
 partial dirs are ignored, and the next run reprocesses that delta —
-idempotent by construction, no cleanup step.  Readers take the union of
-committed batches only.
+idempotent by construction, no cleanup step.
+
+Readers see committed batches only, as ONE parquet scan per state table:
+``spark.read.schema(<manifest schema>).parquet(<one dir per batch>)``.
+``write_stage`` records every table's schema in its ``_manifest.json``, so
+no read runs a schema-inference job, and a state read costs no Spark job
+at all while the scan names at most 32 paths
+(``spark.sql.sources.parallelPartitionDiscovery.threshold``; above it
+Spark lists the directories with one parallel job).  Passing directories,
+not the manifests' file lists, keeps the count at one path per batch;
+:func:`compact_batches` folds the batches back into one.
 
 Scale shape at 10^12 docs: delta detection is ONE anti-join of the
 snapshot against the processed-url table (shuffle on url, AQE-handled
-skew); everything downstream touches only the delta.  The seen-url side
+skew), run once per commit: its urls are written first and the
+extraction input is the snapshot semi-joined to them, so everything
+downstream touches only the delta.  The seen-url side
 grows monotonically but stores one short string per page — at Common
 Crawl scale it is the same order as a single crawl's url list, and the
 anti-join is the standard "new-crawl minus seen" step every crawler
@@ -38,16 +49,20 @@ runs.
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import shutil
 import time
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from predicate_finder_spark.config import PipelineConfig
 from predicate_finder_spark.plans.pipeline import extract_triples
-from predicate_finder_spark.sources.tables import commit_json, read_json, write_stage
+from predicate_finder_spark.sources.tables import (
+    commit_json, read_json, read_manifest, write_stage,
+)
 
 _BATCH_MARKER = "_batch.json"
 
@@ -78,12 +93,33 @@ def committed_batches(state_dir: str) -> list[str]:
 def _union_batches(
     spark: SparkSession, state_dir: str, names: list[str], table: str
 ) -> DataFrame | None:
-    """Union of ``<batch>/<table>`` over the named batches, in order, or
-    None when none of them carries the table."""
+    """``<batch>/<table>`` over the named batches as one schema-pinned
+    parquet scan, or None when none of them carries the table.
+
+    A batch without the table directory does not carry it; one whose
+    table has no readable manifest is corrupt and raises.  Every batch's
+    manifest schema must match the first one's up to nullability (file
+    sources read every column as nullable); a batch that differs raises,
+    named."""
     bd = _batches_dir(state_dir)
-    paths = [os.path.join(bd, n, table) for n in names]
-    frames = [spark.read.parquet(p) for p in paths if os.path.isdir(p)]
-    return reduce(DataFrame.unionByName, frames) if frames else None
+    dirs, schema, first = [], None, None
+    for n in names:
+        path = os.path.join(bd, n, table)
+        if not os.path.isdir(path):
+            continue
+        m = read_manifest(path)
+        if m is None or "schema" not in m:
+            raise ValueError(f"batch {n!r}: {table}/ has no readable manifest")
+        s = StructType.fromJson(json.loads(m["schema"]))
+        if schema is None:
+            schema, first = s, n
+        elif s.simpleString() != schema.simpleString():
+            raise ValueError(
+                f"batch {n!r}: {table} schema {s.simpleString()} differs from "
+                f"{schema.simpleString()} of batch {first!r}"
+            )
+        dirs.append(path)
+    return spark.read.schema(schema).parquet(*dirs) if dirs else None
 
 
 def incremental_state(
@@ -162,13 +198,27 @@ def extract_triples_incremental(
     if os.path.exists(os.path.join(batch_dir, _BATCH_MARKER)):
         return prior_triples  # this batch already committed
 
-    delta = (
+    ch = cfg.config_hash()
+    # commit order: the delta's urls first — the commit's one anti-join
+    # against the seen urls, and its emptiness check — then the other
+    # tables, then the marker (commit_json): the batch becomes visible
+    # atomically with every table in place
+    unseen = (
         pages.join(seen_urls.select("url"), "url", "left_anti")
         if seen_urls is not None else pages
     )
-    # dimension-bounded existence probe (limit 1), not a full count
-    if delta.limit(1).count() == 0:
+    urls = write_stage(
+        unseen.select("url").distinct(), os.path.join(batch_dir, "urls"),
+        "inc_urls", ch,
+    )
+    if urls["rows"] == 0:
+        shutil.rmtree(batch_dir, ignore_errors=True)  # no batch to commit
         return prior_triples if prior_triples is not None else _empty_like(spark)
+    # the delta's pages: the snapshot semi-joined to the written url table,
+    # which is bounded by the delta, not by the state
+    delta = pages.join(
+        _union_batches(spark, state_dir, [batch_id], "urls"), "url", "left_semi"
+    )
 
     extract_input = delta
     if dedup_content:
@@ -182,7 +232,7 @@ def extract_triples_incremental(
             hashed, id_col="url", text_col="text"
         ).drop("_h")
         if extract_input.limit(1).count() == 0:
-            extract_input = None  # all mirrors; still commit urls below
+            extract_input = None  # all mirrors; the urls still commit
 
     tri = (
         extract_triples(
@@ -192,14 +242,7 @@ def extract_triples_incremental(
         if extract_input is not None
         else _empty_like(spark)
     )
-    ch = cfg.config_hash()
-    # commit order: data tables first, marker last (commit_json) — the
-    # batch becomes visible atomically with both tables in place
     m = write_stage(tri, os.path.join(batch_dir, "triples"), "inc_triples", ch)
-    write_stage(
-        delta.select("url").distinct(), os.path.join(batch_dir, "urls"),
-        "inc_urls", ch,
-    )
     if dedup_content:
         write_stage(
             delta.select(F.md5("text").alias("_h")).distinct(),
@@ -231,7 +274,8 @@ def compact_batches(
     the Iceberg snapshot-compaction analog for the append-only state.
 
     A long-running ingest accumulates thousands of small batch dirs; the
-    cumulative read unions all of them every run.  Compaction rewrites
+    cumulative scan lists all of them on every read, with one Spark
+    listing job once they pass 32.  Compaction rewrites
     the union (triples, urls, and content hashes where present) as a
     single batch whose marker lists the source batches in ``replaces``;
     readers hide replaced batches, so visibility flips ATOMICALLY with
@@ -263,8 +307,6 @@ def compact_batches(
         "triples_rows": m["rows"],
     })
     if remove_old:
-        import shutil
-
         for n in names:
             shutil.rmtree(os.path.join(bd, n), ignore_errors=True)
     return new_id

@@ -6,17 +6,21 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 
 import pytest
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from predicate_finder_spark.operators.extract import extract_pages
 from predicate_finder_spark.operators.mentions import explode_sentences
 from predicate_finder_spark.operators.scoring import build_idf
 from predicate_finder_spark.plans.incremental import (
+    compact_batches,
     committed_batches,
     extract_triples_incremental,
     incremental_state,
+    seen_content_hashes,
 )
 from predicate_finder_spark.plans.pipeline import build_scorer_dicts, extract_triples
 
@@ -117,8 +121,6 @@ def test_content_dedup_skips_crawl_mirrors(spark, corpus, dicts, tmp_path_factor
     """dedup_content=True: a later batch whose pages carry already-seen
     TEXT at new urls adds zero triples, its urls still commit as seen,
     and the hashes state table accumulates."""
-    from predicate_finder_spark.plans.incremental import seen_content_hashes
-
     idf_df, d = dicts
     state = str(tmp_path_factory.mktemp("inc_mirror"))
     pages = corpus["pages"]
@@ -172,8 +174,6 @@ def test_time_travel_and_compaction(spark, corpus, dicts, tmp_path_factory):
     """as_of reads reproduce historical state; compaction folds batches
     atomically with identical cumulative content; replaced batches are
     hidden and no longer addressable."""
-    from predicate_finder_spark.plans.incremental import compact_batches
-
     idf_df, d = dicts
     state = str(tmp_path_factory.mktemp("inc_compact"))
     pages = corpus["pages"]
@@ -217,3 +217,123 @@ def test_time_travel_and_compaction(spark, corpus, dicts, tmp_path_factory):
     # compacting a single visible batch is a no-op
     assert compact_batches(spark, state) is None
     assert committed_batches(state) == [new_id]
+
+
+def _jobs(spark, group, fn):
+    """Number of Spark jobs ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_cost_is_flat_in_batch_count(spark, corpus, dicts, tmp_path_factory):
+    """Same-size commits at batch 2 and batch 10 run the same number of
+    jobs, and reading the state of 10 batches runs none: a commit costs in
+    proportion to its delta, not to the committed state."""
+    path = str(tmp_path_factory.mktemp("inc_deltas") / "pages")
+    corpus["pages"].withColumn(
+        "delta", ((F.row_number().over(Window.orderBy("url")) - 1) % 10).cast("int")
+    ).write.partitionBy("delta").parquet(path)
+    state = str(tmp_path_factory.mktemp("inc_flat"))
+    jobs = []
+    for k in range(10):
+        pages = spark.read.parquet(f"{path}/delta={k}")
+        jobs.append(_jobs(spark, f"inc_flat/commit{k}", lambda: _run_inc(
+            spark, corpus, dicts, pages, state, f"b{k:02d}")))
+    assert len(committed_batches(state)) == 10
+    assert jobs[1] == jobs[9], jobs
+    assert _jobs(spark, "inc_flat/state", lambda: incremental_state(spark, state)) == 0
+
+
+def _per_dir_union(spark, state, names, table):
+    """The reference reader: one inferred ``spark.read.parquet`` per batch
+    directory, unioned by name."""
+    frames = [
+        spark.read.parquet(p)
+        for p in (os.path.join(state, "batches", n, table) for n in names)
+        if os.path.isdir(p)
+    ]
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def mirror_state(spark, corpus, dicts, tmp_path_factory):
+    """Three content-dedup batches: b1 ~60% of the pages, b2 mirrors of
+    b1 (all mirrors, so its triples are the empty ``_empty_like`` table),
+    b3 the full snapshot (its delta is the other ~40%)."""
+    idf_df, d = dicts
+    state = str(tmp_path_factory.mktemp("inc_mirror_state"))
+    pages = corpus["pages"]
+    first = pages.filter(F.crc32(F.col("url")) % 5 < 3)
+    mirrors = first.withColumn("url", F.concat(F.lit("http://mirror.example/"), F.col("url")))
+    for bid, p in (("b1", first), ("b2", mirrors), ("b3", pages)):
+        extract_triples_incremental(
+            spark, p, corpus["aliases"], corpus["kg_triples"],
+            corpus["ontology"], corpus["embeddings"],
+            state_dir=state, batch_id=bid, idf=idf_df, scorer_dicts=d,
+            dedup_content=True,
+        )
+    assert committed_batches(state) == ["b1", "b2", "b3"]
+    return state
+
+
+def test_pinned_reader_equals_per_dir_union(spark, mirror_state, tmp_path):
+    """The one schema-pinned scan returns the rows of a per-directory
+    inferred read unioned by name: full state, an ``as_of`` read, and the
+    state after compaction."""
+    state = str(tmp_path / "state")
+    shutil.copytree(mirror_state, state)
+    names = ["b1", "b2", "b3"]
+    assert spark.read.parquet(f"{state}/batches/b2/triples").count() == 0
+
+    tri, urls = incremental_state(spark, state)
+    want = {
+        t: _rows(_per_dir_union(spark, state, names, t))
+        for t in ("triples", "urls", "hashes")
+    }
+    assert want["triples"] and _rows(tri) == want["triples"]
+    assert _rows(urls) == want["urls"]
+    assert _rows(seen_content_hashes(spark, state)) == want["hashes"]
+
+    tri_b2, urls_b2 = incremental_state(spark, state, as_of="b2")
+    assert _rows(tri_b2) == _rows(_per_dir_union(spark, state, names[:2], "triples"))
+    assert _rows(urls_b2) == _rows(_per_dir_union(spark, state, names[:2], "urls"))
+
+    new_id = compact_batches(spark, state)
+    tri_c, urls_c = incremental_state(spark, state)
+    for table, got in (
+        ("triples", tri_c), ("urls", urls_c), ("hashes", seen_content_hashes(spark, state)),
+    ):
+        assert _rows(got) == _rows(_per_dir_union(spark, state, [new_id], table))
+        assert _rows(got) == sorted(set(want[table])), table
+
+
+def test_schema_mismatch_or_missing_manifest_names_the_batch(spark, mirror_state, tmp_path):
+    """A batch whose table manifest carries another column set, or no
+    manifest at all, raises at read time and names that batch."""
+    state = str(tmp_path / "state")
+    shutil.copytree(mirror_state, state)
+    mpath = os.path.join(state, "batches", "b3", "triples", "_manifest.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    schema = json.loads(m["schema"])
+    schema["fields"] = [c for c in schema["fields"] if c["name"] != "score"]
+    m["schema"] = json.dumps(schema)
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="batch 'b3': triples schema"):
+        incremental_state(spark, state)
+
+    os.remove(os.path.join(state, "batches", "b2", "hashes", "_manifest.json"))
+    with pytest.raises(ValueError, match="batch 'b2': hashes/ has no readable manifest"):
+        seen_content_hashes(spark, state)
