@@ -14,31 +14,24 @@ import os
 import sys
 import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from harness import CORPUS_TABLES, idf_table, start_spark
+
+from predicate_finder_spark.synth import synth_corpus
 
 
 def main() -> None:
     n = int(sys.argv[1])
     out = sys.argv[2]
-    from predicate_finder_spark.operators.extract import extract_pages
-    from predicate_finder_spark.operators.mentions import explode_sentences
-    from predicate_finder_spark.operators.scoring import build_idf
-    from predicate_finder_spark.session import get_spark
-    from predicate_finder_spark.synth import synth_corpus
-
     t0 = time.time()
-    spark = get_spark(app_name="pfs-prep-corpus")
+    spark, _ = start_spark("pfs-prep-corpus")
     t = synth_corpus(spark, n)
-    for name in ("pages", "aliases", "kg_triples", "ontology", "embeddings",
-                 "gold_triples"):
+    for name in CORPUS_TABLES:
+        if name == "idf":
+            # IDF is corpus-level state (pipeline docstring: incremental
+            # runs MUST pass a fixed table), so it belongs with the corpus
+            # snapshot, built over the pages as stored
+            t["idf"] = idf_table(spark.read.parquet(os.path.join(out, "pages")))
         t[name].write.mode("overwrite").parquet(os.path.join(out, name))
-    # IDF is corpus-level state (pipeline docstring: incremental runs MUST
-    # pass a fixed table), so it belongs with the corpus snapshot
-    pages = spark.read.parquet(os.path.join(out, "pages"))
-    build_idf(explode_sentences(extract_pages(pages))).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out, "idf"))
     print(f"prepared {out} ({n} pages) in {round(time.time() - t0, 1)}s")
 
 

@@ -35,18 +35,6 @@ def run(cpus: int, sf_dir: str) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf_dir,
                PYTHONPATH=REPO, SPARK_GRAFT_ONLY="kg",
                SPARK_GRAFT_PAGES=os.environ.get("SCALING_PAGES", "200000"))
-    # uniform task-sizing RULE applied to every leg (not per-leg hand
-    # tuning): shuffle partitions = 4x the core budget, AQE coalescing off,
-    # so the heavy python-UDF stages always run an exact 4 even waves.
-    # AQE's size-based coalescing produced 19/24 tasks on 16 cores — the
-    # 16+3-style tail wave left cores ~28% idle through the scorer stage
-    # (BENCH/stage_profile.py; occupancy 0.72 -> 0.92 with even waves).
-    # Gated on the same >= 200k-page floor bench.py applies: below it,
-    # per-task overhead dominates (measured 3.5x slower) and even waves
-    # would corrupt the very numbers this script exists to produce.
-    if int(env["SPARK_GRAFT_PAGES"]) >= 200_000:
-        env.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(4 * cpus))
-        env.setdefault("SPARK_GRAFT_COALESCE", "0")
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "bench.py")],
         env=env, capture_output=True, text=True,

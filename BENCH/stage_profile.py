@@ -1,13 +1,20 @@
-"""Per-stage scaling profile of the flagship pipeline — find WHERE the
-wall time goes at a given parallelism, so the N vs 4N efficiency gap can be
-attributed to specific stages (and driver gaps) instead of hand-waved.
+"""Per-stage profile of the flagship pipeline from the Spark event log —
+find WHERE the wall time, bytes, spill and memory go at a given
+parallelism, with no Spark UI.
 
-For every stage the Spark UI REST API gives submission/completion wall
-times plus the summed executorRunTime across its tasks.  At p cores a
-perfectly parallel stage has wall ~= executorRunTime / p; a stage whose
-wall stays flat when p quadruples is the scaling bottleneck.  Driver time
-(planning, broadcast build, scheduling gaps between stages) shows up as
-job_wall - sum(stage walls on the critical path).
+The session writes its event log to a temporary directory.  Each completed
+stage gives submission and completion times, its task count and the
+summed task metrics (run and CPU time, GC, input, shuffle read/write,
+spill); its task-end events give the largest single task's peak execution
+memory, the figure a shuffled-hash join's build side (which cannot spill)
+must fit in.  At p cores a perfectly parallel stage has wall ~=
+run time / p; a stage whose wall stays flat when p quadruples is the
+scaling bottleneck.  Driver time (planning, broadcast build, scheduling
+gaps) shows up as wall minus the sum of stage walls.
+
+The measured run is the second of two identical runs (the first warms the
+Python workers, code cache and broadcasts) under the session's own sizing
+and ``bench.py``'s flagship task sizing (``harness.even_waves``).
 
 Usage (one leg; run once per parallelism level, same corpus):
 
@@ -19,146 +26,142 @@ or against a pre-materialized corpus (BENCH/prep_corpus.py):
     SPARK_GRAFT_CORPUS_DIR=/tmp/pfs_corpus_800000 SPARK_GRAFT_CPUS=4 \
         python BENCH/stage_profile.py
 
-Prints one JSON line: {"cpus", "wall_sec", "stage_wall_sum", "driver_gap",
-"exec_run_total_s", "ideal_wall_s", "stages": [...top by wall...]}.
+``PROFILE_ACTION=count`` forces with ``count()`` as ``bench.py`` does
+(default: a noop write); ``PROFILE_TOP`` caps the listed stages (default
+14).  Prints one JSON line: {"cpus", "pages", "wall_sec",
+"stage_wall_sum", "driver_gap_s", "exec_run_total_s", "ideal_wall_s",
+"n_stages", byte totals, "stages": [...top by wall...]}.
 """
 
 from __future__ import annotations
 
+import fileinput
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
-import urllib.request
-from datetime import datetime, timezone
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+from harness import REPO, best_of, even_waves, extract, force, load_corpus, start_spark, with_scorer
+
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
+from tracing import _event_log_files  # one file, or Spark 4's rolling layout
+
+_SUMS = {
+    "run_s": ("internal.metrics.executorRunTime", 1e-3),
+    "cpu_s": ("internal.metrics.executorCpuTime", 1e-9),
+    "gc_s": ("internal.metrics.jvmGCTime", 1e-3),
+    "input_bytes": ("internal.metrics.input.bytesRead", 1),
+    "shuffle_write_bytes": ("internal.metrics.shuffle.write.bytesWritten", 1),
+    "spill_bytes": ("internal.metrics.diskBytesSpilled", 1),
+}
+_SHUFFLE_READ = (
+    "internal.metrics.shuffle.read.remoteBytesRead",
+    "internal.metrics.shuffle.read.localBytesRead",
+)
 
 
-def _ts(s: str) -> float:
-    # REST timestamps look like 2026-08-18T01:02:03.456GMT
-    return (
-        datetime.strptime(s.replace("GMT", "+0000"), "%Y-%m-%dT%H:%M:%S.%f%z")
-        .astimezone(timezone.utc)
-        .timestamp()
-    )
+def read_stages(log_dir: str) -> list[dict]:
+    """Every successfully completed stage in the event log of the one
+    application logged in ``log_dir``, in completion order: ``{"id",
+    "name", "tasks", "submitted", "completed"`` (epoch seconds),
+    ``"wall_s", "run_s", "cpu_s", "gc_s", "input_bytes",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes"`` (summed
+    over the stage's tasks) and ``"peak_task_mem_bytes"`` (the largest
+    single task's peak execution memory)}``."""
+    peak: dict[tuple[int, int], int] = {}
+    stages = []
+    with fileinput.input(_event_log_files(log_dir)) as lines:
+        for line in lines:
+            ev = json.loads(line)
+            kind = ev.get("Event")
+            if kind == "SparkListenerTaskEnd":
+                key = (ev["Stage ID"], ev["Stage Attempt ID"])
+                mem = (ev.get("Task Metrics") or {}).get("Peak Execution Memory", 0)
+                peak[key] = max(peak.get(key, 0), mem)
+            elif kind == "SparkListenerStageCompleted":
+                info = ev["Stage Info"]
+                if "Failure Reason" in info:
+                    continue
+                acc = {a["Name"]: int(a["Value"]) for a in info.get("Accumulables", [])
+                       if a.get("Name", "").startswith("internal.metrics.")}
+                sub, comp = info["Submission Time"] / 1e3, info["Completion Time"] / 1e3
+                row = {
+                    "id": info["Stage ID"],
+                    "name": info["Stage Name"],
+                    "tasks": info["Number of Tasks"],
+                    "submitted": sub,
+                    "completed": comp,
+                    "wall_s": comp - sub,
+                    **{k: acc.get(name, 0) * scale for k, (name, scale) in _SUMS.items()},
+                    "shuffle_read_bytes": sum(acc.get(n, 0) for n in _SHUFFLE_READ),
+                    "peak_task_mem_bytes": peak.get(
+                        (info["Stage ID"], info["Stage Attempt ID"]), 0),
+                }
+                stages.append(row)
+    return stages
 
 
 def main() -> None:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     n_pages = int(os.environ.get("PROFILE_PAGES", "200000"))
-    corpus_dir = os.environ.get("SPARK_GRAFT_CORPUS_DIR")
-
-    from predicate_finder_spark.config import PipelineConfig
-    from predicate_finder_spark.operators.extract import extract_pages
-    from predicate_finder_spark.operators.mentions import explode_sentences
-    from predicate_finder_spark.operators.scoring import build_idf
-    from predicate_finder_spark.plans.pipeline import build_scorer_dicts, extract_triples
-    from predicate_finder_spark.session import get_spark
-    from predicate_finder_spark.synth import synth_corpus
-
-    sp = int(os.environ.get("PROFILE_SHUFFLE_PARTITIONS", 2 * cpus))
-    extra = {"spark.ui.enabled": "true"}
-    # experiment dials (wave-quantization work): PROFILE_COALESCE=0 disables
-    # AQE partition coalescing so the shuffle partition count is exact;
-    # PROFILE_ADVISORY sets the AQE target partition bytes
-    if os.environ.get("PROFILE_COALESCE") == "0":
-        extra["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
-    if os.environ.get("PROFILE_ADVISORY"):
-        extra["spark.sql.adaptive.advisoryPartitionSizeInBytes"] = os.environ[
-            "PROFILE_ADVISORY"
-        ]
-    spark = get_spark(
-        app_name="pfs-stage-profile", master=f"local[{cpus}]",
-        shuffle_partitions=sp,
-        extra_conf=extra,
-    )
-    if corpus_dir:
-        def _rd(name):
-            return spark.read.parquet(os.path.join(corpus_dir, name))
-
-        pages = _rd("pages")
-        n_pages = pages.count()
-        dicts = {k: _rd(k).cache() for k in ("aliases", "kg_triples", "ontology", "embeddings")}
-        idf_df = _rd("idf").cache()
-    else:
-        t = synth_corpus(spark, n_pages)
-        pages = t["pages"].cache()
-        pages.count()
-        dicts = {k: t[k].cache() for k in ("aliases", "kg_triples", "ontology", "embeddings")}
-        idf_df = build_idf(explode_sentences(extract_pages(pages))).cache()
-    for d in dicts.values():
-        d.count()
-    idf_df.count()
-    scorer_dicts = build_scorer_dicts(
-        idf_df, dicts["kg_triples"], dicts["ontology"], dicts["embeddings"]
-    )
-    cfg = PipelineConfig(kg_prededuped=True)
-
     action = os.environ.get("PROFILE_ACTION", "save")
-
-    def one_run():
-        t0 = time.time()
-        tri = extract_triples(
-            spark, pages, dicts["aliases"], dicts["kg_triples"],
-            dicts["ontology"], dicts["embeddings"], cfg,
-            idf=idf_df, scorer_dicts=scorer_dicts,
-        )
-        if action == "count":
-            tri.count()  # mirror bench.py's timed action exactly
-        else:
-            tri.write.mode("overwrite").format("noop").save()
-        return time.time() - t0
-
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    def stages():
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages"
-        ) as r:
-            return json.load(r)
-
-    one_run()  # warm-up: python workers, code cache, broadcasts
-    seen = {s["stageId"] for s in stages()}
-    wall = one_run()
-    new = [
-        s for s in stages()
-        if s["stageId"] not in seen and s["status"] == "COMPLETE"
-    ]
-
-    rows = []
-    for s in new:
-        sub = _ts(s["firstTaskLaunchedTime"]) if s.get("firstTaskLaunchedTime") else _ts(s["submissionTime"])
-        comp = _ts(s["completionTime"])
-        run_s = s.get("executorRunTime", 0) / 1e3
-        w = comp - sub
-        rows.append({
-            "id": s["stageId"],
-            "wall_s": round(w, 2),
-            "run_s": round(run_s, 2),
-            # parallel occupancy: 1.0 = all p cores busy the whole stage
-            "occupancy": round(run_s / (w * cpus), 3) if w > 0 else None,
-            "tasks": s.get("numTasks"),
-            "gc_s": round(s.get("jvmGcTime", 0) / 1e3, 2),
-            "in_mb": round(s.get("inputBytes", 0) / 1e6, 1),
-            "sw_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 1),
-            "sr_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-            "name": s.get("name", "")[:60],
+    log_dir = tempfile.mkdtemp(prefix="pfs-eventlog-")
+    try:
+        spark, cpus = start_spark("pfs-stage-profile", extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": "file://" + log_dir,
+            "spark.eventLog.compress": "false",
         })
+        c = with_scorer(load_corpus(spark, n_pages))
+        even_waves(spark, c["n_pages"], cpus)
+
+        def one_run():
+            tri = extract(spark, c)
+            if action == "count":
+                tri.count()
+            else:
+                force(tri)
+
+        best_of(spark, "profile:warm-up", one_run, n=1)
+        t0 = time.time()
+        wall = best_of(spark, "profile:measured", one_run, n=1)
+        spark.stop()  # flushes the event log
+        new = [s for s in read_stages(log_dir) if s["submitted"] >= t0]
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+    rows = [{
+        "id": s["id"],
+        "wall_s": round(s["wall_s"], 2),
+        "run_s": round(s["run_s"], 2),
+        "cpu_s": round(s["cpu_s"], 2),
+        # parallel occupancy: 1.0 = all p cores busy the whole stage
+        "occupancy": round(s["run_s"] / (s["wall_s"] * cpus), 3) if s["wall_s"] > 0 else None,
+        "tasks": s["tasks"],
+        "gc_s": round(s["gc_s"], 2),
+        "in_mb": round(s["input_bytes"] / 1e6, 1),
+        "sw_mb": round(s["shuffle_write_bytes"] / 1e6, 1),
+        "sr_mb": round(s["shuffle_read_bytes"] / 1e6, 1),
+        "spill_mb": round(s["spill_bytes"] / 1e6, 1),
+        "peak_task_mem_mb": round(s["peak_task_mem_bytes"] / 1e6, 1),
+        "name": s["name"][:60],
+    } for s in new]
     rows.sort(key=lambda r: -r["wall_s"])
-    stage_wall = sum(r["wall_s"] for r in rows)
-    run_total = sum(r["run_s"] for r in rows)
+    stage_wall = sum(s["wall_s"] for s in new)
+    run_total = sum(s["run_s"] for s in new)
     out = {
         "cpus": cpus,
-        "pages": n_pages,
+        "pages": c["n_pages"],
         "wall_sec": round(wall, 2),
         "stage_wall_sum": round(stage_wall, 2),
         "driver_gap_s": round(wall - stage_wall, 2),
         "exec_run_total_s": round(run_total, 2),
         "ideal_wall_s": round(run_total / cpus, 2),
-        "n_stages": len(rows),
+        "n_stages": len(new),
+        **{k: sum(s[k] for s in new) for k in (
+            "input_bytes", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")},
+        "peak_task_mem_bytes": max((s["peak_task_mem_bytes"] for s in new), default=0),
         "loadavg_1m": round(os.getloadavg()[0], 2),
         "stages": rows[: int(os.environ.get("PROFILE_TOP", "14"))],
     }

@@ -33,6 +33,7 @@ from predicate_finder_spark.functions.hashing import (
 )
 from predicate_finder_spark.operators.ann import brute_force_topk, build_ivf_cells, ivf_topk
 from predicate_finder_spark.operators.joins import salted_join
+from predicate_finder_spark.session import plan_bytes
 
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "was", "that", "it")
 
@@ -50,18 +51,6 @@ def _tokens(col):
 
 
 
-def _scan_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a frame (file size for a bare parquet
-    scan).  Guards the spread helpers: repartitioning a few hundred KB to
-    32 tasks costs more scheduling than it buys (measured: q12 at sf0.01
-    0.34 s -> 0.74 s without the guard), while the multi-MB sf1.0 tables
-    gain 2-3x."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 1 << 62  # unknown -> do not block the spread
-
-
 def _spread_by(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-repartition on ``keys`` at full core width when the scan plans
     fewer tasks than cores (the local sf tables are single parquet files
@@ -76,9 +65,14 @@ def _spread_by(df: DataFrame, *keys: str) -> DataFrame:
     is why the round-robin _spread variant was retired — measured: q19 at
     sf0.1 0.37 s -> 1.4 s under round-robin's local sort) and row-to-
     partition assignment is deterministic under task retry (guide §2.5).
-    At cluster scale the scan has >= cores splits and this is a no-op."""
+    At cluster scale the scan has >= cores splits and this is a no-op.
+
+    The 4 MB size-estimate guard keeps small scans whole: repartitioning a
+    few hundred KB to 32 tasks costs more scheduling than it buys
+    (measured: q12 at sf0.01 0.34 s -> 0.74 s without the guard), while the
+    multi-MB sf1.0 tables gain 2-3x."""
     sc = df.sparkSession.sparkContext
-    if _scan_bytes(df) > 4 * 1024 * 1024 and df.rdd.getNumPartitions() < sc.defaultParallelism:
+    if plan_bytes(df) > 4 * 1024 * 1024 and df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism, *[F.col(k) for k in keys])
     return df
 

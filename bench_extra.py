@@ -10,6 +10,9 @@ Modes (BENCH_MODE env):
                 pipeline/curation/web channels into plans/r06/<name>_<tag>.txt
                 (PLANS_TAG env: before|after)
   web        -- noop timing of the web/structured channel pass
+  kgstages   -- cumulative marginal timing of the flagship's stages at
+                $SPARK_GRAFT_PAGES synthetic pages (default 200k)
+Scaffolding (session, corpus, best-of-2, even waves): BENCH/harness.py.
 All timings: inputs materialized outside the window, noop sink.
 """
 
@@ -19,39 +22,21 @@ import io
 import json
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "BENCH"))
 
-
-def _force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
-def _spark(cpus: int):
-    from predicate_finder_spark.session import get_spark
-
-    sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    spark = get_spark(
-        app_name="pfs-bench-extra",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(sp) if sp else 2 * cpus,
-    )
-    from pyspark.sql import functions as F
-
-    spark.range(1_000_000).select(F.sum("id")).collect()
-    return spark
-
-
-def _pages(spark, n_pages: int):
-    from predicate_finder_spark.synth import synth_corpus
-
-    t = synth_corpus(spark, n_pages)
-    pages = t["pages"].persist()
-    pages.count()
-    return t, pages
+from harness import (
+    KG_CFG,
+    best_of,
+    even_waves,
+    extract,
+    force,
+    load_corpus,
+    start_spark,
+    with_scorer,
+)
 
 
 def curation_profile() -> None:
@@ -61,10 +46,9 @@ def curation_profile() -> None:
     from predicate_finder_spark.operators.dedup import exact_dedup, minhash_lsh_pairs
     from predicate_finder_spark.plans.curation import curate_docs
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_pages = int(os.environ.get("SPARK_GRAFT_PAGES", "200000"))
-    spark = _spark(cpus)
-    _t, pages = _pages(spark, n_pages)
+    spark, cpus = start_spark("pfs-bench-extra")
+    c = load_corpus(spark, int(os.environ.get("SPARK_GRAFT_PAGES", "200000")))
+    pages = c["pages"]
     langs = ("en", "und", "de", "fr", "es", "zh")
 
     def gates():
@@ -74,48 +58,27 @@ def curation_profile() -> None:
             .filter((F.col("quality") >= 0.15) & F.col("lang_pred").isin(*langs))
         )
 
-    variants = {
-        "gates": lambda: gates(),
-        "gates_exact": lambda: exact_dedup(gates(), id_col="url", text_col="text"),
-    }
-
-    def _cands():
-        kept = exact_dedup(gates(), id_col="url", text_col="text").persist()
-        kept.count()
-        p = minhash_lsh_pairs(
-            kept, id_col="url", text_col="text", shingle_k=3, num_hashes=16,
-            bands=4, verify_threshold=None,
-        )
-        return p
-
-    def _verify():
+    def lsh_pairs(verify_threshold):
         kept = exact_dedup(gates(), id_col="url", text_col="text").persist()
         kept.count()
         return minhash_lsh_pairs(
             kept, id_col="url", text_col="text", shingle_k=3, num_hashes=16,
-            bands=4, verify_threshold=0.8,
+            bands=4, verify_threshold=verify_threshold,
         )
 
-    variants["plus_lsh_candidates"] = _cands
-    variants["plus_verify"] = _verify
-    variants["full"] = lambda: curate_docs(
-        pages, id_col="url", text_col="text", min_quality=0.15,
-        langs=langs, near_dup="minhash", near_dup_threshold=0.8,
-    )
-
-    out = {"pages": n_pages, "cpus": cpus}
+    variants = {
+        "gates": gates,
+        "gates_exact": lambda: exact_dedup(gates(), id_col="url", text_col="text"),
+        "plus_lsh_candidates": lambda: lsh_pairs(None),
+        "plus_verify": lambda: lsh_pairs(0.8),
+        "full": lambda: curate_docs(
+            pages, id_col="url", text_col="text", min_quality=0.15,
+            langs=langs, near_dup="minhash", near_dup_threshold=0.8,
+        ),
+    }
+    out = {"pages": c["n_pages"], "cpus": cpus}
     for name, fn in variants.items():
-        best = None
-        for _ in range(2):
-            spark.catalog.clearCache()
-            pages.persist()
-            pages.count()
-            t0 = time.time()
-            spark.sparkContext.setJobDescription(f"curation:{name}")
-            _force(fn())
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        out[name] = round(best, 3)
+        out[name] = best_of(spark, f"curation:{name}", lambda: force(fn()), keep=pages)
     out["loadavg_1m"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))
 
@@ -136,21 +99,13 @@ def queries_bench() -> None:
     import __spark_entry__ as entrymod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     only = os.environ.get("BENCH_QUERIES")
     names = tuple(only.split(",")) if only else HEADLINERS
-    spark = _spark(cpus)
+    spark, cpus = start_spark("pfs-bench-extra")
     Q = entrymod.queries()
     out = {"sf_dir": sf_dir, "cpus": cpus}
     for name in names:
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            spark.sparkContext.setJobDescription(name)
-            _force(Q[name](spark, sf_dir))
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        out[name] = round(best, 3)
+        out[name] = best_of(spark, name, lambda: force(Q[name](spark, sf_dir)))
     out["loadavg_1m"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))
 
@@ -163,29 +118,17 @@ def web_bench() -> None:
         outlink_edges,
     )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_pages = int(os.environ.get("SPARK_GRAFT_PAGES", "200000"))
-    spark = _spark(cpus)
-    t, pages = _pages(spark, n_pages)
-    aliases = t["aliases"].persist()
-    aliases.count()
-    onto = t["ontology"].persist()
-    onto.count()
-    out = {"pages": n_pages, "cpus": cpus}
+    spark, cpus = start_spark("pfs-bench-extra")
+    c = load_corpus(spark, int(os.environ.get("SPARK_GRAFT_PAGES", "200000")))
+    pages = c["pages"]
+    out = {"pages": c["n_pages"], "cpus": cpus}
     parts = {
         "host_graph": lambda: host_graph(outlink_edges(pages)),
         "anchor_texts": lambda: anchor_texts(pages),
-        "structured": lambda: structured_triples(pages, aliases, onto),
+        "structured": lambda: structured_triples(pages, c["aliases"], c["ontology"]),
     }
     for name, fn in parts.items():
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            spark.sparkContext.setJobDescription(f"web:{name}")
-            _force(fn())
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        out[name] = round(best, 3)
+        out[name] = best_of(spark, f"web:{name}", lambda: force(fn()))
     out["loadavg_1m"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))
 
@@ -200,21 +143,21 @@ def _explain_str(df) -> str:
 def dump_plans() -> None:
     import __spark_entry__ as entrymod
 
-    from predicate_finder_spark.config import PipelineConfig
-    from predicate_finder_spark.operators.extract import extract_pages
-    from predicate_finder_spark.operators.mentions import explode_sentences
-    from predicate_finder_spark.operators.scoring import build_idf
     from predicate_finder_spark.plans.curation import curate_docs
-    from predicate_finder_spark.plans.pipeline import build_scorer_dicts, extract_triples
+    from predicate_finder_spark.operators.structured import structured_triples
+    from predicate_finder_spark.operators.weblinks import (
+        anchor_texts,
+        host_graph,
+        outlink_edges,
+    )
 
     tag = os.environ.get("PLANS_TAG", "before")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     outdir = os.path.join(REPO, "plans", "r06")
     os.makedirs(outdir, exist_ok=True)
     only = os.environ.get("PLANS_ONLY")
     names = tuple(only.split(",")) if only else None
-    spark = _spark(cpus)
+    spark, _ = start_spark("pfs-bench-extra")
     Q = entrymod.queries()
 
     def dump(name: str, df) -> None:
@@ -235,21 +178,9 @@ def dump_plans() -> None:
     # lets the dump run at the bench's 200k pages when the claim under test
     # is a join strategy; default 2k keeps the dict bootstrap fast for
     # shape-only questions.
-    t, pages = _pages(spark, int(os.environ.get("PLANS_PAGES", "2000")))
-    dicts = {k: t[k] for k in ("aliases", "kg_triples", "ontology", "embeddings")}
-    idf_df = build_idf(explode_sentences(extract_pages(pages))).cache()
-    idf_df.count()
-    scorer_dicts = build_scorer_dicts(
-        idf_df, dicts["kg_triples"], dicts["ontology"], dicts["embeddings"]
-    )
-    cfg = PipelineConfig(kg_prededuped=True)
-    dump(
-        "kg_pipeline",
-        extract_triples(
-            spark, pages, dicts["aliases"], dicts["kg_triples"], dicts["ontology"],
-            dicts["embeddings"], cfg, idf=idf_df, scorer_dicts=scorer_dicts,
-        ),
-    )
+    c = with_scorer(load_corpus(spark, int(os.environ.get("PLANS_PAGES", "2000"))))
+    pages = c["pages"]
+    dump("kg_pipeline", extract(spark, c))
     dump(
         "curation",
         curate_docs(
@@ -258,25 +189,15 @@ def dump_plans() -> None:
             near_dup="minhash", near_dup_threshold=0.8,
         ),
     )
-    from predicate_finder_spark.operators.structured import structured_triples
-    from predicate_finder_spark.operators.weblinks import (
-        anchor_texts,
-        host_graph,
-        outlink_edges,
-    )
-
     dump("web_host_graph", host_graph(outlink_edges(pages)))
     dump("web_anchor_texts", anchor_texts(pages))
-    dump("web_structured", structured_triples(pages, dicts["aliases"], dicts["ontology"]))
+    dump("web_structured", structured_triples(pages, c["aliases"], c["ontology"]))
 
 
 def kg_stages() -> None:
     """Cumulative marginal timing of the flagship pipeline's stages at
-    $SPARK_GRAFT_PAGES pages, mirroring the bench's even-wave config
-    (4 x cores shuffle partitions, AQE coalescing off at >=200k pages)."""
-    from pyspark.sql import functions as F
-
-    from predicate_finder_spark.config import PipelineConfig
+    $SPARK_GRAFT_PAGES pages, under the bench's flagship task sizing
+    (``harness.even_waves``)."""
     from predicate_finder_spark.operators.extract import extract_pages
     from predicate_finder_spark.operators.linking import link_mentions, resolve_mentions
     from predicate_finder_spark.operators.mentions import explode_sentences, generate_mentions
@@ -287,48 +208,35 @@ def kg_stages() -> None:
         predicate_words,
     )
     from predicate_finder_spark.operators.scoring import (
-        build_idf,
         make_scorer_udf,
         score_candidates,
         to_triples,
         top1_per_pair,
     )
-    from predicate_finder_spark.plans.pipeline import build_scorer_dicts
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_pages = int(os.environ.get("SPARK_GRAFT_PAGES", "200000"))
-    spark = _spark(cpus)
-    t, pages = _pages(spark, n_pages)
-    dicts = {k: t[k].persist() for k in ("aliases", "kg_triples", "ontology", "embeddings")}
-    for d in dicts.values():
-        d.count()
-    idf_df = build_idf(explode_sentences(extract_pages(pages))).persist()
-    idf_df.count()
-    cfg = PipelineConfig(kg_prededuped=True)
-    idf_dict, emb_dict = build_scorer_dicts(
-        idf_df, dicts["kg_triples"], dicts["ontology"], dicts["embeddings"], cfg
-    )
-    if n_pages >= 200_000:
-        spark.conf.set("spark.sql.shuffle.partitions", str(4 * cpus))
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    spark, cpus = start_spark("pfs-bench-extra")
+    c = with_scorer(load_corpus(spark, int(os.environ.get("SPARK_GRAFT_PAGES", "200000"))))
+    pages = c["pages"]
+    idf_dict, emb_dict = c["scorer_dicts"]
+    even_waves(spark, c["n_pages"], cpus)
 
     def _sent():
-        return explode_sentences(extract_pages(pages), cfg.languages)
+        return explode_sentences(extract_pages(pages), KG_CFG.languages)
 
     def _linked(sent_df):
-        m = generate_mentions(sent_df, cfg.max_mention_ngram)
+        m = generate_mentions(sent_df, KG_CFG.max_mention_ngram)
         return resolve_mentions(
-            link_mentions(m, dicts["aliases"], broadcast_dict=True, top1_per_surface=True)
+            link_mentions(m, c["aliases"], broadcast_dict=True, top1_per_surface=True)
         )
 
     def _cands(sent_df):
         pairs = pair_mentions(_linked(sent_df), sent_df)
-        c = candidate_predicates(pairs, dicts["kg_triples"], kg_prededuped=True)
-        return predicate_words(enrich_ontology(c, dicts["ontology"]))
+        cands = candidate_predicates(pairs, c["kg_triples"], kg_prededuped=True)
+        return predicate_words(enrich_ontology(cands, c["ontology"]))
 
     def _scored(sent_df):
         scorer = make_scorer_udf(
-            spark, emb_dict, idf_dict, max_ngram=cfg.max_ngram, default_idf=cfg.default_idf
+            spark, emb_dict, idf_dict, max_ngram=KG_CFG.max_ngram, default_idf=KG_CFG.default_idf
         )
         return score_candidates(_cands(sent_df), scorer)
 
@@ -336,18 +244,9 @@ def kg_stages() -> None:
         s = _scored(sent_df).select("url", "sent_id", "subj", "obj", "pred", "score", "rule")
         return to_triples(top1_per_pair(s))
 
-    out = {"pages": n_pages, "cpus": cpus}
-
+    out = {"pages": c["n_pages"], "cpus": cpus}
     # (a) extract+sentences cold (the narrow pandas-UDF front end)
-    best = None
-    for _ in range(2):
-        spark.catalog.clearCache()
-        pages.persist(); pages.count()
-        t0 = time.time()
-        spark.sparkContext.setJobDescription("kg:sentences")
-        _force(_sent())
-        best = min(best or 9e9, time.time() - t0)
-    out["sentences_cold"] = round(best, 3)
+    out["sentences_cold"] = best_of(spark, "kg:sentences", lambda: force(_sent()), keep=pages)
 
     # stages from a pre-persisted sentences frame (the bench's warm shape)
     sent_df = _sent().persist()
@@ -356,18 +255,9 @@ def kg_stages() -> None:
         ("linked", _linked),
         ("candidates", _cands),
         ("scored", _scored),
-        ("full_top1", _full),
     ):
-        best = None
-        for _ in range(2):
-            t0 = time.time()
-            spark.sparkContext.setJobDescription(f"kg:{name}")
-            if name == "full_top1":
-                fn(sent_df).count()
-            else:
-                _force(fn(sent_df))
-            best = min(best or 9e9, time.time() - t0)
-        out[name] = round(best, 3)
+        out[name] = best_of(spark, f"kg:{name}", lambda: force(fn(sent_df)))
+    out["full_top1"] = best_of(spark, "kg:full_top1", lambda: _full(sent_df).count())
     out["loadavg_1m"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))
 

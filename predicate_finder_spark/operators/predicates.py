@@ -14,21 +14,12 @@ from pyspark.sql import functions as F
 
 from predicate_finder_spark.functions.text import camel_split, uri_localname
 from predicate_finder_spark.operators.joins import salted_join
+from predicate_finder_spark.session import plan_bytes
 
 # Largest KG (optimizer size estimate) whose side of the candidate join is
 # broadcast: a dictionary-side hash relation of a few hundred MB per
 # executor, well under the 8 GB broadcast limit.
 KG_BROADCAST_MAX_BYTES = 128 << 20
-
-
-def _plan_stat_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a frame (accurate for cached inputs, file
-    size for parquet scans, huge/unknown for ExistingRDD — which safely
-    disables any broadcast decision keyed on it)."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 1 << 62
 
 
 def pair_mentions(resolved: DataFrame, sent_df: DataFrame) -> DataFrame:
@@ -151,7 +142,7 @@ def candidate_predicates(
         # The decision keys on the optimizer's size estimate against
         # KG_BROADCAST_MAX_BYTES; a DBpedia-scale KG blows the cap and falls
         # back to the shuffled join, so the decision is scale-adaptive.
-        fits = _plan_stat_bytes(kg_triples) <= KG_BROADCAST_MAX_BYTES
+        fits = plan_bytes(kg_triples) <= KG_BROADCAST_MAX_BYTES
         build = F.broadcast(kg_enc) if fits else kg_enc
         j = both.join(build, ["__sid", "__oid"], "inner")
     # no dropDuplicates here: duplicate candidates (the same pair mentioned

@@ -1,15 +1,26 @@
-"""SparkSession factory.
+"""SparkSession factory: the one place the engine decides how a session is
+pinned and sized.
 
-One place to pin every config that matters for correctness (UTC timestamps
-for DuckDB-oracle comparison, Arrow for pandas UDFs) and for scale (AQE,
-skew-join handling, shuffle partition sizing).
+Correctness pins: UTC timestamps (DuckDB-oracle comparison) and Arrow for
+every pandas UDF.  Sizing, each derived from the box or the master:
+
+- master: ``local[$SPARK_GRAFT_CPUS]``, else ``local[*]``;
+- ``spark.sql.shuffle.partitions``: ``max(2 x local threads, 8)`` unless
+  the caller passes ``shuffle_partitions``;
+- ``spark.driver.memory``: ``$SPARK_DRIVER_MEM``, else
+  :func:`driver_memory` of the box's physical RAM;
+- AQE on, with partition coalescing and skew-join splitting; shuffled-hash
+  joins preferred over sort-merge.
+
+:func:`plan_bytes` is the optimizer size estimate that every size-keyed
+plan choice (the KG broadcast cap, the driver queries' scan spreads) reads.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -18,47 +29,25 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for this engine.
-
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) else
-    ``local[*]``.  ``shuffle_partitions`` defaults to 2x the local core
-    count — on a real cluster this would be sized to keep post-shuffle
-    partitions in the 64-256 MB range at the target data scale.
-    """
+    """Build (or reuse) a SparkSession tuned for this engine (see the module
+    docstring for the sizing rules).  On a real cluster the shuffle
+    partition count would be sized to keep post-shuffle partitions in the
+    64-256 MB range at the target data scale."""
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
 
     if shuffle_partitions is None:
-        env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        if env_sp:
-            # BENCH/scaling.py sets this per leg by the uniform rule
-            # 4 x cores (even python-UDF task waves; see the COALESCE
-            # comment below) — measured: pinning ONE count across legs
-            # slows the small leg ~18% on per-task overhead, which would
-            # inflate the efficiency ratio for free; the rule keeps both
-            # legs at their honest best
-            shuffle_partitions = int(env_sp)
-        else:
-            n = _parse_local_threads(master)
-            shuffle_partitions = max(2 * n, 8)
+        shuffle_partitions = max(2 * _parse_local_threads(master), 8)
 
+    ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime partition coalescing, skew-join splitting, plan re-opt.
-        # SPARK_GRAFT_COALESCE=0 pins the exact shuffle partition count:
-        # for a known heavy python-UDF stage, a task count that is an even
-        # multiple of the core count removes wave-quantization idle (AQE's
-        # size-based coalescing produced e.g. 19 or 24 tasks on 16 cores —
-        # a 16+3 tail wave left cores ~28% idle through the scorer stage;
-        # measured in BENCH/stage_profile.py, see BENCH/BASELINE.md round 4)
         .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.sql.adaptive.coalescePartitions.enabled",
-            "false" if os.environ.get("SPARK_GRAFT_COALESCE") == "0" else "true",
-        )
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Join strategy: allow shuffled-hash join when the per-partition
         # build side fits (guide: prefer hash over sort-merge when
@@ -77,15 +66,37 @@ def get_spark(
         # Deterministic timestamps; DuckDB compares in UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # local mode = driver-only: give the single JVM most of the box
-        # (cluster deployments size executors instead)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or driver_memory(ram_bytes),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_memory(ram_bytes: int) -> str:
+    """Heap cap of the local-mode JVM: a third of physical RAM, at least
+    2 GB.  Local mode runs every task in this one JVM, but the box also
+    hosts the Python UDF workers and the OS page cache; a cap above RAM
+    leaves a long-lived JVM without GC pressure until the kernel's OOM
+    killer takes it.  No upper bound: a large box running wide local[N]
+    scaling legs wants that third."""
+    return f"{max(2, int(ram_bytes / 2**30 // 3))}g"
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """Optimizer size estimate of a frame: accurate for cached inputs, file
+    size for parquet scans.  Unknown (e.g. ExistingRDD, or the estimate
+    fails) reads as huge, which disables a broadcast keyed on it and lets a
+    scan spread through."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return 1 << 62
 
 
 def _parse_local_threads(master: str) -> int:

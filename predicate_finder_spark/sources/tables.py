@@ -9,10 +9,10 @@ north_rule requirements implemented here:
 - **one commit protocol**: the package's only commit point.  Stage dirs
   publish by rename; manifests and ``plans/incremental`` batch markers by
   :func:`commit_json`, read back by :func:`read_json` (torn = absent).
-- **Iceberg seam**: when an Iceberg catalog is configured on the session
-  (spark.sql.catalog.*), ``TableFormat.iceberg`` writes via writeTo();
-  the sandbox has no Iceberg jar, so the parquet+manifest layout is the
-  default and carries the same metadata an Iceberg snapshot would.
+- **format**: every table is parquet plus its ``_manifest.json``; there
+  is no Iceberg (or other table-format) writer.  The manifest carries the
+  snapshot metadata a table format would (schema, row and file counts,
+  config hash, commit time).
 """
 
 from __future__ import annotations
