@@ -28,9 +28,6 @@ class PipelineConfig:
     min_link_prior: float = 0.0
     max_mention_ngram: int = 3
     use_lsh_blocking: bool = False
-    lsh_shingle_size: int = 3
-    lsh_num_hashes: int = 16
-    lsh_bands: int = 4
     # candidate predicates
     predicate_blacklist: tuple[str, ...] = (
         "#", "subject", "wiki", "hypernym", "gender",

@@ -70,11 +70,6 @@ def lang_id(
     ).otherwise(F.lit("und"))
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace+punct token count (C1 tokenizer)."""
-    return F.size(tokenize(text))
-
-
 def word_token_count_bpe_ish(text: Column) -> Column:
     """BPE-ish token estimate: word-piece regex split — words, digits runs,
     and individual punctuation each count; long words count ceil(len/4)

@@ -129,11 +129,6 @@ def simhash64(tokens: Column) -> Column:
     )
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit ints (popcount of xor)."""
-    return F.bit_count(a.bitwiseXOR(b)).cast("int")
-
-
 def rolling_fingerprint(col: Column) -> Column:
     """Polynomial rolling-hash document fingerprint -> bigint.
 

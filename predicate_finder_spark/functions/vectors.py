@@ -1,53 +1,11 @@
-"""Distributed dense-vector aggregation (A5/A6; reference embedding
-mean/sum at baseline/baseline.py:31-41 and xgboost/utils.py:31-33 are
-driver-side numpy loops).
-
-Spark re-expression: posexplode the vector to (group, dim, val) rows, hash-
-aggregate per (group, dim) — classic partial+final combine, fully JVM-side —
-then reassemble the array ordered by dim.  Scales to any corpus size because
-no vector ever lands on the driver.
+"""Dense-vector column expressions: symmetric int8 quantization of an
+embedding column and its inverse, the memory lever of the ANN stages.
+Pure column expressions, so the DuckDB oracles replay them bit-for-bit.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def group_vector_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    vec_col: str,
-    agg: str = "avg",
-) -> DataFrame:
-    """Per-group elementwise mean/sum of an array<float> column.
-
-    Returns group_cols + ``vector`` (array<double>, ordered by dimension).
-    """
-    assert agg in ("avg", "sum")
-    exploded = df.select(
-        *group_cols, F.posexplode(F.col(vec_col)).alias("__dim", "__val")
-    )
-    agg_fn = F.avg if agg == "avg" else F.sum
-    per_dim = exploded.groupBy(*group_cols, "__dim").agg(
-        agg_fn(F.col("__val").cast("double")).alias("__agg")
-    )
-    return (
-        per_dim.groupBy(*group_cols)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__dim", "__agg"))),
-                lambda s: s["__agg"],
-            ).alias("vector")
-        )
-    )
-
-
-def label_centroids(embeddings: DataFrame, label_col: str = "label",
-                    vec_col: str = "embedding") -> DataFrame:
-    """Per-label centroid of an embedding table — the building block for
-    IVF cell refinement (operators/ann.py) and class prototypes."""
-    return group_vector_agg(embeddings, [label_col], vec_col, agg="avg")
 
 
 def quantize_embedding(vec, n_bits: int = 8):

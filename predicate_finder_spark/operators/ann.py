@@ -116,7 +116,7 @@ def build_ivf_cells(
 
     Returns (centroids(cell_id, centroid), assigned(…, cell_id)).  At 100 TB
     the assignment is one broadcast join + argmin over n_cells — a narrow
-    stage; ``refine_ivf`` Lloyd-iterates from here, same shape.
+    stage.
     """
     spark = vectors.sparkSession
     seeds = sorted(
@@ -140,51 +140,6 @@ def build_ivf_cells(
         .drop("__sims")
     )
     return centroids, assigned
-
-
-def refine_ivf(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """Lloyd iterations over the IVF cells — the iterative-algorithm shape
-    on Spark: each round is (assign via broadcast argmin) -> (recompute
-    centroids via distributed per-dimension mean, functions/vectors.py) ->
-    materialize.  Driver holds only the k centroid vectors; the corpus
-    never leaves the executors.
-
-    Returns (refined_centroids, assigned).
-    """
-    from predicate_finder_spark.functions.vectors import group_vector_agg
-
-    if n_iter < 1:
-        raise ValueError("refine_ivf needs n_iter >= 1 (use build_ivf_cells for 0)")
-    spark = vectors.sparkSession
-    cents = centroids
-    assigned = None
-    for _ in range(n_iter):
-        rows = cents.collect()
-        cent_arr = F.array(*[F.array(*[F.lit(float(x)) for x in r["centroid"]]) for r in rows])
-        n = len(rows)
-        sims = F.transform(cent_arr, lambda c: cosine_expr(F.col(vec_col), c))
-        best = F.expr(
-            "array_position(transform(sequence(1, {n}), i -> element_at(__sims, i)), "
-            "array_max(__sims)) - 1".format(n=n)
-        )
-        assigned = (
-            vectors.withColumn("__sims", sims)
-            .withColumn("cell_id", best.cast("int"))
-            .drop("__sims")
-        )
-        cents = (
-            group_vector_agg(assigned, ["cell_id"], vec_col, agg="avg")
-            .select("cell_id", F.col("vector").alias("centroid"))
-        )
-        # materialize the new centroids before the next driver collect
-        cents = spark.createDataFrame(cents.collect(), schema=cents.schema)
-    return cents, assigned
 
 
 def ivf_topk(

@@ -1,17 +1,10 @@
-"""Distributed BPE tokenizer training + Arrow-batched application.
+"""BPE tokenizer training + Arrow-batched application.
 
 Byte-pair-encoding tokenizers (Sennrich et al. 2016, the scheme behind
 GPT-2/Llama vocabularies) are trained from *word frequencies*, not from
-the raw corpus: the corpus-sized job is ONE map-side-combinable word
-count; the merge loop then runs over the bounded word-frequency table.
-That factorization is exactly how this module splits the work at 100 TB:
+the raw corpus: the merge loop runs over a bounded (word, count) table,
+so the corpus itself never reaches the driver:
 
-- ``word_frequencies``: distributed groupBy(word).count() capped to the
-  top ``max_words`` via an orderBy+limit that Spark plans as
-  TakeOrderedAndProject (partial top-K on every partition — never a
-  global sort; same plan discipline as scoring.collect_idf).  Web-scale
-  corpora have ~10^7 distinct frequent words — a bounded driver table —
-  while the corpus itself never leaves the executors.
 - ``learn_bpe``: the standard greedy merge loop over (word -> freq),
   driver-side: pair counts are weighted by word frequency, the argmax
   pair is merged, repeat.  Deterministic: ties break on the
@@ -29,19 +22,17 @@ to the word — the round-trip invariant tests rely on), matching the
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from predicate_finder_spark.functions.text import py_tokenize, tokenize
+from predicate_finder_spark.functions.text import py_tokenize
 
 
 # Pinned word-frequency fixture for the driver-gate query (q70): the
 # correctness oracle needs a merge table that is a pure constant (the
 # testdata texts differ per scale factor, so corpus-learned merges would
 # be sf-dependent and un-oracle-able).  Corpus-learned merges are covered
-# by tests/test_bpe.py (word_frequencies vs DuckDB + end-to-end
-# compression); this fixture pins the APPLY path value-exactly.
+# by tests/test_bpe.py (end-to-end compression); this fixture pins the
+# APPLY path value-exactly.
 PINNED_WORD_FREQS: tuple[tuple[str, int], ...] = (
     ("the", 50), ("distributed", 24), ("processing", 22), ("partition", 20),
     ("streaming", 18), ("aggregate", 16), ("extraction", 14), ("window", 12),
@@ -49,34 +40,6 @@ PINNED_WORD_FREQS: tuple[tuple[str, int], ...] = (
     ("document", 6), ("cluster", 5), ("broadcast", 4), ("predicate", 3),
     ("embedding", 2),
 )
-
-
-def word_count_frame(
-    docs: DataFrame, text_col: str = "text", max_words: int = 100000
-) -> DataFrame:
-    """The distributed half of BPE training: top-``max_words`` (word, n)
-    ordered by (count desc, word asc).  One corpus pass with partial
-    aggregation; the orderBy+limit plans as TakeOrderedAndProject
-    (per-partition top-K, never a global sort — guarded in
-    tests/test_bpe.py)."""
-    return (
-        docs.select(F.explode(tokenize(F.lower(F.col(text_col)))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("word").asc())
-        .limit(max_words)
-    )
-
-
-def word_frequencies(
-    docs: DataFrame, text_col: str = "text", max_words: int = 100000
-) -> list[tuple[str, int]]:
-    """Collected (word, count) table — the bounded input of ``learn_bpe``.
-    The cap keeps the driver collect dimension-bounded."""
-    return [
-        (r["word"], r["n"])
-        for r in word_count_frame(docs, text_col, max_words).collect()
-    ]
 
 
 def learn_bpe(

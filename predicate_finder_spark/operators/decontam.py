@@ -1,4 +1,4 @@
-"""Benchmark decontamination: scrub training documents that overlap an
+"""Benchmark decontamination: flag training documents that overlap an
 evaluation set (the standard train-test n-gram overlap removal described
 publicly in the GPT-3 paper's appendix C and the PaLM/Llama data cards).
 
@@ -10,9 +10,9 @@ Join shape at 100 TB:
 - the corpus side is a linear explode to distinct per-doc n-gram hashes
   (map-side), joined against the broadcast gram set, and the hit counts
   are a partial-aggregated groupBy on the doc id — so the only wide
-  exchange is (doc_id, count) rows for CONTAMINATED docs, never text;
-- the final scrub is a broadcast/left-anti join of the (small) flagged-id
-  frame back onto the corpus.
+  exchange is (doc_id, count) rows for CONTAMINATED docs, never text.
+  A scrub is then a left-anti join of that (small) flagged-id frame back
+  onto the corpus.
 
 Documents shorter than ``ngram_n`` tokens fall back to a single
 whole-text gram on BOTH sides (word_shingles semantics), so a short
@@ -63,25 +63,3 @@ def contamination_hits(
         .groupBy(doc_id)
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-
-
-def decontaminate(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    doc_id: str = "doc_id",
-    doc_text: str = "text",
-    bench_text: str = "text",
-    ngram_n: int = 8,
-    min_hits: int = 1,
-) -> DataFrame:
-    """Drop every document sharing >= ``min_hits`` distinct n-grams with
-    the benchmark; returns the surviving rows of ``docs`` unchanged."""
-    flagged = (
-        contamination_hits(
-            docs, benchmark, doc_id=doc_id, doc_text=doc_text,
-            bench_text=bench_text, ngram_n=ngram_n,
-        )
-        .filter(F.col("n_hits") >= min_hits)
-        .select(doc_id)
-    )
-    return docs.join(flagged, doc_id, "left_anti")

@@ -1,11 +1,10 @@
 """Deduplication operators for web-scale training-data pipelines.
 
-Five families, all shuffle-shaped for 100 TB (no pairwise O(n^2) scans —
+Four families, all shuffle-shaped for 100 TB (no pairwise O(n^2) scans —
 candidate pairs always come from an equi-join on a blocking key):
 
 - exact:        groupBy(normalized text hash) -> keep min doc id
 - MinHash-LSH:  shingle -> minhash -> band -> bucket equi-join -> verify
-- SimHash:      64-bit signature -> band equi-join on 16-bit chunks -> hamming
 - n-gram Jaccard: shared-shingle inverted-index join -> exact Jaccard
 - embedding cosine: LSH-bucketed (random hyperplane) or brute top-k via ANN
 
@@ -18,12 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from predicate_finder_spark.functions.hashing import (
-    hamming64,
-    lsh_bands,
-    simhash64,
-    word_shingles,
-)
+from predicate_finder_spark.functions.hashing import lsh_bands, word_shingles
 from predicate_finder_spark.functions.text import tokenize
 
 
@@ -249,53 +243,6 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b", "jaccard")
     )
     return verified
-
-
-def simhash_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 8,
-    n_chunks: int = 4,
-) -> DataFrame:
-    """SimHash near-dup pairs: 60-bit signature, blocked on ``n_chunks``
-    bit-chunks (pigeonhole: any pair within hamming distance n_chunks-1 is
-    guaranteed to share a chunk), verified by exact hamming distance.
-
-    The recall/cost dial: more chunks guarantee recall at larger
-    ``max_hamming`` but shrink each chunk's key space (60/n bits), which at
-    web scale inflates candidate-pair counts — the default 4x15-bit chunks
-    (guaranteed recall to distance 3) is the standard near-dup setting.
-    """
-    widths = [60 // n_chunks] * n_chunks
-    widths[-1] += 60 - sum(widths)
-    offsets = [sum(widths[:i]) for i in range(n_chunks)]
-    sigs = docs.select(F.col(id_col), simhash64(tokenize(F.col(text_col))).alias("sig"))
-    chunks = sigs.select(
-        F.col(id_col), "sig",
-        F.explode(
-            F.array(*[
-                F.concat(
-                    F.lit(f"c{i}:"),
-                    F.shiftright(F.col("sig"), offsets[i])
-                    .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                    .cast("string"),
-                )
-                for i in range(n_chunks)
-            ])
-        ).alias("block_key"),
-    )
-    a = chunks.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"), "block_key")
-    b = chunks.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"), "block_key")
-    return (
-        a.join(b, "block_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .drop("block_key")
-        .distinct()
-        .withColumn("hamming", hamming64(F.col("sig_a"), F.col("sig_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 def embedding_cosine_pairs(

@@ -8,7 +8,6 @@ O(n^2) driver loops become equi-joins + aggregations.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 TRIPLE_KEY = ["url", "subj", "pred", "obj"]
 
@@ -32,18 +31,3 @@ def precision_recall(triples: DataFrame, gold: DataFrame) -> dict[str, float]:
         "precision": p, "recall": r, "f1": f1,
         "n_pred": float(n_pred), "n_gold": float(n_gold), "n_hit": float(n_hit),
     }
-
-
-def per_predicate_accuracy(triples: DataFrame, gold: DataFrame) -> DataFrame:
-    """Grouped recall per gold predicate (A4 analog of per-template accuracy,
-    performance.py:48-67)."""
-    hit = triples.select(*TRIPLE_KEY).distinct().withColumn("hit", F.lit(1))
-    return (
-        gold.join(hit, TRIPLE_KEY, "left")
-        .groupBy("pred")
-        .agg(
-            F.count(F.lit(1)).alias("n_gold"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit"),
-        )
-        .withColumn("recall", F.col("n_hit") / F.col("n_gold"))
-    )

@@ -3,7 +3,7 @@
 Spark re-expression of the reference's XGBoost feature pipeline
 (xgboost/get_train_data.py:166-184 builds 6 features per candidate;
 QueryFilter.py:160-167 negative-samples one wrong predicate per question;
-QueryFilter.py:172-173 does the 80/20 split; get_train_data.py:186 shuffles).
+QueryFilter.py:172-173 does the 80/20 split).
 
 Features (columns, not libsvm lines):
   f_prior       entity-link confidence       (ref: Spotlight conf, feature 1)
@@ -175,25 +175,4 @@ def train_dev_split(df: DataFrame, key_col: str, train_frac: float = 0.8) -> Dat
     return df.withColumn(
         "split",
         F.when(bucket < int(train_frac * 100), F.lit("train")).otherwise(F.lit("dev")),
-    )
-
-
-def shuffle_rows(df: DataFrame, seed: int = 1000) -> DataFrame:
-    """O4: deterministic random shuffle (reference get_train_data.py:186) —
-    orderBy(rand(seed)); at scale prefer repartition(rand) to avoid a total
-    sort, but training sets are small by construction."""
-    return df.orderBy(F.rand(seed))
-
-
-def batch_by_length(df: DataFrame, length_col, n_buckets: int = 16) -> DataFrame:
-    """W2: length-bucketed batching for sequence models (reference
-    torchtext BucketIterator, mgnn/train.py:102-113): range-partition on
-    sequence length then sort within partitions, so each mapInPandas /
-    predict_batch_udf Arrow batch holds near-equal-length rows and padding
-    waste is minimal."""
-    out = df.withColumn("__len", F.size(length_col) if not isinstance(length_col, str) else F.size(F.col(length_col)))
-    return (
-        out.repartitionByRange(n_buckets, "__len")
-        .sortWithinPartitions("__len")
-        .drop("__len")
     )

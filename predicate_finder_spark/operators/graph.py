@@ -36,7 +36,7 @@ surface (SURVEY.md §6), composed with operators/dedup.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -310,23 +310,3 @@ def resolve_chains(mapping: DataFrame, max_doubling: int = 6) -> DataFrame:
     heads = m.select(F.col("src").alias("_h")).distinct()
     resolved = m.join(heads, m["dst"] == heads["_h"], "left_anti")
     return resolved.select("src", F.col("dst").alias("target"))
-
-
-def canonicalize_entities(
-    triples: DataFrame, redirects: DataFrame, max_doubling: int = 6
-) -> DataFrame:
-    """Rewrite triple subj/obj onto canonical ids through the resolved
-    redirect table — two broadcast-eligible left joins + coalesce, the
-    standard pre-join normalization every DBpedia consumer runs."""
-    r = resolve_chains(redirects, max_doubling=max_doubling)
-    rs = r.select(F.col("src").alias("subj"), F.col("target").alias("_ts"))
-    ro = r.select(F.col("src").alias("obj"), F.col("target").alias("_to"))
-    return (
-        triples.join(F.broadcast(rs), "subj", "left")
-        .join(F.broadcast(ro), "obj", "left")
-        .select(
-            F.coalesce("_ts", "subj").alias("subj"),
-            "pred",
-            F.coalesce("_to", "obj").alias("obj"),
-        )
-    )

@@ -5,17 +5,16 @@ subsamples (to hit a token budget) and re-weights groups (domains,
 languages, quality tiers) with temperature sampling — p_group ∝ n_group^τ,
 τ < 1 upweighting the tail (the scheme described publicly for
 multilingual/multi-source LLM training mixes, e.g. the mC4/PaLM data
-cards).  Both are implemented here as *pure deterministic column
-arithmetic* so that (a) re-runs and resumed runs select the identical
-sample — a pipeline invariant at 10^12 docs where "random" sampling is
-unreproducible, and (b) the DuckDB oracle computes the same rows
-bit-for-bit.
+cards).  Both rest here on *pure deterministic column arithmetic*, an
+md5 draw per row (``_hash32``) compared with a threshold, so that (a)
+re-runs and resumed runs select the identical sample — a pipeline
+invariant at 10^12 docs where "random" sampling is unreproducible, and
+(b) the DuckDB oracle computes the same rows bit-for-bit.
 
 Scale shape (100 TB):
 
-- ``hash_sample`` is a single codegen'd FILTER on an md5 threshold —
-  it pushes to the scan, shuffles nothing, and is embarrassingly
-  parallel.  No RNG state, no seeds to coordinate across executors.
+- the draw is a codegen'd FILTER on an md5 threshold: no RNG state,
+  no seeds to coordinate across executors.
 - ``temperature_sample`` adds ONE map-side-combinable groupBy over the
   corpus (group → count: the only wide exchange, dimension-sized
   output), computes per-group keep-thresholds on that dimension-sized
@@ -43,27 +42,6 @@ def _hash32(col: Column, salt: str) -> Column:
     """Uniform deterministic draw in [0, 2^32) from md5 of (value|salt)."""
     keyed = F.concat(col.cast("string"), F.lit("|" + salt)) if salt else col.cast("string")
     return F.conv(F.substring(F.md5(keyed), 1, 8), 16, 10).cast("long")
-
-
-def hash_sample(
-    df: DataFrame,
-    key_col: str,
-    fraction: float,
-    salt: str = "",
-) -> DataFrame:
-    """Keep a deterministic ~``fraction`` of rows, selected by key hash.
-
-    Every engine, every run, every resume picks the same rows: a row
-    survives iff hash32(key|salt) < floor(fraction · 2^32).  Distinct
-    ``salt`` values give independent samples over the same keys; the
-    same salt gives a *consistent* sample — e.g. sampling documents and
-    their annotations by the same (doc_id, salt) keeps them aligned
-    across tables, which per-table RNG sampling cannot do.
-    """
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    thr = int(fraction * _HASH_SPACE)
-    return df.filter(_hash32(F.col(key_col), salt) < F.lit(thr))
 
 
 def mixture_plan(

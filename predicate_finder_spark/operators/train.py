@@ -105,8 +105,9 @@ def fit_matcher(
     sandbox analog of the reference's MGNN training loop
     (mgnn/train.py:116-217: BCE over the fc output on positive/negative
     question-predicate pairs).  ``channels_col`` holds the 8 channel
-    cosines (models.make_matcher_features_udf); the fit reuses the IRLS
-    logistic solver, and the returned bytes plug into
+    cosines (models.make_matcher_features_udf), as
+    plans.questions.question_matcher_channels builds them; the fit reuses
+    the IRLS logistic solver, and the returned bytes plug into
     models.make_matcher_udf(model_bytes=...).
 
     Same bounded-collect contract as fit_linear_reranker: callers feed it

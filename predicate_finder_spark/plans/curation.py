@@ -1,10 +1,11 @@
 """Training-data curation pipeline: the LLM-data operators composed the way
 a corpus user runs them — quality filter -> language filter -> exact dedup
--> near-dup dedup -> (optionally) KG extraction on the survivors.
+-> near-dup dedup.  KG extraction composes after it: pass the curated
+pages (``.select(*pages.columns)``) to ``plans.pipeline.extract_triples``.
 
 Every stage is one of the first-class operators (functions/analysis.py,
-operators/dedup.py, plans/pipeline.py); this module only sequences them,
-so each stage keeps its audited 100 TB shape:
+operators/dedup.py); this module only sequences them, so each stage keeps
+its audited 100 TB shape:
 
 - quality/lang are single codegen'd column expressions (no shuffle);
 - exact dedup shuffles 16-byte md5 keys, not documents;
@@ -167,38 +168,3 @@ def curate_docs(
         raise ValueError(f"unknown victim_policy {victim_policy!r}")
     victims = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return kept.join(victims, id_col, "left_anti")
-
-
-def curate_and_extract(
-    spark,
-    pages: DataFrame,
-    aliases: DataFrame,
-    kg_triples: DataFrame,
-    ontology: DataFrame,
-    embeddings: DataFrame,
-    cfg=None,
-    min_quality: float = 0.3,
-    langs: tuple[str, ...] = ("en", "und"),
-    **extract_kwargs,
-) -> tuple[DataFrame, DataFrame]:
-    """Curation composed with the flagship KG extraction: curate the pages
-    corpus, then run plans.pipeline.extract_triples on the survivors only.
-
-    Returns (curated_pages, triples).  The default gates are permissive on
-    purpose (min_quality 0.3, 'und' allowed): page prose is short, and the
-    curation front-end exists to drop junk/duplicate pages, not to shrink a
-    clean corpus.  Curated pages keep only the pipeline's input columns —
-    quality/lang annotations don't ride through the extraction shuffles.
-    """
-    from predicate_finder_spark.plans.pipeline import extract_triples
-
-    curated = curate_docs(
-        pages, id_col="url", text_col="text",
-        min_quality=min_quality, langs=langs,
-    )
-    clean = curated.select(*pages.columns)
-    triples = extract_triples(
-        spark, clean, aliases, kg_triples, ontology, embeddings, cfg,
-        **extract_kwargs,
-    )
-    return curated, triples

@@ -172,12 +172,7 @@ def extract_triples(
                 aliases.filter(F.col("prior") >= cfg.min_link_prior)
                 if cfg.min_link_prior > 0.0 else aliases
             )
-            linked = lsh_blocked_candidates(
-                mentions, dic,
-                shingle_size=cfg.lsh_shingle_size,
-                num_hashes=cfg.lsh_num_hashes,
-                bands=cfg.lsh_bands,
-            )
+            linked = lsh_blocked_candidates(mentions, dic)
         else:
             linked = link_mentions(
                 mentions, aliases, min_prior=cfg.min_link_prior,

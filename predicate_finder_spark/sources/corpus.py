@@ -1,4 +1,4 @@
-"""Corpus readers/writers (SURVEY.md §2.1 S1/S2, K1).
+"""Corpus readers (SURVEY.md §2.1 S1/S2).
 
 The reference loads the LC-QuAD JSON array with json.load
 (pretreatment/QueryFilter.py:29-31) and reads/writes TSV result files with
@@ -81,20 +81,6 @@ def parse_gold(questions: DataFrame) -> DataFrame:
 def read_tsv(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
     """S2: TSV scan with explicit schema (reference csv.reader(delimiter='\\t'))."""
     return spark.read.schema(schema).option("sep", "\t").csv(path)
-
-
-def write_tsv(df: DataFrame, path: str) -> None:
-    """K1: TSV sink (reference csv.writer.writerows).  Arrays are joined
-    with '|' — TSV holds no nested types."""
-    cols = []
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.ArrayType):
-            cols.append(F.array_join(F.col(f.name).cast("array<string>"), "|").alias(f.name))
-        else:
-            cols.append(F.col(f.name))
-    df.select(*cols).write.mode("overwrite").option("sep", "\t").option(
-        "header", True
-    ).csv(path)
 
 
 def read_gold_questions(spark: SparkSession, path: str) -> DataFrame:

@@ -23,7 +23,6 @@ def test_lang_id(spark):
 
 
 def test_token_counts(spark):
-    assert _one(spark, A.token_count(F.lit("a b, c"))) == 4
     # bpe-ish: 'internationalization' (20 chars) -> 5 pieces
     assert _one(spark, A.word_token_count_bpe_ish(F.lit("internationalization"))) == 5
 

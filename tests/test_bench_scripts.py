@@ -1,10 +1,13 @@
-"""The bench scripts (``bench.py``, ``bench_extra.py``, ``BENCH/*.py``) run
-only by hand, so a rename in the engine or in ``BENCH/harness.py`` would
-break them unnoticed.  Every script parses, and every name it imports from
-the engine, the harness or the driver contract exists.
+"""The bench scripts (``bench.py``, ``bench_extra.py``, ``BENCH/*.py``,
+``perfbench/*.py``) and the ``bin/`` command-line scripts run only by hand
+or in the repository benchmark, so a rename in the engine or in
+``BENCH/harness.py`` would break them unnoticed.  Every script parses, and
+every name it imports from the engine, the harness, the perfbench modules
+or the driver contract exists.
 
 An ``ast`` walk over import nodes (function-level imports included), then
-``importlib`` of the imported modules; no Spark session starts.
+``importlib`` of the imported modules with bytecode writing off, so the
+scripts' directories are only read; no Spark session starts.
 """
 
 from __future__ import annotations
@@ -12,13 +15,20 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import sys
 from pathlib import Path
 
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
-SCRIPTS = [REPO / "bench.py", REPO / "bench_extra.py", *sorted((REPO / "BENCH").glob("*.py"))]
-LOCAL = ("predicate_finder_spark", "harness", "__spark_entry__")
+SCRIPTS = [
+    REPO / "bench.py",
+    REPO / "bench_extra.py",
+    *sorted((REPO / "BENCH").glob("*.py")),
+    *sorted((REPO / "bin").glob("*.py")),
+    *sorted((REPO / "perfbench").glob("*.py")),
+]
+LOCAL = ("predicate_finder_spark", "harness", "__spark_entry__", "procfs", "tracing", "workloads")
 
 
 def _local_imports(path: Path) -> list[tuple[int, str, str | None]]:
@@ -35,6 +45,8 @@ def _local_imports(path: Path) -> list[tuple[int, str, str | None]]:
 
 @pytest.mark.parametrize("path", SCRIPTS, ids=lambda p: str(p.relative_to(REPO)))
 def test_bench_script_imports_resolve(path: Path, monkeypatch):
+    monkeypatch.setattr(sys, "dont_write_bytecode", True)
+    monkeypatch.syspath_prepend(str(REPO / "perfbench"))
     monkeypatch.syspath_prepend(str(REPO / "BENCH"))
     monkeypatch.syspath_prepend(str(REPO))
     missing = []

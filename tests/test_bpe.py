@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-import duckdb
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from predicate_finder_spark.functions.text import py_tokenize, tokenize
@@ -10,8 +11,6 @@ from predicate_finder_spark.operators.bpe import (
     learn_bpe,
     make_bpe_udf,
     segment_word,
-    word_count_frame,
-    word_frequencies,
 )
 
 # the word-frequency table from the Sennrich et al. 2016 worked example
@@ -70,34 +69,13 @@ def test_py_tokenize_is_twin_of_column_tokenizer(spark):
     assert got == [py_tokenize(t) for t in texts]
 
 
-def test_word_frequencies_vs_duckdb(spark):
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    got = word_frequencies(docs, max_words=50)
-    want = duckdb.sql(
-        f"""
-        SELECT word, count(*) AS n FROM (
-          SELECT unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS word
-          FROM read_parquet('{sf}/documents.parquet')
-        ) GROUP BY word ORDER BY n DESC, word ASC LIMIT 50
-        """
-    ).fetchall()
-    assert got == [(w, n) for w, n in want]
-
-
-def test_word_count_plan_is_take_ordered(spark):
-    sf = "/root/testdata/sf0.001"
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    plan = word_count_frame(docs, max_words=100)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan, plan
-
-
 def test_end_to_end_compression(spark):
     """Merges learned from the corpus shrink its piece count vs char-level
     — the reason to train BPE at all."""
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    merges = learn_bpe(word_frequencies(docs, max_words=2000), 64)
+    counts = Counter(w for r in docs.select("text").collect() for w in py_tokenize((r["text"] or "").lower()))
+    merges = learn_bpe(sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:2000], 64)
     assert len(merges) == 64
     out = docs.limit(50).select(
         F.size(make_bpe_udf(merges)(F.col("text"))).alias("n_bpe"),

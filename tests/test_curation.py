@@ -4,10 +4,10 @@ compose with KG extraction (curated corpus -> unchanged P/R)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from predicate_finder_spark.operators.evaluate import precision_recall
-from predicate_finder_spark.plans.curation import curate_and_extract, curate_docs
+from predicate_finder_spark.plans.curation import curate_docs
+from predicate_finder_spark.plans.pipeline import extract_triples
 from predicate_finder_spark.synth import synth_corpus
 
 ALL_LANGS = ("en", "und", "de", "fr", "es", "zh")
@@ -72,10 +72,12 @@ def test_curate_then_extract_keeps_pr(spark):
         pages.schema,
     )
     polluted = pages.unionByName(junk)
-    curated, triples = curate_and_extract(
-        spark, polluted, t["aliases"], t["kg_triples"], t["ontology"],
-        t["embeddings"],
-        min_quality=0.15, langs=ALL_LANGS,
+    curated = curate_docs(
+        polluted, id_col="url", text_col="text", min_quality=0.15, langs=ALL_LANGS,
+    )
+    triples = extract_triples(
+        spark, curated.select(*pages.columns), t["aliases"], t["kg_triples"],
+        t["ontology"], t["embeddings"],
     )
     kept_urls = {r["url"] for r in curated.select("url").collect()}
     # originals all survive; every injected page is dropped

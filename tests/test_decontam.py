@@ -1,14 +1,9 @@
 """Benchmark decontamination (operators/decontam.py): n-gram overlap
-scrub semantics + the broadcast plan shape the 100 TB story depends on."""
+flags + the broadcast plan shape the 100 TB story depends on."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from predicate_finder_spark.operators.decontam import (
-    contamination_hits,
-    decontaminate,
-)
+from predicate_finder_spark.operators.decontam import contamination_hits
 
 
 def _frames(spark):
@@ -46,20 +41,6 @@ def test_contamination_hits_flags_overlap_only(spark):
     assert hits.get(3) == 1            # short-benchmark whole-text fallback
     assert 2 not in hits               # clean doc never appears
     assert 4 not in hits               # 4-token overlap is below the bar
-
-
-def test_decontaminate_drops_flagged_keeps_schema(spark):
-    docs, bench = _frames(spark)
-    out = decontaminate(docs, bench, ngram_n=5)
-    assert out.columns == docs.columns
-    assert sorted(r["doc_id"] for r in out.collect()) == [2, 4]
-
-
-def test_min_hits_threshold(spark):
-    docs, bench = _frames(spark)
-    # doc 1 shares many distinct 5-grams; requiring an absurd count keeps it
-    out = decontaminate(docs, bench, ngram_n=5, min_hits=1000)
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2, 3, 4]
 
 
 def test_gram_join_is_broadcast(spark):

@@ -1,9 +1,8 @@
-"""Dedup operators: exact, n-gram Jaccard, MinHash-LSH, SimHash, embedding."""
+"""Dedup operators: exact, n-gram Jaccard, MinHash-LSH, embedding."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from predicate_finder_spark.operators import dedup
 
@@ -70,21 +69,6 @@ def test_hot_shingle_cap_bounds_pairs(spark):
     uncapped = dedup.ngram_jaccard_pairs(docs30, threshold=1e-9).count()
     capped = dedup.ngram_jaccard_pairs(docs30, threshold=1e-9, max_shingle_df=5).count()
     assert uncapped == 435 and capped == 0
-
-
-def test_simhash_pairs(docs):
-    # n_chunks = max_hamming + 1 makes the pigeonhole blocking guarantee
-    # recall at that distance (exact 60-bit signatures put the one-word
-    # near-dup at hamming 4; the old broken low bits hid that)
-    got = {(r["id_a"], r["id_b"]) for r in
-           dedup.simhash_pairs(docs, max_hamming=10, n_chunks=11).collect()}
-    assert (0, 1) in got and (0, 2) in got
-    assert (0, 3) not in got
-
-
-def test_simhash_pairs_default_blocking_exact_dup(docs):
-    got = {(r["id_a"], r["id_b"]) for r in dedup.simhash_pairs(docs, max_hamming=3).collect()}
-    assert (0, 1) in got and (0, 3) not in got
 
 
 def test_embedding_cosine_pairs(spark):

@@ -1,4 +1,4 @@
-"""Feature builder, negative sampling (J7), splits (O4/O5), batching (W2)."""
+"""Feature builder, negative sampling (J7), deterministic split (O5)."""
 
 from __future__ import annotations
 
@@ -6,10 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from predicate_finder_spark.operators.features import (
-    batch_by_length,
     build_features,
     negative_sample,
-    shuffle_rows,
     train_dev_split,
 )
 
@@ -89,24 +87,3 @@ def test_train_dev_split_deterministic(spark):
     db = {r["split"]: r["count"] for r in b}
     assert da == db
     assert 700 < da["train"] < 900  # ~80%
-
-
-def test_shuffle_deterministic(spark):
-    df = spark.range(100)
-    a = [r["id"] for r in shuffle_rows(df, seed=7).collect()]
-    b = [r["id"] for r in shuffle_rows(df, seed=7).collect()]
-    assert a == b and a != sorted(a)
-
-
-def test_batch_by_length_sorted_within_partitions(spark):
-    df = spark.createDataFrame(
-        [([str(i)] * (i % 17 + 1),) for i in range(200)], "toks array<string>"
-    )
-    out = batch_by_length(df, "toks", n_buckets=4)
-
-    def check(it):
-        lens = [len(r["toks"]) for r in it]
-        assert lens == sorted(lens)
-        yield None
-
-    out.rdd.mapPartitions(lambda it: check(it)).count()

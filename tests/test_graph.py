@@ -209,17 +209,3 @@ def test_resolve_chains_long_chain_within_doubling(spark):
     m = spark.createDataFrame(links, "src string, dst string")
     got = {r.src: r.target for r in resolve_chains(m, max_doubling=5).collect()}
     assert got == {f"n{i}": "n20" for i in range(20)}
-
-
-def test_canonicalize_entities_rewrites_both_sides(spark):
-    from predicate_finder_spark.operators.graph import canonicalize_entities
-
-    triples = spark.createDataFrame(
-        [("a", "p", "x"), ("c", "p", "z")], "subj string, pred string, obj string"
-    )
-    redirects = spark.createDataFrame(
-        [("a", "b"), ("b", "final"), ("x", "final")], "src string, dst string"
-    )
-    got = {(r.subj, r.pred, r.obj) for r in canonicalize_entities(triples, redirects).collect()}
-    # a -> final (2-link), x -> final; c and z untouched (no redirect)
-    assert got == {("final", "p", "final"), ("c", "p", "z")}

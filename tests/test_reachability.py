@@ -3,7 +3,14 @@ from an entry point: the driver contract (``__spark_entry__.py``), the
 ``bin/`` scripts, the pipeline plans, the streaming jobs, or the
 paper-reproduction test.  A module none of them reaches is dead code.
 
-A static walk over ``ast`` import nodes (function-level imports included);
+The same holds one level down: every top-level function and class of the
+package is named by a root file, by package module-level code, or by a
+function that is itself reached.  Names match by spelling alone, so a name
+collision keeps a function alive; the walk may keep dead code, but it never
+flags a function that runs.  ``ALLOW`` keeps the few functions that no root
+names but that are part of the product for a stated reason.
+
+A static walk over ``ast`` nodes (function-level imports included);
 nothing is imported and no Spark session starts.
 """
 
@@ -21,6 +28,39 @@ ROOTS = (
     f"{PKG}/streaming/*.py",
     "tests/test_reference_parity.py",
 )
+# Function-level roots: whole files whose every name counts as used.  The
+# package's own plans/ and streaming/ modules are not among them; their
+# functions must be reached like any other.
+FUNCTION_ROOTS = ("__spark_entry__.py", "bin/*.py", "tests/test_reference_parity.py")
+
+DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+# ``module.function`` -> why it stays although no root names it.
+ALLOW = {
+    # The library API that README documents for callers of the package.
+    "plans.incremental.extract_triples_incremental": "README: incremental commits",
+    "plans.incremental.incremental_state": "README: cumulative state read",
+    "plans.incremental.compact_batches": "README: batch compaction",
+    "streaming.ingest.streaming_triples": "README: streamed micro-batch triples",
+    "streaming.sessions.sessionize_stream": "README: streamed sessionization",
+    "sources.tables.write_bucketed_table": "README: bucketed table sink",
+    # The paper reproduction: the LC-QuAD question path and the fitted M1
+    # matcher (the MGNN-training analog).
+    "plans.questions.answer_questions": "paper: LC-QuAD question answering",
+    "plans.questions.question_features": "paper: question feature rows",
+    "plans.questions.question_matcher_channels": "paper: the one feature builder fit_matcher has",
+    "operators.train.fit_matcher": "paper: fitted M1 matcher",
+    "operators.features.negative_sample": "paper: matcher training negatives",
+    "operators.features.train_dev_split": "paper: matcher train/dev split",
+    "plans.questions.question_accuracy_by_template": "paper: per-template accuracy",
+    "synth.synth_question_set": "paper: synthetic LC-QuAD question set",
+    "sources.corpus.read_question_corpus": "paper: LC-QuAD question reader",
+    "sources.corpus.parse_gold": "paper: LC-QuAD gold parser",
+    # Reference implementations that a test compares a reached function with.
+    "operators.linking.disambiguate": "reference for the fused resolve_mentions",
+    "operators.linking.resolve_overlaps": "reference for the fused resolve_mentions",
+    "streaming.sessions.batch_sessions": "batch twin of sessionize_stream",
+}
 
 
 def _module_name(path: Path) -> str:
@@ -72,6 +112,78 @@ def _unreached() -> list[str]:
     return sorted(m.removeprefix(f"{PKG}.") for m in modules.keys() - reached)
 
 
+def _used_names(nodes) -> set[str]:
+    """Every name the nodes mention: bare names, attribute names and the
+    names an import binds or fetches."""
+    out: set[str] = set()
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+            elif isinstance(node, ast.alias):
+                out.update(p for p in (*node.name.split("."), node.asname) if p)
+    return out
+
+
+def _package_trees():
+    """``(module, ast.Module)`` per package file, module names without the
+    package prefix."""
+    for path in sorted((REPO / PKG).rglob("*.py")):
+        yield _module_name(path).removeprefix(f"{PKG}."), ast.parse(path.read_text(), str(path))
+
+
+def _unreached_functions() -> list[str]:
+    """``module.name`` of every top-level package def or class that no root
+    file, no package module-level code, no ``ALLOW`` entry and no reached
+    function names.
+
+    A module-level import in the package binds a name without using it, so
+    it keeps nothing alive by itself, except that ``import f as g`` keeps
+    ``f`` (uses of ``g`` are not traced back to it)."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    used = {qualified.rpartition(".")[2] for qualified in ALLOW}
+    for module, tree in _package_trees():
+        for node in tree.body:
+            if isinstance(node, DEFS):
+                defs.setdefault(node.name, []).append((module, node))
+                # decorators, defaults and bases run at import time
+                used |= _used_names(node.decorator_list)
+                if isinstance(node, ast.ClassDef):
+                    used |= _used_names(node.bases + node.keywords)
+                else:
+                    used |= _used_names(node.args.defaults + node.args.kw_defaults)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                used |= {a.name.rpartition(".")[2] for a in node.names if a.asname}
+            else:
+                used |= _used_names([node])
+    for pattern in FUNCTION_ROOTS:
+        for path in sorted(REPO.glob(pattern)):
+            used |= _used_names([ast.parse(path.read_text(), str(path))])
+
+    done: set[str] = set()
+    todo = list(used)
+    while todo:
+        name = todo.pop()
+        if name in done:
+            continue
+        done.add(name)
+        for _, node in defs.get(name, ()):
+            todo.extend(_used_names(node.body) - done)
+    return sorted(f"{m}.{name}" for name, ds in defs.items() if name not in done for m, _ in ds)
+
+
 def test_every_package_module_is_reached():
     unreached = _unreached()
     assert not unreached, f"modules no entry point imports: {unreached}"
+
+
+def test_every_package_function_is_reached():
+    unreached = _unreached_functions()
+    assert not unreached, f"functions no entry point reaches: {unreached}"
+
+
+def test_allow_list_names_existing_functions():
+    defined = {f"{m}.{n.name}" for m, tree in _package_trees() for n in tree.body if isinstance(n, DEFS)}
+    assert not ALLOW.keys() - defined, f"ALLOW names what does not exist: {sorted(ALLOW.keys() - defined)}"

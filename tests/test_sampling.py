@@ -1,4 +1,4 @@
-"""Deterministic hash sampling + temperature mixture (operators/sampling)."""
+"""Deterministic temperature mixture sampling (operators/sampling)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from predicate_finder_spark.operators.sampling import (
     _HASH_SPACE,
-    hash_sample,
     mixture_plan,
     temperature_sample,
 )
@@ -30,37 +29,6 @@ def skewed(spark):
         + [(2000 + i, "tail") for i in range(10)]
     )
     return spark.createDataFrame(rows, "id long, grp string").cache()
-
-
-def test_hash_sample_matches_python_oracle(spark, skewed):
-    kept = {r["id"] for r in hash_sample(skewed, "id", 0.25, salt="s1").collect()}
-    thr = int(0.25 * _HASH_SPACE)
-    expected = {r["id"] for r in skewed.collect() if _h32(str(r["id"]), "s1") < thr}
-    assert kept == expected
-    assert 0 < len(kept) < 730
-
-
-def test_hash_sample_deterministic_and_salt_independent(spark, skewed):
-    a = {r["id"] for r in hash_sample(skewed, "id", 0.3, salt="a").collect()}
-    a2 = {r["id"] for r in hash_sample(skewed, "id", 0.3, salt="a").collect()}
-    b = {r["id"] for r in hash_sample(skewed, "id", 0.3, salt="b").collect()}
-    assert a == a2
-    assert a != b  # different salt, (overwhelmingly) different sample
-
-
-def test_hash_sample_nested_fractions(spark, skewed):
-    """Same salt: a 10% sample is a subset of the 30% sample (threshold
-    monotonicity) — the property that makes hash sampling resumable."""
-    small = {r["id"] for r in hash_sample(skewed, "id", 0.1, salt="z").collect()}
-    big = {r["id"] for r in hash_sample(skewed, "id", 0.3, salt="z").collect()}
-    assert small <= big
-
-
-def test_hash_sample_fraction_bounds(spark, skewed):
-    assert hash_sample(skewed, "id", 0.0).count() == 0
-    assert hash_sample(skewed, "id", 1.0).count() == 730
-    with pytest.raises(ValueError):
-        hash_sample(skewed, "id", 1.5)
 
 
 def test_mixture_plan_weights_and_caps(spark, skewed):

@@ -1,16 +1,11 @@
-"""Structured Streaming ingest: streaming extraction == batch extraction."""
+"""Structured Streaming ingest: a stream gated by the quality classifier
+keeps exactly the pages the batch gate keeps."""
 
 from __future__ import annotations
 
 import pytest
 
-from predicate_finder_spark.operators.extract import extract_pages
-from predicate_finder_spark.streaming.ingest import (
-    read_page_stream,
-    run_to_memory_sink,
-    streaming_extract,
-    windowed_page_counts,
-)
+from predicate_finder_spark.streaming.ingest import read_page_stream
 
 
 @pytest.fixture(scope="module")
@@ -18,27 +13,6 @@ def pages_path(spark, corpus, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("stream") / "pages")
     corpus["pages"].repartition(4).write.mode("overwrite").parquet(p)
     return p
-
-
-def test_streaming_extraction_matches_batch(spark, corpus, pages_path):
-    stream = streaming_extract(read_page_stream(spark, pages_path, max_files_per_trigger=2))
-    run_to_memory_sink(stream, "stream_extract")
-    got = spark.sql("SELECT url, text FROM stream_extract")
-    want = (
-        extract_pages(corpus["pages"].filter("lang = 'en'")).select("url", "text")
-    )
-    assert got.count() == want.count() > 0
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
-def test_windowed_counts(spark, pages_path):
-    agg = windowed_page_counts(read_page_stream(spark, pages_path))
-    run_to_memory_sink(agg, "stream_counts")
-    rows = spark.sql("SELECT * FROM stream_counts").collect()
-    assert rows and all(r["n_pages"] > 0 for r in rows)
-    assert {c for c in spark.table("stream_counts").columns} == {
-        "window_start", "lang", "n_pages",
-    }
 
 
 def test_streaming_quality_gate_matches_batch(spark, corpus, pages_path):
@@ -51,7 +25,6 @@ def test_streaming_quality_gate_matches_batch(spark, corpus, pages_path):
         PINNED_QUALITY_WEIGHTS,
         quality_logit,
     )
-    from predicate_finder_spark.streaming.ingest import read_page_stream
 
     z = quality_logit(F.col("text"), weights=PINNED_QUALITY_WEIGHTS)
     # gate at the batch median so the filter demonstrably KEEPS and DROPS
@@ -61,7 +34,11 @@ def test_streaming_quality_gate_matches_batch(spark, corpus, pages_path):
         corpus["pages"].select(z.alias("z")).agg(F.expr("percentile(z, 0.5)")).first()[0]
     )
     gated = read_page_stream(spark, pages_path).filter(z >= thr).select("url")
-    run_to_memory_sink(gated, "stream_quality")
+    q = gated.writeStream.format("memory").queryName("stream_quality").start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     got = spark.sql("SELECT url FROM stream_quality")
     want = corpus["pages"].filter(z >= thr).select("url")
     n_all = corpus["pages"].count()

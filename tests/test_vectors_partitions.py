@@ -1,35 +1,12 @@
-"""Vector aggregation (A5/A6) + partitioned stage writes with pruning."""
+"""Partitioned stage writes with pruning + int8 embedding quantization."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import functions as F
 
-from predicate_finder_spark.functions.vectors import group_vector_agg, label_centroids
 from predicate_finder_spark.sources.tables import write_stage
-
-
-def test_group_vector_agg_matches_numpy(spark):
-    rows = [
-        ("a", [1.0, 2.0, 3.0]),
-        ("a", [3.0, 4.0, 5.0]),
-        ("b", [10.0, 0.0, -2.0]),
-    ]
-    df = spark.createDataFrame(rows, "k string, v array<float>")
-    got = {r["k"]: r["vector"] for r in group_vector_agg(df, ["k"], "v").collect()}
-    assert got["a"] == [2.0, 3.0, 4.0]
-    assert got["b"] == [10.0, 0.0, -2.0]
-    s = {r["k"]: r["vector"] for r in group_vector_agg(df, ["k"], "v", agg="sum").collect()}
-    assert s["a"] == [4.0, 6.0, 8.0]
-
-
-def test_label_centroids_on_testdata(spark):
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = label_centroids(emb).collect()
-    assert len(cents) == emb.select("label").distinct().count()
-    assert all(len(r["vector"]) == 64 for r in cents)
 
 
 def test_partitioned_stage_write_and_pruning(spark, corpus, tmp_path):
