@@ -7,8 +7,8 @@ Falcon, CoreNLP).  This engine re-expresses every capability as declarative
 Spark DataFrame plans over local dictionary tables:
 
 - triple extraction over Common-Crawl-style ``pages(url, warc_ts, html,
-  text, lang)`` (boilerplate-stripping extraction as a vectorized Arrow UDF,
-  byte-identical per url),
+  text, lang)`` (boilerplate-stripping extraction as a native regex
+  Column expression, byte-identical per url),
 - entity linking = broadcast alias-dictionary joins with optional
   MinHash-LSH blocking (replaces Spotlight/Falcon REST: reference
   pretreatment/DataExtract.py:127-198),
@@ -21,7 +21,8 @@ Spark DataFrame plans over local dictionary tables:
   resume manifests.
 
 Everything is DataFrame/SQL-first; Python only ever runs inside Arrow-batched
-pandas UDFs (no per-row Python).
+pandas UDFs (no per-row Python), and the flagship plan's only one is the
+scorer.
 """
 
 from predicate_finder_spark.config import PipelineConfig

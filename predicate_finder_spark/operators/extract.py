@@ -2,64 +2,68 @@
 
 The per-row invariant (BASELINE.json input_hint): extracted ``text`` is
 byte-identical per ``url`` across runs and parallelism levels.  Guaranteed by
-construction — the extractor is a *pure function* of the html bytes (regex
-pipeline, no locale, no threads, no dict iteration), vectorized over Arrow
-batches with a pandas UDF.  (Readability-lite: drop head/script/style/nav/
+construction — the extractor is one native Column expression, a pure function
+of the html bytes (a ``regexp_replace``/``replace`` chain, no locale, no
+threads, no Python worker).  (Readability-lite: drop head/script/style/nav/
 aside/footer/ad blocks, keep content blocks, strip tags, decode entities,
 collapse whitespace.)
+
+The patterns are Java regexes written to match what Python's ``re`` does on
+``str``, so ``tests/test_extract.py`` can check the expression against a
+Python kernel row for row:
+
+- ``_WS`` is Python's ``str.isspace`` class; Java's ``\\s`` misses
+  ``\\x1c``-``\\x1f`` and the Unicode spaces, and ``F.trim`` strips only
+  ``' '`` (enough once every whitespace run is one space).
+- ``\\b`` after a tag name is spelled as Python's ``\\w`` boundary,
+  ``[\\p{L}\\p{N}_]``: Java 17's ``\\b`` counts combining marks as word
+  characters.  The class equals Python's ``\\w`` except on letters and
+  digits newer than the JVM's Unicode tables (525 code points between
+  Python 3.11 and Java 17).
+- ``(?i)`` folds ASCII only, HTML's rule for tag names; Python's Unicode
+  IGNORECASE also folds ``ſ``/``İ`` into them (``<ſcript>``).
+- The html is decoded by the binary -> string cast.  Malformed UTF-8 becomes
+  U+FFFD as with Python's ``errors="replace"``, except that an encoded
+  surrogate (``b"\\xed\\xa0\\x80"``) yields one U+FFFD, not three.
 """
 
 from __future__ import annotations
 
-import re
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_DROP_BLOCKS = re.compile(
-    r"(?is)<(head|script|style|nav|aside|footer)\b.*?</\1\s*>"
+_WS = r"[\t\n\x0b\x0c\r\x1c-\x1f \x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+_WORD = r"[\p{L}\p{N}_]"
+_DROP_BLOCKS = rf"(?is)<(head|script|style|nav|aside|footer)(?!{_WORD}).*?</\1{_WS}*>"
+_DROP_AD_DIVS = (
+    rf'(?is)<div(?!{_WORD})[^>]*class="[^"]*(?<!{_WORD})ads?(?!{_WORD})[^"]*"[^>]*>'
+    rf".*?</div{_WS}*>"
 )
-_DROP_AD_DIVS = re.compile(
-    r'(?is)<div\b[^>]*class="[^"]*\bads?\b[^"]*"[^>]*>.*?</div\s*>'
-)
-_TAG = re.compile(r"(?s)<[^>]+>")
-_WS = re.compile(r"\s+")
+_TAG = r"<[^>]+>"
 _ENTITIES = (
     ("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"),
     ("&quot;", '"'), ("&#39;", "'"), ("&copy;", "(c)"), ("&nbsp;", " "),
 )
 
 
-def extract_text_py(html: bytes | str | None) -> str:
-    """Pure-function extraction kernel (unit-testable without Spark)."""
-    if html is None:
-        return ""
-    s = html.decode("utf-8", errors="replace") if isinstance(html, (bytes, bytearray)) else html
-    s = _DROP_BLOCKS.sub(" ", s)
-    s = _DROP_AD_DIVS.sub(" ", s)
-    s = _TAG.sub(" ", s)
-    for ent, rep in _ENTITIES:
-        s = s.replace(ent, rep)
-    return _WS.sub(" ", s).strip()
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_py)
-
-
 def extract_text(col: Column | str) -> Column:
-    """Column wrapper: html binary -> extracted text."""
-    return extract_text_udf(F.col(col) if isinstance(col, str) else col)
+    """Column expression: html (binary or string) -> extracted text, ``""``
+    for null html."""
+    s = (F.col(col) if isinstance(col, str) else col).cast("string")
+    for pattern in (_DROP_BLOCKS, _DROP_AD_DIVS, _TAG):
+        s = F.regexp_replace(s, pattern, " ")
+    for ent, rep in _ENTITIES:
+        s = F.replace(s, F.lit(ent), F.lit(rep))
+    s = F.trim(F.regexp_replace(s, _WS + "+", " "))
+    return F.coalesce(s, F.lit(""))
 
 
 def extract_pages(pages: DataFrame, replace: bool = True) -> DataFrame:
     """Add/replace ``text`` with the extraction of ``html``.
 
-    At 100 TB this is a narrow map stage: one Arrow-batched Python call per
-    ~10k rows, no shuffle, columns pruned to (url, html) + passthrough.
+    At 100 TB this is a narrow map stage inside the scan's whole-stage
+    codegen: no shuffle, no Python worker, columns pruned to (url, html) +
+    passthrough.
     """
     out = pages.withColumn("text_extracted", extract_text("html"))
     if replace:

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from predicate_finder_spark.functions.text import ngram_texts, sentences, tokenize
+from predicate_finder_spark.functions.text import sentences, tokenize
 
 
 def explode_sentences(pages: DataFrame, languages: tuple[str, ...] = ("en",)) -> DataFrame:

@@ -16,7 +16,7 @@ Both are implemented in their shuffle-scalable forms:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from predicate_finder_spark.config import PipelineConfig
-from predicate_finder_spark.plans.pipeline import extract_triples
+from predicate_finder_spark.plans.pipeline import _triples_plan
 from predicate_finder_spark.sources.tables import (
     commit_json, read_json, read_manifest, write_stage,
 )
@@ -234,15 +234,19 @@ def extract_triples_incremental(
         if extract_input.limit(1).count() == 0:
             extract_input = None  # all mirrors; the urls still commit
 
-    tri = (
-        extract_triples(
+    tri, persisted = (
+        _triples_plan(
             spark, extract_input, aliases, kg_triples, ontology, embeddings,
             cfg=cfg, idf=idf, scorer_dicts=scorer_dicts,
         )
         if extract_input is not None
-        else _empty_like(spark)
+        else (_empty_like(spark), None)
     )
-    m = write_stage(tri, os.path.join(batch_dir, "triples"), "inc_triples", ch)
+    try:
+        m = write_stage(tri, os.path.join(batch_dir, "triples"), "inc_triples", ch)
+    finally:
+        if persisted is not None:
+            persisted.unpersist()  # the triples are written: no reader left
     if dedup_content:
         write_stage(
             delta.select(F.md5("text").alias("_h")).distinct(),

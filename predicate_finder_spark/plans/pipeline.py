@@ -8,12 +8,14 @@ kg_triples join J2); everything else is narrow and Arrow-pipelined.
 
 Physical shape at scale (what .explain should show):
   scan pages [lang filter + column pruning pushed to parquet]
-  -> pandas UDF extract (narrow)
+  -> native regexp_replace/replace extraction (narrow, in the scan's codegen)
   -> explode sentences/mentions (narrow)
-  -> BroadcastHashJoin aliases (or salted SMJ when dictionary is huge)
+  -> BroadcastHashJoin aliases (the alias dictionary is the build side)
   -> windows over (url, sent_id) [one shuffle on url-ish keys]
-  -> join kg_triples on (s, o) [salted against head-entity skew + AQE]
-  -> pandas UDF scorer (narrow)
+  -> join kg_triples on hashed (s, o) [broadcast while the KG's size
+     estimate is under KG_BROADCAST_MAX_BYTES (128 MB), else shuffled;
+     AQE splits skewed partitions; salting is opt-in, cfg.salted_join]
+  -> pandas UDF scorer (narrow; the plan's one Python eval node)
   -> row_number top-1 window (reuses the (url, sent_id) clustering)
   -> triples sink
 """
@@ -116,6 +118,30 @@ def extract_triples(
     level state the caller keeps fixed across incremental runs.  The caller
     owns consistency (dicts built from one corpus snapshot scored against
     another shift scores exactly as a stale IDF table would)."""
+    return _triples_plan(
+        spark, pages, aliases, kg_triples, ontology, embeddings, cfg, idf,
+        rerank_model, rerank_framework, matcher_model, scorer_dicts,
+    )[0]
+
+
+def _triples_plan(
+    spark: SparkSession,
+    pages: DataFrame,
+    aliases: DataFrame,
+    kg_triples: DataFrame,
+    ontology: DataFrame,
+    embeddings: DataFrame,
+    cfg: PipelineConfig | None = None,
+    idf: DataFrame | None = None,
+    rerank_model: bytes | None = None,
+    rerank_framework: str = "linear",
+    matcher_model: bytes | None = None,
+    scorer_dicts: tuple[dict, dict] | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """:func:`extract_triples`'s plan, plus the ``sentences`` frame it
+    persists (None when stages are checkpointed).  A caller that consumes
+    the triples itself releases that cache with ``unpersist()`` once they
+    are written, as ``plans.incremental`` does after each commit."""
     cfg = cfg or PipelineConfig()
     if cfg.scorer not in ("baseline", "rerank"):
         raise ValueError(f"unknown scorer {cfg.scorer!r}; use 'baseline' or 'rerank'")
@@ -131,22 +157,10 @@ def extract_triples(
 
     def stage(name: str, fn, inputs: list[str] | None = None, input_dfs=None) -> DataFrame:
         path = os.path.join(cp, name) if cp else None
-        out = checkpoint_stage(
+        return checkpoint_stage(
             spark, fn, path, name, ch, resume=cfg.resume, inputs=inputs,
             input_dfs=input_dfs,
         )
-        if cp is None and name == "sentences":
-            # no checkpoint tables to re-read from: persist ONLY the stage
-            # consumed by more than one downstream branch (sentences feeds
-            # mentions + pair_mentions + IDF), else the pandas-UDF
-            # extraction would re-execute once per consumer.  linked and
-            # candidates each have exactly one consumer — persisting them
-            # would materialize millions of array-heavy rows into cache for
-            # zero reuse (measured: the candidates cache write dominated the
-            # flagship's JVM CPU at 1.2M pages) and would stop Spark fusing
-            # candidate generation into the scoring stage.
-            out = out.persist()
-        return out
 
     if cfg.dedup_snapshots:
         # multi-crawl hygiene: one page per canonical URL (newest wins,
@@ -164,6 +178,18 @@ def extract_triples(
     sent_df = stage(
         "sentences", lambda: explode_sentences(extracted, cfg.languages), ["extracted_pages"]
     )
+    persisted = None
+    if cp is None:
+        # no checkpoint tables to re-read from: persist ONLY the stage
+        # consumed by more than one downstream branch (sentences feeds
+        # mentions + pair_mentions + IDF), else the page scan and the native
+        # extraction would re-run once per consumer.  linked and candidates
+        # each have exactly one consumer — persisting them would
+        # materialize millions of array-heavy rows into cache for zero
+        # reuse (measured: the candidates cache write dominated the
+        # flagship's JVM CPU at 1.2M pages) and would stop Spark fusing
+        # candidate generation into the scoring stage.
+        sent_df = persisted = sent_df.persist()
 
     def _linked() -> DataFrame:
         mentions = generate_mentions(sent_df, cfg.max_mention_ngram)
@@ -269,7 +295,7 @@ def extract_triples(
         slim = scored.select("url", "sent_id", "subj", "obj", "pred", "score", "rule")
         return to_triples(top1_per_pair(slim))
 
-    return stage("triples", _triples, ["candidates"])
+    return stage("triples", _triples, ["candidates"]), persisted
 
 
 def materialize_graph(

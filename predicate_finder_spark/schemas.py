@@ -1,17 +1,14 @@
-"""Explicit StructType schemas for every table the engine touches.
+"""The pages schema, the engine's primary input (BASELINE.json input_hint).
 
-The reference's only schema contract is tuple position (e.g. the 6-field
-feature tuple at pretreatment/QueryFilter.py:229, unpacked positionally at
-xgboost/test_xgb_pkl.py:43-50).  Here every stage boundary has a named,
-typed schema — the opposite design, and what makes checkpoint/resume and
-oracle comparison possible.
+The streaming ingest reads pages with it, so no file-source stream infers a
+schema.  Stage tables carry their schema in their ``_manifest.json``
+(``sources/tables.write_stage``) instead.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# ---- primary input (BASELINE.json input_hint) -------------------------------
 PAGES = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -19,116 +16,5 @@ PAGES = T.StructType(
         T.StructField("html", T.BinaryType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("lang", T.StringType(), True),
-    ]
-)
-
-# ---- dictionary tables (local replacement for live DBpedia services) --------
-# reference: Spotlight/Falcon REST (DataExtract.py:127-198) -> aliases
-ALIASES = T.StructType(
-    [
-        T.StructField("alias", T.StringType(), False),
-        T.StructField("entity", T.StringType(), False),
-        T.StructField("prior", T.DoubleType(), False),
-    ]
-)
-
-# reference: live SPARQL endpoint (DataExtract.py:22-63) -> kg_triples
-KG_TRIPLES = T.StructType(
-    [
-        T.StructField("s", T.StringType(), False),
-        T.StructField("p", T.StringType(), False),
-        T.StructField("o", T.StringType(), False),
-    ]
-)
-
-# reference: GetHierLabel SPARQL (DataExtract.py:66-123) -> ontology
-ONTOLOGY = T.StructType(
-    [
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("range_label", T.StringType(), True),
-    ]
-)
-
-# reference: GloVe / FastText matrices (baseline/baseline.py:16-18)
-EMBEDDINGS = T.StructType(
-    [
-        T.StructField("word", T.StringType(), False),
-        T.StructField("vector", T.ArrayType(T.FloatType()), False),
-    ]
-)
-
-# ---- intermediate stages ----------------------------------------------------
-SENTENCES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sent_id", T.IntegerType(), False),
-        T.StructField("sentence", T.StringType(), False),
-        T.StructField("tokens", T.ArrayType(T.StringType()), False),
-    ]
-)
-
-MENTIONS = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sent_id", T.IntegerType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("length", T.IntegerType(), False),
-        T.StructField("surface", T.StringType(), False),
-    ]
-)
-
-LINKED_MENTIONS = T.StructType(
-    MENTIONS.fields
-    + [
-        T.StructField("entity", T.StringType(), False),
-        T.StructField("prior", T.DoubleType(), False),
-    ]
-)
-
-# ---- outputs ----------------------------------------------------------------
-TRIPLES = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("score", T.DoubleType(), True),
-        T.StructField("url", T.StringType(), True),
-        T.StructField(
-            "provenance",
-            T.StructType(
-                [
-                    T.StructField("stage", T.StringType(), True),
-                    T.StructField("rule", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
-GOLD_TRIPLES = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-    ]
-)
-
-VERTICES = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("type", T.StringType(), True),
-    ]
-)
-
-EDGES = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("weight", T.DoubleType(), True),
     ]
 )

@@ -251,6 +251,21 @@ def test_commit_cost_is_flat_in_batch_count(spark, corpus, dicts, tmp_path_facto
     assert _jobs(spark, "inc_flat/state", lambda: incremental_state(spark, state)) == 0
 
 
+def test_commits_release_the_sentences_cache(spark, corpus, dicts, tmp_path_factory):
+    """The ``sentences`` cache a commit's plan takes is released once its
+    triples are written: a long-lived caller's persistent RDDs stay flat."""
+    state = str(tmp_path_factory.mktemp("inc_cache"))
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = persistent().size()
+    after = []
+    for k in range(3):
+        pages = corpus["pages"].filter(F.crc32("url") % 3 == k)
+        _run_inc(spark, corpus, dicts, pages, state, f"b{k}")
+        after.append(persistent().size())
+    assert len(committed_batches(state)) == 3
+    assert after == [before] * 3, (before, after)
+
+
 def _per_dir_union(spark, state, names, table):
     """The reference reader: one inferred ``spark.read.parquet`` per batch
     directory, unioned by name."""

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from predicate_finder_spark.operators.models import (
     make_matcher_udf,

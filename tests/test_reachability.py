@@ -3,15 +3,16 @@ from an entry point: the driver contract (``__spark_entry__.py``), the
 ``bin/`` scripts, the pipeline plans, the streaming jobs, or the
 paper-reproduction test.  A module none of them reaches is dead code.
 
-The same holds one level down: every top-level function and class of the
-package is named by a root file, by package module-level code, or by a
-function that is itself reached.  Names match by spelling alone, so a name
-collision keeps a function alive; the walk may keep dead code, but it never
-flags a function that runs.  ``ALLOW`` keeps the few functions that no root
+The same holds one level down: every top-level function, class and
+upper-case constant of the package is named by a root file, by package
+module-level code, or by a definition that is itself reached.  Names match
+by spelling alone, so a name collision keeps a definition alive; the walk
+may keep dead code, but it never flags a definition that runs.  ``ALLOW`` keeps the few functions that no root
 names but that are part of the product for a stated reason.
 
 A static walk over ``ast`` nodes (function-level imports included);
-nothing is imported and no Spark session starts.
+nothing is imported and no Spark session starts.  The same goes for
+imports: a module-level import that no name in its file uses is dead.
 """
 
 from __future__ import annotations
@@ -34,6 +35,8 @@ ROOTS = (
 FUNCTION_ROOTS = ("__spark_entry__.py", "bin/*.py", "tests/test_reference_parity.py")
 
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+# Files whose module-level imports must each be used in the file.
+IMPORT_CHECKED = (f"{PKG}/**/*.py", "tests/*.py")
 
 # ``module.function`` -> why it stays although no root names it.
 ALLOW = {
@@ -134,10 +137,21 @@ def _package_trees():
         yield _module_name(path).removeprefix(f"{PKG}."), ast.parse(path.read_text(), str(path))
 
 
+def _constant(node: ast.AST) -> str | None:
+    """The name a module-level ``NAME = value`` binds, if it is upper-case."""
+    if isinstance(node, ast.Assign) and len(node.targets) == 1:
+        target = node.targets[0]
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        target = node.target
+    else:
+        return None
+    return target.id if isinstance(target, ast.Name) and target.id.isupper() else None
+
+
 def _unreached_functions() -> list[str]:
-    """``module.name`` of every top-level package def or class that no root
-    file, no package module-level code, no ``ALLOW`` entry and no reached
-    function names.
+    """``module.name`` of every top-level package def, class or upper-case
+    constant that no root file, no package module-level code, no ``ALLOW``
+    entry and no reached definition names.
 
     A module-level import in the package binds a name without using it, so
     it keeps nothing alive by itself, except that ``import f as g`` keeps
@@ -154,6 +168,8 @@ def _unreached_functions() -> list[str]:
                     used |= _used_names(node.bases + node.keywords)
                 else:
                     used |= _used_names(node.args.defaults + node.args.kw_defaults)
+            elif const := _constant(node):
+                defs.setdefault(const, []).append((module, node))
             elif isinstance(node, (ast.Import, ast.ImportFrom)):
                 used |= {a.name.rpartition(".")[2] for a in node.names if a.asname}
             else:
@@ -170,8 +186,33 @@ def _unreached_functions() -> list[str]:
             continue
         done.add(name)
         for _, node in defs.get(name, ()):
-            todo.extend(_used_names(node.body) - done)
+            todo.extend(_used_names(node.body if isinstance(node, DEFS) else [node.value]) - done)
     return sorted(f"{m}.{name}" for name, ds in defs.items() if name not in done for m, _ in ds)
+
+
+def _unused_imports() -> list[str]:
+    """``path:line (name)`` of every module-level import whose bound name no
+    ``ast.Name`` in its file loads; ``__future__`` imports and names listed
+    in ``__all__`` count as used."""
+    out = []
+    for pattern in IMPORT_CHECKED:
+        for path in sorted(REPO.glob(pattern)):
+            tree = ast.parse(path.read_text(), str(path))
+            used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            for node in tree.body:
+                if isinstance(node, ast.Assign) and any(
+                    isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+                ):
+                    used |= {c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant)}
+            for node in tree.body:
+                if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                    continue
+                if isinstance(node, (ast.Import, ast.ImportFrom)):
+                    for a in node.names:
+                        bound = a.asname or a.name.partition(".")[0]
+                        if bound not in used:
+                            out.append(f"{path.relative_to(REPO)}:{node.lineno} ({bound})")
+    return out
 
 
 def test_every_package_module_is_reached():
@@ -181,7 +222,12 @@ def test_every_package_module_is_reached():
 
 def test_every_package_function_is_reached():
     unreached = _unreached_functions()
-    assert not unreached, f"functions no entry point reaches: {unreached}"
+    assert not unreached, f"definitions no entry point reaches: {unreached}"
+
+
+def test_no_unused_module_imports():
+    unused = _unused_imports()
+    assert not unused, f"module-level imports nothing uses: {unused}"
 
 
 def test_allow_list_names_existing_functions():
