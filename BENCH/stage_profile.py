@@ -10,7 +10,11 @@ memory, the figure a shuffled-hash join's build side (which cannot spill)
 must fit in.  At p cores a perfectly parallel stage has wall ~=
 run time / p; a stage whose wall stays flat when p quadruples is the
 scaling bottleneck.  Driver time (planning, broadcast build, scheduling
-gaps) shows up as wall minus the sum of stage walls.
+gaps) shows up as wall minus the sum of stage walls.  The classes compiled
+during the run (``codegen_compiles``) and their Janino time
+(``codegen_compile_ms``, driver and task threads together; a task compiles
+its own copy of a whole-stage class) bound how much of that gap is
+code generation.
 
 The measured run is the second of two identical runs (the first warms the
 Python workers, code cache and broadcasts) under the session's own sizing
@@ -29,7 +33,8 @@ or against a pre-materialized corpus (BENCH/prep_corpus.py):
 ``PROFILE_ACTION=count`` forces with ``count()`` as ``bench.py`` does
 (default: a noop write); ``PROFILE_TOP`` caps the listed stages (default
 14).  Prints one JSON line: {"cpus", "pages", "wall_sec",
-"stage_wall_sum", "driver_gap_s", "exec_run_total_s", "ideal_wall_s",
+"stage_wall_sum", "driver_gap_s", "codegen_compiles", "codegen_compile_ms",
+"exec_run_total_s", "ideal_wall_s",
 "n_stages", byte totals, "stages": [...top by wall...]}.
 """
 
@@ -103,6 +108,17 @@ def read_stages(log_dir: str) -> list[dict]:
     return stages
 
 
+def codegen_counters(spark) -> tuple[int, float]:
+    """``(classes, ms)`` this JVM has compiled so far.  Spark's codegen
+    compile-time histogram (``CodegenMetrics``) takes one sample per class
+    compiled; ``CodeGenerator.compileTime`` sums their nanoseconds (the
+    histogram's own samples are a decaying reservoir, not a total)."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
+
+
 def main() -> None:
     n_pages = int(os.environ.get("PROFILE_PAGES", "200000"))
     action = os.environ.get("PROFILE_ACTION", "save")
@@ -125,7 +141,9 @@ def main() -> None:
 
         best_of(spark, "profile:warm-up", one_run, n=1)
         t0 = time.time()
+        n0, ms0 = codegen_counters(spark)
         wall = best_of(spark, "profile:measured", one_run, n=1)
+        n1, ms1 = codegen_counters(spark)
         spark.stop()  # flushes the event log
         new = [s for s in read_stages(log_dir) if s["submitted"] >= t0]
     finally:
@@ -156,6 +174,8 @@ def main() -> None:
         "wall_sec": round(wall, 2),
         "stage_wall_sum": round(stage_wall, 2),
         "driver_gap_s": round(wall - stage_wall, 2),
+        "codegen_compiles": n1 - n0,
+        "codegen_compile_ms": round(ms1 - ms0, 1),
         "exec_run_total_s": round(run_total, 2),
         "ideal_wall_s": round(run_total / cpus, 2),
         "n_stages": len(new),

@@ -97,6 +97,13 @@ def _state_digest(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _release(checkpoint: DataFrame) -> None:
+    """Drop the blocks of an eager ``localCheckpoint``.  The checkpoint is
+    a persisted RDD under the frame's ``LogicalRDD`` node, which
+    ``DataFrame.unpersist`` (a catalog-cache operation) leaves in place."""
+    checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -126,7 +133,7 @@ def connected_components(
         stars = _small_star(_symmetric(_large_star(edges)))
         new_edges = _symmetric(stars).localCheckpoint(eager=True)
         new_digest = _state_digest(new_edges)
-        edges.unpersist()
+        _release(edges)
         edges, digest_prev, digest = new_edges, digest, new_digest
         if digest == digest_prev:
             break
@@ -154,7 +161,7 @@ def connected_components(
         out = out.union(isolated)
     result = out.groupBy("node").agg(F.min("component").alias("component"))
     result = result.localCheckpoint(eager=True)
-    edges.unpersist()
+    _release(edges)
     return result
 
 

@@ -31,6 +31,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph import _release, _state_digest
+
 __all__ = ["bgp_match", "transitive_pairs", "parse_sparql", "sparql_select"]
 
 
@@ -150,7 +152,9 @@ def transitive_pairs(
     k-hop bound costs ceil(log2 k) self equi-join + distinct rounds —
     the same O(log diameter) shape as graph.resolve_chains /
     connected_components, and the only shuffles are on the join key.
-    State is localCheckpointed per round to keep lineage flat.
+    State is localCheckpointed per round to keep lineage flat, and each
+    superseded level is released once its successor is checkpointed, so a
+    call leaves exactly one persisted RDD behind: the returned level.
 
     The bound is EXACT for any max_hops, not just powers of two: doubling
     builds levels L_i = reach(<= 2^i), and the result composes the levels
@@ -183,27 +187,33 @@ def transitive_pairs(
         .localCheckpoint(eager=True)
     )  # reach(<= 1)
     if max_hops is None:
-        from .graph import _state_digest
-
         digest = _state_digest(level)
         for _ in range(max_doubling):
             new_level = compose(level, level)  # reach(<= 2^i) -> reach(<= 2^(i+1))
             new_digest = _state_digest(new_level)
             if new_digest == digest:
+                _release(new_level)
                 return level
+            _release(level)
             level, digest = new_level, new_digest
         raise RuntimeError(
             f"transitive closure did not converge in {max_doubling} doubling rounds"
         )
-    span = 1
     acc = level if max_hops & 1 else None
     remaining = max_hops >> 1
     while remaining:
-        level = compose(level, level)  # reach(<= 2*span)
-        span *= 2
+        prev, level = level, compose(level, level)  # the level's span doubles
+        if prev is not acc:
+            _release(prev)
         if remaining & 1:
-            acc = level if acc is None else compose(acc, level)
+            if acc is None:
+                acc = level
+            else:
+                prev, acc = acc, compose(acc, level)
+                _release(prev)
         remaining >>= 1
+    if level is not acc:
+        _release(level)
     return acc
 
 

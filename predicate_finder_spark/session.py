@@ -10,7 +10,13 @@ every pandas UDF.  Sizing, each derived from the box or the master:
 - ``spark.driver.memory``: ``$SPARK_DRIVER_MEM``, else
   :func:`driver_memory` of the box's physical RAM;
 - AQE on, with partition coalescing and skew-join splitting; shuffled-hash
-  joins preferred over sort-merge.
+  joins preferred over sort-merge;
+- ``spark.sql.codegen.cache.maxEntries``: a constant 1024, several times
+  the largest product cycle's working set of generated classes (measured
+  next to the setting).  Spark keeps compiled classes in an LRU keyed by
+  their source text (default 100 entries); a cycle with more distinct
+  classes than that evicts each one before its next use and recompiles
+  all of them on every pass.
 
 :func:`plan_bytes` is the optimizer size estimate that every size-keyed
 plan choice (the KG broadcast cap, the driver queries' scan spreads) reads.
@@ -65,6 +71,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         # Deterministic timestamps; DuckDB compares in UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
+        # Generated-class cache (static: read once, when the session is
+        # built).  Classes per cycle at local[4]: ~140 for a kg_incremental
+        # commit + republish + SPARQL read mix (~150 for the same cycle at
+        # test scale), ~130 for extract_triples + materialize_graph at
+        # 2,000 pages, ~80 for curate.  At the default 100 the LRU evicts
+        # each class of the first three before its next use, so every pass
+        # recompiles all of them (~1.3 s per kg_incremental op).  Metaspace
+        # after 6 kg_incremental ops: 175 MB here, 181 MB at 100.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",

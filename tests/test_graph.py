@@ -52,6 +52,20 @@ def test_two_components_and_chain(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 12: 10}
 
 
+def test_connected_components_releases_superseded_rounds(spark):
+    """Each round's edge checkpoint is released once the next one is
+    taken: a call leaves one newly persisted RDD, the result."""
+    from predicate_finder_spark.operators.graph import _release
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    got = connected_components(df)
+    left = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+    assert len(left) == 1, f"{len(left)} RDDs left persisted"
+    assert {r["node"]: r["component"] for r in got.collect()} == {i: 0 for i in range(31)}
+    _release(got)
+
+
 def test_long_chain_converges_fast(spark):
     # a 60-node path is the worst case for naive min-propagation
     # (60 rounds); large-star/small-star must finish in O(log^2).

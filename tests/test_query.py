@@ -214,6 +214,27 @@ def test_transitive_pairs_exact_bound(spark, max_hops):
     assert got == _py_reach(edges, max_hops)
 
 
+@pytest.mark.parametrize("max_hops", [1, 4, 7, None])
+def test_transitive_pairs_releases_superseded_levels(spark, max_hops):
+    """Each doubling round checkpoints a new level; the levels it
+    supersedes are released, so one call leaves exactly one newly
+    persisted RDD (the returned level), and the answer is unchanged."""
+    from predicate_finder_spark.operators.graph import _release
+    from predicate_finder_spark.operators.query import transitive_pairs
+
+    edges = [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(39)]  # a 40-node chain
+    df = spark.createDataFrame(
+        [(s, "next", o) for s, o in edges], ["subj", "pred", "obj"]
+    )
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    reach = transitive_pairs(df, "next", max_hops)
+    left = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+    assert len(left) == 1, f"{len(left)} RDDs left persisted"
+    want = _py_closure(edges) if max_hops is None else _py_reach(edges, max_hops)
+    assert _rows(reach) == want
+    _release(reach)
+
+
 def test_transitive_pairs_filters_pred(spark, triples_df):
     from predicate_finder_spark.operators.query import transitive_pairs
 
