@@ -8,7 +8,8 @@ Modes (BENCH_MODE env):
                 $SPARK_GRAFT_SF_DIR (isolated, one JSON line)
   plans      -- dump .explain("formatted") for the headline queries +
                 pipeline/curation/web channels into plans/r06/<name>_<tag>.txt
-                (PLANS_TAG env: before|after)
+                (PLANS_TAG env: before|after, or parent|change), expression
+                and plan ids masked so identical plans diff to nothing
   web        -- noop timing of the web/structured channel pass
   kgstages   -- cumulative marginal timing of the flagship's stages at
                 $SPARK_GRAFT_PAGES synthetic pages (default 200k)
@@ -21,6 +22,7 @@ from __future__ import annotations
 import io
 import json
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -134,10 +136,13 @@ def web_bench() -> None:
 
 
 def _explain_str(df) -> str:
+    """``explain("formatted")`` with the per-session expression ids
+    (``#123``) and plan ids (``plan_id=7``) masked, so dumps of the same
+    plan from two processes are byte-identical."""
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    return re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", buf.getvalue()))
 
 
 def dump_plans() -> None:

@@ -51,7 +51,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from predicate_finder_spark.config import PipelineConfig
     from predicate_finder_spark.operators.evaluate import precision_recall
-    from predicate_finder_spark.plans.pipeline import extract_triples, materialize_graph
+    from predicate_finder_spark.plans.pipeline import _triples_plan, materialize_graph
     from predicate_finder_spark.session import get_spark
     from predicate_finder_spark.sources.tables import write_stage
 
@@ -89,7 +89,9 @@ def main(argv: list[str] | None = None) -> int:
 
     n_ents = verify_entity_hash_injective(aliases, kg)
     print(f"entity dictionary: {n_ents} entities, hash-injective", flush=True)
-    triples = extract_triples(spark, pages, aliases, kg, onto, emb, cfg)
+    # without --checkpoint-dir the plan persists its sentences frame; it is
+    # released once the triples are written, before the graph and P/R reads
+    triples, sentences = _triples_plan(spark, pages, aliases, kg, onto, emb, cfg)
     ch = cfg.config_hash()
     if args.structured:
         # structured channel adds only facts the text channel missed
@@ -108,6 +110,8 @@ def main(argv: list[str] | None = None) -> int:
         # into a structured one
         ch = ch[:12] + "stru"
     m_t = write_stage(triples, f"{args.out}/triples", "triples_out", ch)
+    if sentences is not None:
+        sentences.unpersist()
     vertices, edges = materialize_graph(
         spark.read.parquet(f"{args.out}/triples"), with_salience=args.salience
     )

@@ -37,9 +37,7 @@ def lang_hits(tokens_lower: Column) -> Column:
     return F.array(*[_hits(tokens_lower, words) for words in LANG_PROFILES.values()])
 
 
-def lang_id(
-    text: Column, tokens: Column | None = None, hits: Column | None = None
-) -> Column:
+def lang_id(text: Column, hits: Column | None = None) -> Column:
     """Heuristic language ID: argmax of stopword-profile hits -> string.
 
     Returns the language with the most profile-word hits; 'und'
@@ -56,13 +54,11 @@ def lang_id(
     8 s warm for the 200k-page curation gate vs 1.6 s for this shape,
     value-identical on all rows).
 
-    ``tokens``: optional pre-lowered token array (shares one tokenize with
-    other gates).  ``hits``: optional pre-computed :func:`lang_hits` array
-    (shares the profile scan between the max and argmax references).
+    ``hits``: optional pre-computed :func:`lang_hits` array (shares one
+    tokenize and the profile scan with other gates).
     """
     if hits is None:
-        toks = tokens if tokens is not None else F.transform(tokenize(text), F.lower)
-        hits = lang_hits(toks)
+        hits = lang_hits(F.transform(tokenize(text), F.lower))
     names = F.array(*[F.lit(lang) for lang in LANG_PROFILES])
     m = F.array_max(hits)
     return F.when(

@@ -75,11 +75,11 @@ def _jaro(s1: str, s2: str) -> float:
     return (matches / len1 + matches / len2 + (matches - t) / matches) / 3.0
 
 
-def jaro_winkler(s1: str, s2: str, p: float = 0.1, boost_threshold: float = 0.7) -> float:
+def jaro_winkler(s1: str, s2: str) -> float:
     """Jaro-Winkler similarity (prefix-boosted Jaro), pure python.
 
-    The prefix boost applies only when the Jaro similarity exceeds
-    ``boost_threshold`` (0.7) — Winkler's original definition, and the one
+    The prefix boost (0.1 per shared leading character, up to 4) applies
+    only when the Jaro similarity exceeds 0.7 — Winkler's original definition, and the one
     DuckDB's ``jaro_winkler_similarity`` implements (verified empirically
     over 3k fuzzed pairs), so the oracle can check this kernel bit-for-bit.
     Empty-string inputs return 0.0, also matching DuckDB (whose kernel
@@ -88,14 +88,14 @@ def jaro_winkler(s1: str, s2: str, p: float = 0.1, boost_threshold: float = 0.7)
     if not s1 or not s2:
         return 0.0
     j = _jaro(s1, s2)
-    if j <= boost_threshold:
+    if j <= 0.7:
         return j
     prefix = 0
     for a, b in zip(s1[:4], s2[:4]):
         if a != b:
             break
         prefix += 1
-    return j + prefix * p * (1.0 - j)
+    return j + prefix * 0.1 * (1.0 - j)
 
 
 @F.pandas_udf(T.DoubleType())

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def quantize_embedding(vec, n_bits: int = 8):
+def quantize_embedding(vec):
     """Symmetric per-vector int8 quantization of an ``array<float/double>``
     column -> struct(scale double, q array<int>).
 
@@ -18,13 +18,13 @@ def quantize_embedding(vec, n_bits: int = 8):
     cosine top-k ordering tolerates (tests pin the error bound and the
     recall on the synthetic embeddings).
 
-    Pure column expressions — codegen'd, no UDF: scale = max|x| / (2^(b-1)
-    - 1), q_i = floor(x_i / scale + 0.5) (explicit half-up, so DuckDB
+    Pure column expressions — codegen'd, no UDF: scale = max|x| / 127,
+    q_i = floor(x_i / scale + 0.5) (explicit half-up, so DuckDB
     replays it bit-for-bit; Spark's round() is HALF_UP but DuckDB's is
     banker's on doubles — floor(+0.5) sidesteps the mode mismatch).
     All-zero vectors quantize to scale 0 / all-zero q (guarded division).
     """
-    levels = float(2 ** (n_bits - 1) - 1)
+    levels = 127.0  # 2^(8-1) - 1: symmetric int8
     v = F.transform(vec, lambda x: x.cast("double"))
     mx = F.array_max(F.transform(v, F.abs))
     scale = F.when(mx > 0, mx / F.lit(levels)).otherwise(F.lit(0.0))

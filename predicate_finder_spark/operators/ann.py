@@ -17,39 +17,23 @@ from pyspark.sql import functions as F
 
 from predicate_finder_spark.functions.similarity import cosine_expr
 
+# column names of the vector and query frames
+ID, VEC, QID = "vec_id", "embedding", "query_id"
+
 
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    quantized: bool = False,
 ) -> DataFrame:
     """Exact cosine top-k per query: broadcast the (small) query set against
-    the corpus, window top-k.  Output: (query_id, vec_id, cosine, rank).
+    the corpus, window top-k.  Inputs: ``vectors(vec_id, embedding)`` and
+    ``queries(query_id, embedding)``.  Output: (query_id, vec_id, cosine,
+    rank).
 
-    ``quantized=True`` scores on int8-quantized vectors
-    (functions/vectors.quantize_embedding) — the memory/bandwidth lever
-    for the 100 TB scan: the corpus side streams 4x fewer bytes through
-    the scan and the scorer, at a bounded cosine perturbation (top-10
-    overlap >= 8/10 pinned in tests/test_vectors_partitions.py; rank is
-    approximate, use for candidate generation + exact re-rank)."""
-    if quantized:
-        from predicate_finder_spark.functions.vectors import (
-            dequantize_embedding,
-            quantize_embedding,
-        )
-
-        vectors = vectors.select(
-            F.col(id_col),
-            dequantize_embedding(quantize_embedding(F.col(vec_col))).alias(vec_col),
-        )
-        queries = queries.select(
-            F.col(query_id_col),
-            dequantize_embedding(quantize_embedding(F.col(vec_col))).alias(vec_col),
-        )
+    The int8 memory/bandwidth lever for this scan is
+    functions/vectors.quantize_embedding (q82); its top-10 overlap with
+    exact cosine is pinned in tests/test_vectors_partitions.py."""
     from predicate_finder_spark.functions.similarity import dot_expr, norm_expr
 
     # norms are computed ONCE per side, in projections BELOW the cross join
@@ -57,42 +41,40 @@ def brute_force_topk(
     # re-evaluated the corpus norm per (row, query) and the query norm per
     # corpus row).  Same expressions, same float order — values unchanged.
     q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("__qv"),
-        norm_expr(F.col(vec_col)).alias("__qn"),
+        F.col(QID),
+        F.col(VEC).alias("__qv"),
+        norm_expr(F.col(VEC)).alias("__qn"),
     )
     # a single-file parquet scan plans one task regardless of cores; the
     # per-row cosine work would then run serially.  Spread BEFORE the norm
     # projection, and only when the scan's parallelism is below the session
     # default — at real scale inputs carry enough splits and this is a
     # no-op, so no corpus shuffle is added.
-    corpus = vectors.select(F.col(id_col), F.col(vec_col))
+    corpus = vectors.select(F.col(ID), F.col(VEC))
     default_par = vectors.sparkSession.sparkContext.defaultParallelism
     if corpus.rdd.getNumPartitions() < default_par:
         # hash on the unique id, not round-robin: round-robin pays a local
         # sort of its input (sortBeforeRepartition) serialized inside the
         # under-parallel scan task — exactly what the spread is avoiding —
         # and hash assignment is deterministic under task retry
-        corpus = corpus.repartition(default_par, F.col(id_col))
+        corpus = corpus.repartition(default_par, F.col(ID))
     corpus = corpus.select(
-        F.col(id_col), F.col(vec_col), norm_expr(F.col(vec_col)).alias("__vn")
+        F.col(ID), F.col(VEC), norm_expr(F.col(VEC)).alias("__vn")
     )
     scored = corpus.crossJoin(F.broadcast(q)).withColumn(
         "cosine",
-        dot_expr(F.col(vec_col), F.col("__qv"))
+        dot_expr(F.col(VEC), F.col("__qv"))
         / (F.col("__vn") * F.col("__qn") + F.lit(1e-9)),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+    w = Window.partitionBy(QID).orderBy(F.col("cosine").desc(), F.col(ID).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select(QID, ID, "cosine", "rank")
     )
 
 
-def _seed_vectors(
-    vectors: DataFrame, n_cells: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _seed_vectors(vectors: DataFrame, n_cells: int) -> DataFrame:
     """Deterministic centroid seeds: the n_cells lowest-id vectors via
     orderBy().limit() — Catalyst plans this as TakeOrderedAndProject, a
     *distributed* top-k (per-partition heap + driver merge of n_cells rows).
@@ -101,14 +83,12 @@ def _seed_vectors(
     through ONE task — at 100 TB the single bottleneck of the ANN path
     (tests/test_ann.py pins the plan shape).
     """
-    return vectors.select(F.col(id_col), F.col(vec_col)).orderBy(F.col(id_col).asc()).limit(n_cells)
+    return vectors.select(F.col(ID), F.col(VEC)).orderBy(F.col(ID).asc()).limit(n_cells)
 
 
 def build_ivf_cells(
     vectors: DataFrame,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """One-pass IVF index: centroids = deterministic seed sample
     (distributed top-k by id), then assign each vector to its nearest
@@ -120,17 +100,17 @@ def build_ivf_cells(
     """
     spark = vectors.sparkSession
     seeds = sorted(
-        _seed_vectors(vectors, n_cells, id_col, vec_col).collect(),
-        key=lambda r: r[id_col],
+        _seed_vectors(vectors, n_cells).collect(),
+        key=lambda r: r[ID],
     )
-    vec_t = vectors.schema[vec_col].dataType
+    vec_t = vectors.schema[VEC].dataType
     centroids = spark.createDataFrame(
-        [(i, list(r[vec_col])) for i, r in enumerate(seeds)],
+        [(i, list(r[VEC])) for i, r in enumerate(seeds)],
         schema=f"cell_id int, centroid {vec_t.simpleString()}",
     )
-    cent_arr = F.array(*[F.array(*[F.lit(float(x)) for x in r[vec_col]]) for r in seeds])
+    cent_arr = F.array(*[F.array(*[F.lit(float(x)) for x in r[VEC]]) for r in seeds])
     n = len(seeds)
-    sims = F.transform(cent_arr, lambda c: cosine_expr(F.col(vec_col), c))
+    sims = F.transform(cent_arr, lambda c: cosine_expr(F.col(VEC), c))
     best = F.expr(
         "array_position(transform(sequence(1, {n}), i -> element_at(__sims, i)), array_max(__sims)) - 1".format(n=n)
     )
@@ -148,28 +128,25 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: per query, rank cells by centroid cosine, probe
     the best ``n_probe`` cells via equi-join on cell_id, then exact cosine
     + window top-k within the probed subset."""
     qc = queries.crossJoin(F.broadcast(centroids)).withColumn(
-        "__csim", cosine_expr(F.col(vec_col), F.col("centroid"))
+        "__csim", cosine_expr(F.col(VEC), F.col("centroid"))
     )
-    wq = Window.partitionBy(query_id_col).orderBy(F.col("__csim").desc(), F.col("cell_id").asc())
+    wq = Window.partitionBy(QID).orderBy(F.col("__csim").desc(), F.col("cell_id").asc())
     probe = (
         qc.withColumn("__rc", F.row_number().over(wq))
         .filter(F.col("__rc") <= n_probe)
-        .select(F.col(query_id_col), F.col(vec_col).alias("__qv"), "cell_id")
+        .select(F.col(QID), F.col(VEC).alias("__qv"), "cell_id")
     )
     scored = assigned.join(probe, "cell_id").withColumn(
-        "cosine", cosine_expr(F.col(vec_col), F.col("__qv"))
+        "cosine", cosine_expr(F.col(VEC), F.col("__qv"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+    w = Window.partitionBy(QID).orderBy(F.col("cosine").desc(), F.col(ID).asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select(QID, ID, "cosine", "rank")
     )

@@ -21,32 +21,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pmi_pairs(
-    pairs: DataFrame,
-    left: str = "subj",
-    right: str = "obj",
-    min_count: int = 1,
-) -> DataFrame:
-    """``(left, right, n_pair, pmi)`` for every observed pair with
-    ``n_pair >= min_count``.
+def pmi_pairs(pairs: DataFrame) -> DataFrame:
+    """``(subj, obj, n_pair, pmi)`` for every observed (subj, obj) pair.
 
     PMI = log2( N * c(a,b) / (c(a) * c(b)) ) where N is the total number
     of pair observations, c(a) the left marginal, c(b) the right marginal
     — the directed formulation (an entity's subject and object roles are
     counted separately, matching how distant supervision reads a pair).
     """
-    obs = pairs.select(F.col(left).alias("a"), F.col(right).alias("b"))
+    obs = pairs.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
     pair_c = obs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_pair"))
     left_c = obs.groupBy("a").agg(F.count(F.lit(1)).alias("n_a"))
     right_c = obs.groupBy("b").agg(F.count(F.lit(1)).alias("n_b"))
     n_total = obs.count()
     return (
-        pair_c.filter(F.col("n_pair") >= min_count)
-        .join(left_c, "a")
+        pair_c.join(left_c, "a")
         .join(right_c, "b")
         .select(
-            F.col("a").alias(left),
-            F.col("b").alias(right),
+            F.col("a").alias("subj"),
+            F.col("b").alias("obj"),
             "n_pair",
             F.log2(
                 F.lit(float(n_total))

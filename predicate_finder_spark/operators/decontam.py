@@ -28,38 +28,36 @@ from predicate_finder_spark.functions.hashing import word_shingles
 from predicate_finder_spark.functions.text import tokenize
 
 
-def _gram_hashes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(id, gram_hash) — distinct md5 hashes of word n-grams per row."""
+def _gram_hashes(df: DataFrame, n: int) -> DataFrame:
+    """(doc_id, gram_hash) — distinct md5 hashes of word n-grams per row."""
     return df.select(
-        F.col(id_col),
-        F.explode(word_shingles(tokenize(F.col(text_col)), n)).alias("__gram"),
-    ).select(F.col(id_col), F.md5(F.col("__gram")).alias("gram_hash")).distinct()
+        F.col("doc_id"),
+        F.explode(word_shingles(tokenize(F.col("text")), n)).alias("__gram"),
+    ).select(F.col("doc_id"), F.md5(F.col("__gram")).alias("gram_hash")).distinct()
 
 
 def contamination_hits(
     docs: DataFrame,
     benchmark: DataFrame,
-    doc_id: str = "doc_id",
-    doc_text: str = "text",
-    bench_text: str = "text",
     ngram_n: int = 8,
 ) -> DataFrame:
-    """Per-document count of distinct benchmark n-grams found verbatim.
+    """Per-document count of distinct benchmark n-grams found verbatim, over
+    ``docs(doc_id, text)`` and ``benchmark(text)``.
 
-    Returns (``doc_id``, n_hits) for contaminated documents only
+    Returns (doc_id, n_hits) for contaminated documents only
     (n_hits >= 1); clean documents don't appear.  The benchmark gram set
     is deduplicated across all benchmark rows and broadcast.
     """
     bench_grams = (
         benchmark.select(
-            F.explode(word_shingles(tokenize(F.col(bench_text)), ngram_n)).alias("__gram")
+            F.explode(word_shingles(tokenize(F.col("text")), ngram_n)).alias("__gram")
         )
         .select(F.md5(F.col("__gram")).alias("gram_hash"))
         .distinct()
     )
-    doc_grams = _gram_hashes(docs, doc_id, doc_text, ngram_n)
+    doc_grams = _gram_hashes(docs, ngram_n)
     return (
         doc_grams.join(F.broadcast(bench_grams), "gram_hash")
-        .groupBy(doc_id)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )

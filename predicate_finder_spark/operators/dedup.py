@@ -53,7 +53,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_k: int = 3,
     threshold: float = 0.8,
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """Exact word-k-gram Jaccard near-dup pairs via inverted-index join.
 
@@ -62,22 +61,13 @@ def ngram_jaccard_pairs(
     sharing >=1 shingle ever meet, so the join is the blocking step.
     Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
 
-    ``max_shingle_df``: the self-join is quadratic *per shingle group* — a
-    boilerplate shingle shared by 10^6 docs would emit ~5*10^11 pairs.  With
-    a document-frequency cap, shingles with df above it are dropped from the
-    universe (both the join AND the per-doc sizes — Jaccard over the pruned
-    shingle space), bounding any group's pair count at df^2/2.  Hot shingles
-    carry no near-dup signal, so recall on real pairs is unaffected; None
-    keeps the exact unpruned semantics.
+    The self-join is quadratic *per shingle group*: a boilerplate shingle
+    shared by 10^6 docs would emit ~5*10^11 pairs.  This is the exact,
+    oracle-checked path (q42, q65); minhash_lsh_pairs is the scale path.
     """
     sh = docs.select(
         F.col(id_col).alias("id"), F.explode(word_shingles(tokenize(F.col(text_col)), shingle_k)).alias("shingle")
     ).distinct()
-    if max_shingle_df is not None:
-        dfc = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-        sh = sh.join(
-            dfc.filter(F.col("__df") <= max_shingle_df).select("shingle"), "shingle"
-        )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("id").alias("id_a"), "shingle")
     b = sh.select(F.col("id").alias("id_b"), "shingle")
@@ -310,14 +300,10 @@ def embedding_cosine_pairs(
     )
 
 
-def duplicate_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 5,
-) -> DataFrame:
-    """Exact duplicated-substring spans, k-gram seeded (the distributed
-    analog of Lee et al. 2022's suffix-array substring dedup).
+def duplicate_spans(docs: DataFrame, min_len: int = 5) -> DataFrame:
+    """Exact duplicated-substring spans of ``docs(doc_id, text)``, k-gram
+    seeded (the distributed analog of Lee et al. 2022's suffix-array
+    substring dedup).
 
     A window start ``p`` in a document is *duplicated* iff the ``min_len``-token
     gram beginning at ``p`` occurs at any OTHER (doc, position) in the corpus
@@ -339,7 +325,7 @@ def duplicate_spans(
     span_end exclusive.
     """
     k = min_len
-    toks = docs.select(F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("ts"))
+    toks = docs.select(F.col("doc_id").alias("id"), tokenize(F.col("text")).alias("ts"))
     grams = toks.select(
         "id",
         F.posexplode(
@@ -362,7 +348,7 @@ def duplicate_spans(
         islands.groupBy("id", "__grp")
         .agg(F.min("pos").alias("span_start"), (F.max("pos") + k).alias("span_end"))
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("n_tokens"),
@@ -370,13 +356,9 @@ def duplicate_spans(
     )
 
 
-def cut_duplicate_spans(
-    docs: DataFrame,
-    spans: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Remove every duplicated span's tokens and reassemble the text.
+def cut_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
+    """Remove every duplicated span's tokens and reassemble ``text`` of
+    ``docs(doc_id, text)``.
 
     Policy: ALL occurrences of duplicated material are dropped (duplicated
     spans in web corpora are overwhelmingly boilerplate; dropping every
@@ -387,11 +369,11 @@ def cut_duplicate_spans(
     the corpus-side join is 1:1 (never a row explosion), and the token cut is
     a single higher-order filter — no Python, no second shuffle of the text.
     """
-    agg = spans.groupBy(id_col).agg(
+    agg = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("__spans")
     )
-    joined = docs.join(agg, id_col, "left")
-    ts = tokenize(F.col(text_col))
+    joined = docs.join(agg, "doc_id", "left")
+    ts = tokenize(F.col("text"))
     kept = F.filter(
         ts,
         lambda _t, i: ~F.exists(
@@ -400,6 +382,6 @@ def cut_duplicate_spans(
         ),
     )
     return joined.withColumn(
-        text_col,
-        F.when(F.col("__spans").isNull(), F.col(text_col)).otherwise(F.array_join(kept, " ")),
+        "text",
+        F.when(F.col("__spans").isNull(), F.col("text")).otherwise(F.array_join(kept, " ")),
     ).drop("__spans")

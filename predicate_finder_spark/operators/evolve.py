@@ -22,15 +22,11 @@ from pyspark.sql import functions as F
 TRIPLE_KEYS = ("subj", "pred", "obj")
 
 
-def triple_diff(
-    old: DataFrame,
-    new: DataFrame,
-    keys: tuple[str, ...] = TRIPLE_KEYS,
-) -> DataFrame:
+def triple_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Rows only in ``new`` (``change='added'``) plus rows only in ``old``
-    (``change='removed'``), keyed on ``keys``; duplicates within a snapshot
+    (``change='removed'``), keyed on ``TRIPLE_KEYS``; duplicates within a snapshot
     collapse first (a triple asserted twice is still one fact)."""
-    k = list(keys)
+    k = list(TRIPLE_KEYS)
     o = old.select(*k).distinct()
     n = new.select(*k).distinct()
     added = n.join(o, k, "left_anti").withColumn("change", F.lit("added"))

@@ -58,14 +58,15 @@ def extract_text(col: Column | str) -> Column:
     return F.coalesce(s, F.lit(""))
 
 
-def extract_pages(pages: DataFrame, replace: bool = True) -> DataFrame:
-    """Add/replace ``text`` with the extraction of ``html``.
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """Replace ``text`` with the extraction of ``html``.
 
     At 100 TB this is a narrow map stage inside the scan's whole-stage
     codegen: no shuffle, no Python worker, columns pruned to (url, html) +
     passthrough.
     """
-    out = pages.withColumn("text_extracted", extract_text("html"))
-    if replace:
-        out = out.drop("text").withColumnRenamed("text_extracted", "text")
-    return out
+    return (
+        pages.withColumn("text_extracted", extract_text("html"))
+        .drop("text")
+        .withColumnRenamed("text_extracted", "text")
+    )

@@ -1,12 +1,13 @@
-"""Distributed connected components and cluster-level deduplication.
+"""Distributed connected components, PageRank and chain resolution.
 
-Why this operator exists: the dedup family (operators/dedup.py) emits
-verified near-duplicate PAIRS.  Dropping ``id_b`` per pair is only correct
-when every non-minimum cluster member appears as some pair's larger side —
-false in general (cluster {1,2,3} with edges (1,3),(2,3) only: node 2 is
-never an ``id_b``, so 1 AND 2 both survive even though they are
-transitively near-duplicates via 3).  Cluster-level dedup needs the
-connected components of the pair graph, then one survivor per component.
+Why connected components exists: the dedup family (operators/dedup.py)
+emits verified near-duplicate PAIRS.  Dropping ``id_b`` per pair is only
+correct when every non-minimum cluster member appears as some pair's
+larger side — false in general (cluster {1,2,3} with edges (1,3),(2,3)
+only: node 2 is never an ``id_b``, so 1 AND 2 both survive even though
+they are transitively near-duplicates via 3).  Cluster-level dedup needs
+the connected components of the pair graph (q65), then one survivor per
+component.
 
 Algorithm: alternating large-star / small-star (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14) — converges in
@@ -38,6 +39,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Runaway bounds and fixed parameters of the iterative operators below.
+_CC_MAX_ROUNDS = 50
+_PR_DAMPING_PCT = 85
+_PR_SCALE = 10**12
+_CHAIN_DOUBLINGS = 6
 
 
 def _symmetric(edges: DataFrame) -> DataFrame:
@@ -104,32 +111,23 @@ def _release(checkpoint: DataFrame) -> None:
     checkpoint._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    vertices: DataFrame | None = None,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components of an undirected pair graph.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Connected components of the undirected pair graph ``pairs(id_a,
+    id_b)``.
 
-    Returns ``(node, component)`` (both long) where ``component`` is the
-    MINIMUM node id in the component — deterministic, so downstream
-    survivor selection and the DuckDB recursive-CTE oracle agree exactly.
+    Returns ``(node, component)`` (both long) for every node that appears
+    in ``pairs``, where ``component`` is the MINIMUM node id in the
+    component — deterministic, so downstream survivor selection and the
+    DuckDB recursive-CTE oracle agree exactly.
 
-    ``vertices``: optional frame of all node ids (``id_col``); isolated
-    vertices (no pair) come back as their own singleton component.  Without
-    it, only nodes appearing in ``pairs`` are returned.
-
-    Raises after ``max_iter`` alternating rounds without a fixpoint —
-    the algorithm's bound is O(log^2 n), so 50 covers any real graph and a
+    Raises after 50 alternating rounds without a fixpoint — the
+    algorithm's bound is O(log^2 n), so 50 covers any real graph and a
     non-convergence is a bug, not a tuning problem.
     """
-    edges = _symmetric(pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    edges = _symmetric(pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
     edges = edges.localCheckpoint(eager=True)
     digest = _state_digest(edges)
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         stars = _small_star(_symmetric(_large_star(edges)))
         new_edges = _symmetric(stars).localCheckpoint(eager=True)
         new_digest = _state_digest(new_edges)
@@ -138,7 +136,7 @@ def connected_components(
         if digest == digest_prev:
             break
     else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+        raise RuntimeError(f"connected_components: no fixpoint in {_CC_MAX_ROUNDS} rounds")
     # At the fixpoint every edge is (member, component_min) or its mirror;
     # keep the downward direction and fold each node to its minimum target.
     comp = (
@@ -147,58 +145,19 @@ def connected_components(
         .agg(F.min("dst").alias("component"))
         .select(F.col("src").alias("node"), "component")
     )
-    # component minima (and any isolated vertices) map to themselves
-    members = comp
+    # component minima map to themselves
     mins = comp.select(F.col("component").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-    out = members.union(mins)
-    if vertices is not None:
-        verts = vertices.select(F.col(id_col).cast("long").alias("node")).distinct()
-        isolated = verts.join(out.select("node"), "node", "left_anti").withColumn(
-            "component", F.col("node")
-        )
-        out = out.union(isolated)
-    result = out.groupBy("node").agg(F.min("component").alias("component"))
+    result = comp.union(mins).groupBy("node").agg(F.min("component").alias("component"))
     result = result.localCheckpoint(eager=True)
     _release(edges)
     return result
 
 
-def cluster_dedup(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Cluster-level dedup: one survivor (the minimum id) per connected
-    component of the verified near-dup pair graph; docs in no pair survive.
-
-    This is the transitive-closure-correct victim policy — see the module
-    docstring for the 3-node counterexample to per-pair dropping.  The
-    victim set is ``components where node != component``, dropped with one
-    ``left_anti`` equi-join; the components frame is pair-graph-sized
-    (O(duplicates), not O(corpus)).
-    """
-    comp = connected_components(pairs, src=src, dst=dst)
-    victims = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return docs.join(victims, id_col, "left_anti")
-
-
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iter: int = 5,
-    damping_pct: int = 85,
-    scale: int = 10**12,
-    vertices: DataFrame | None = None,
-    id_col: str = "id",
-) -> DataFrame:
-    """PageRank over a directed edge list -> ``(node, rank_units, rank)``.
+def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
+    """PageRank over a directed edge list ``edges(src, dst)`` ->
+    ``(node, rank_units, rank)`` for every node that appears in an edge.
 
     Entity-salience ranking for the materialized KG (plans/pipeline.py
     materialize_graph edges): which entities anchor the graph.  The
@@ -206,11 +165,12 @@ def pagerank(
     surface (SURVEY.md §6) the same way connected_components does.
 
     Determinism at any parallelism — the property float PageRank cannot
-    give: ranks live in LONG micro-units (``scale`` = 1e12 per unit mass)
-    and every per-iteration reduction is an integer sum, so partition
-    order cannot change a single bit.  Per-edge contribution uses exact
-    integer division (``r div deg`` — floor mass loss <= deg units per
-    node per iteration, ~1e-12 of total mass); the update is
+    give: ranks live in LONG micro-units (1e12 per unit mass) and every
+    per-iteration reduction is an integer sum, so partition order cannot
+    change a single bit.  Per-edge contribution uses exact integer
+    division (``r div deg`` — floor mass loss <= deg units per node per
+    iteration, ~1e-12 of total mass); with damping d = 85 (percent) and
+    scale = 1e12 the update is
 
         r'(v) = (100-d)*scale // (100*n)
                 + d * (sum_contrib(v) + dangling_sum // n) // 100
@@ -223,23 +183,22 @@ def pagerank(
     rank frame (both shuffled on node id; AQE splits hub-key skew) and ONE
     partial-agg groupBy(dst) — no adjacency materialization, no windows,
     no driver-side loops over rows.  The only driver scalars are n (once)
-    and the 1-row dangling-mass aggregate per iteration.  Edge list and
-    rank state are localCheckpointed so the plan stays iteration-sized.
+    and the 1-row dangling-mass aggregate per iteration, whose set of
+    nodes with out-edges is read from the checkpointed edge list.  Edge
+    list and rank state are localCheckpointed so the plan stays
+    iteration-sized, and each superseded checkpoint is released once its
+    successor exists, so a call leaves one persisted RDD behind: the
+    returned ranks.
 
     Self-loops contribute to their own node (counted in out-degree);
-    multi-edges are deduped.  ``vertices`` adds isolated nodes (rank =
-    teleport share only).
+    multi-edges are deduped.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    if vertices is not None:
-        nodes = nodes.union(
-            vertices.select(F.col(id_col).alias("node"))
-        ).distinct()
     nodes = nodes.localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
@@ -249,10 +208,10 @@ def pagerank(
         )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = e.join(deg, "src").localCheckpoint(eager=True)
-    teleport = ((100 - damping_pct) * scale) // (100 * n)
-    ranks = nodes.select("node", F.lit(scale // n).cast("long").alias("r"))
-    has_out = deg.select(F.col("src").alias("node"))
-    for _ in range(n_iter):
+    teleport = ((100 - _PR_DAMPING_PCT) * _PR_SCALE) // (100 * n)
+    ranks = nodes.select("node", F.lit(_PR_SCALE // n).cast("long").alias("r"))
+    has_out = ed.select(F.col("src").alias("node")).distinct()
+    for i in range(n_iter):
         contrib = (
             ed.join(ranks, ed["src"] == ranks["node"])
             .select(F.col("dst").alias("node"), F.expr("r div deg").alias("c"))
@@ -263,27 +222,33 @@ def pagerank(
             ranks.join(has_out, "node", "left_anti").agg(F.sum("r")).first()[0]
         )
         dang_share = (dang_row or 0) // n
-        ranks = (
+        new_ranks = (
             nodes.join(contrib, "node", "left")
             .select(
                 "node",
                 (
                     F.lit(teleport)
                     + F.expr(
-                        f"{damping_pct} * (coalesce(contrib, 0L) + {dang_share}L) div 100"
+                        f"{_PR_DAMPING_PCT} * (coalesce(contrib, 0L) + {dang_share}L) div 100"
                     )
                 ).cast("long").alias("r"),
             )
             .localCheckpoint(eager=True)
         )
+        if i:
+            _release(ranks)
+        ranks = new_ranks
+    _release(ed)
+    if n_iter:
+        _release(nodes)
     return ranks.select(
         "node",
         F.col("r").alias("rank_units"),
-        (F.col("r").cast("double") / F.lit(float(scale))).alias("rank"),
+        (F.col("r").cast("double") / F.lit(float(_PR_SCALE))).alias("rank"),
     )
 
 
-def resolve_chains(mapping: DataFrame, max_doubling: int = 6) -> DataFrame:
+def resolve_chains(mapping: DataFrame) -> DataFrame:
     """Resolve redirect/sameAs chains to their terminal target by pointer
     doubling: ``(src, target)`` for every source in ``mapping(src, dst)``.
 
@@ -291,10 +256,12 @@ def resolve_chains(mapping: DataFrame, max_doubling: int = 6) -> DataFrame:
     are chains (A -> B -> C), and triples must land on the canonical id.
     Naive chase is O(chain length) joins; pointer doubling composes the
     mapping with itself (``m[x] = m[m[x]]`` where defined), so ``k``
-    rounds resolve chains up to 2^k links — 6 rounds cover length-64
-    chains, far beyond real redirect data — in ``k`` self-joins of a
-    DICTIONARY-SIZED frame.  Each round is one equi-join + coalesce; no
-    loops over rows, no recursion on the driver.
+    rounds resolve chains up to 2^k links — the 6 rounds run here cover
+    length-64 chains, far beyond real redirect data — in ``k`` self-joins
+    of a DICTIONARY-SIZED frame.  Each round is one equi-join + coalesce;
+    no loops over rows, no recursion on the driver.  Each round's
+    localCheckpoint is released once the next one exists, so a call
+    leaves one persisted RDD behind: the last round's.
 
     Cycles (A -> B -> A) never terminate at a sink; after the final
     round any src whose target still has an outgoing edge is dropped,
@@ -306,13 +273,16 @@ def resolve_chains(mapping: DataFrame, max_doubling: int = 6) -> DataFrame:
         F.col("src").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst"),
     ).filter(F.col("src") != F.col("dst")).distinct()
-    for _ in range(max_doubling):
+    for i in range(_CHAIN_DOUBLINGS):
         nxt = m.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
-        m = (
+        new_m = (
             m.join(nxt, m["dst"] == nxt["_s"], "left")
             .select("src", F.coalesce("_d", "dst").alias("dst"))
             .localCheckpoint(eager=True)
         )
+        if i:
+            _release(m)
+        m = new_m
     # drop unresolved (cyclic) sources: their target still redirects
     heads = m.select(F.col("src").alias("_h")).distinct()
     resolved = m.join(heads, m["dst"] == heads["_h"], "left_anti")

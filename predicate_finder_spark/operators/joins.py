@@ -28,10 +28,10 @@ def salted_join(
     small: DataFrame,
     on: list[str],
     buckets: int = 8,
-    how: str = "inner",
     salt_source: str | None = None,
 ) -> DataFrame:
-    """Skew-defeating equi-join: salt the big side, replicate the small side.
+    """Skew-defeating inner equi-join: salt the big side, replicate the
+    small side.
 
     ``salt_source``: a column of ``big`` that varies within a key group
     (e.g. url) so the salt is deterministic yet spreads each hot key over
@@ -49,5 +49,5 @@ def salted_join(
     small_s = small.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)).cast("array<int>"))
     )
-    out = big_s.join(small_s, on + ["__salt"], how)
+    out = big_s.join(small_s, on + ["__salt"], "inner")
     return out.drop("__salt")

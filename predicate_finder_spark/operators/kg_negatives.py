@@ -36,22 +36,17 @@ def corrupt_triples(
     triples: DataFrame,
     entities: DataFrame,
     n_neg: int = 2,
-    entity_col: str = "entity",
-    seed: str = "kgneg",
-    with_source: bool = False,
 ) -> DataFrame:
     """Training rows ``(subj, pred, obj, slot, label)``: each distinct true
     triple with ``slot=-1, label=1.0``, plus up to ``n_neg`` corrupted
     copies (``slot=0..n_neg-1, label=0.0``; even slots replace subj, odd
     replace obj).  Corruptions that collide with a true triple (including
     the degenerate same-entity draw) are dropped, so negatives can come
-    back fewer than ``n_neg`` — by design, never mislabeled.
-
-    ``with_source=True`` appends ``src_subj, src_obj`` (the uncorrupted
-    triple) so margin-loss trainers can pair each negative with its
-    positive."""
+    back fewer than ``n_neg`` — by design, never mislabeled.  Replacement
+    entities are drawn from ``entities(entity)`` by an md5 of the triple,
+    the slot and a fixed seed string."""
     base = triples.select("subj", "pred", "obj").distinct()
-    ents = entities.select(F.col(entity_col).alias("_ent")).distinct()
+    ents = entities.select(F.col("entity").alias("_ent")).distinct()
     n_ent = ents.count()
     if n_ent == 0:
         raise ValueError("corrupt_triples: empty entity dictionary")
@@ -63,14 +58,9 @@ def corrupt_triples(
     drawn = base.select("*", slots).withColumn(
         "_idx",
         md5_bucket(
-            F.concat_ws("|", "subj", "pred", "obj", F.col("slot"), F.lit(seed)),
+            F.concat_ws("|", "subj", "pred", "obj", F.col("slot"), F.lit("kgneg")),
             n_ent,
         ).cast("int"),
-    )
-    src_cols = (
-        [F.col("subj").alias("src_subj"), F.col("obj").alias("src_obj")]
-        if with_source
-        else []
     )
     corrupted = (
         drawn.join(F.broadcast(idx), "_idx")
@@ -83,17 +73,11 @@ def corrupt_triples(
             .otherwise(F.col("obj"))
             .alias("obj"),
             "slot",
-            *src_cols,
         )
         .join(base, ["subj", "pred", "obj"], "left_anti")
         .withColumn("label", F.lit(0.0))
     )
     positives = base.select(
         "subj", "pred", "obj", F.lit(-1).alias("slot"), F.lit(1.0).alias("label"),
-        *(
-            [F.col("subj").alias("src_subj"), F.col("obj").alias("src_obj")]
-            if with_source
-            else []
-        ),
     )
     return positives.unionByName(corrupted)

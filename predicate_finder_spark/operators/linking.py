@@ -134,22 +134,16 @@ def resolve_overlaps(linked: DataFrame) -> DataFrame:
 # MinHash-LSH blocked fuzzy linking (stage-1 candidate generation when exact
 # surface match is not enough; SURVEY.md §4.2(2))
 # ---------------------------------------------------------------------------
-def lsh_blocked_candidates(
-    mentions: DataFrame,
-    aliases: DataFrame,
-    shingle_size: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    min_jaccard_sim: float = 0.5,
-) -> DataFrame:
+def lsh_blocked_candidates(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     """Fuzzy mention->alias candidates via MinHash-LSH banding.
 
-    Both sides: character-shingle -> minhash signature -> band keys ->
-    explode -> equi-join on (band, key).  This is pure blocking (shuffle
-    join on short keys, no pairwise scan); candidates are then verified
-    with Jaro-Winkler >= ``min_jaccard_sim``.  Hand-rolled (SURVEY.md
+    Both sides: character 3-shingles -> 16-hash minhash signature -> 4
+    bands of 4 rows -> explode -> equi-join on (band, key).  This is pure
+    blocking (shuffle join on short keys, no pairwise scan); candidates are
+    then verified with Jaro-Winkler >= 0.5.  Hand-rolled (SURVEY.md
     §4.2(2)) — deterministic md5 hash family, no MLlib vector overhead.
     """
+    num_hashes, bands = 16, 4
     rows = num_hashes // bands
 
     def with_blocks(df: DataFrame, col: str) -> DataFrame:
@@ -158,7 +152,7 @@ def lsh_blocked_candidates(
         # hoist subexpressions out of HOF lambdas — inlining the fused
         # minhash expression re-evaluates it per band (see
         # operators/dedup.py minhash_lsh_pairs for the measurement).
-        sig = minhash_signature(char_shingles(F.col(col), shingle_size), num_hashes)
+        sig = minhash_signature(char_shingles(F.col(col), 3), num_hashes)
         return (
             df.withColumn("__sig", sig)
             .withColumn("__block", F.explode(lsh_bands(F.col("__sig"), bands, rows)))
@@ -177,7 +171,7 @@ def lsh_blocked_candidates(
         .drop("__bkey")
         .dropDuplicates(["url", "sent_id", "start", "length", "entity"])
         .withColumn("sim", jaro_winkler_udf(F.col("surface"), F.col("alias")))
-        .filter(F.col("sim") >= min_jaccard_sim)
+        .filter(F.col("sim") >= 0.5)
         .withColumn("prior", F.col("prior") * F.col("sim"))
         .drop("alias", "sim")
     )
@@ -186,8 +180,6 @@ def lsh_blocked_candidates(
 
 def build_alias_dictionary(
     anchor_pairs: DataFrame,
-    surface_col: str = "surface",
-    entity_col: str = "entity",
     min_count: int = 1,
     min_prior: float = 0.0,
 ) -> DataFrame:
@@ -196,7 +188,7 @@ def build_alias_dictionary(
     (Wikipedia anchor statistics: Mendes et al., I-Semantics 2011,
     public): prior(alias, entity) = c(alias, entity) / c(alias).
 
-    Input: one row per observed (surface, entity) anchor — page links,
+    Input: ``anchor_pairs(surface, entity)``, one row per observed anchor — page links,
     resolved high-confidence mentions, redirect titles.  Output matches
     the engine's ``aliases(alias, entity, prior)`` contract, so the mined
     dictionary plugs straight into :func:`link_mentions` — the
@@ -207,9 +199,7 @@ def build_alias_dictionary(
     alias-dictionary-sized.  ``min_count`` prunes hapax noise before the
     join; ``min_prior`` drops long-tail senses (standard dictionary
     hygiene, keeps the broadcast dictionary small)."""
-    obs = anchor_pairs.select(
-        F.col(surface_col).alias("alias"), F.col(entity_col).alias("entity")
-    )
+    obs = anchor_pairs.select(F.col("surface").alias("alias"), "entity")
     pair_c = obs.groupBy("alias", "entity").agg(F.count(F.lit(1)).alias("n_pair"))
     surf_c = obs.groupBy("alias").agg(F.count(F.lit(1)).alias("n_surface"))
     return (

@@ -36,10 +36,10 @@ from predicate_finder_spark.functions.text import tokenize
 MICRO = 1_000_000
 
 
-def _bigram_instances(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _bigram_instances(docs: DataFrame) -> DataFrame:
     """One row per bigram occurrence: (id, pos, u, w).  Docs with < 2
     tokens emit nothing (a 0-bigram doc has no defined perplexity)."""
-    toks = docs.select(F.col(id_col).alias("id"), tokenize(F.col(text_col)).alias("ts"))
+    toks = docs.select(F.col("doc_id").alias("id"), tokenize(F.col("text")).alias("ts"))
     return toks.select(
         "id",
         F.posexplode(
@@ -57,21 +57,20 @@ def _bigram_instances(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).select("id", "pos", F.col("bg.u").alias("u"), F.col("bg.w").alias("w"))
 
 
-def fit_bigram_lm(
-    train_docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, int]:
-    """Count tables for an add-one bigram LM over the training corpus.
+def fit_bigram_lm(train_docs: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """Count tables for an add-one bigram LM over the training corpus
+    ``train_docs(doc_id, text)``.
 
     Returns ``(context_counts(u, c_u), bigram_counts(u, w, c_uw), vocab_size)``.
     Both counts are partial-agg groupBys (map-side combine shrinks the
     shuffle to distinct grams); ``vocab_size`` is the distinct token count
     INCLUDING final-position tokens, so p sums to <= 1 per context.
     """
-    bg = _bigram_instances(train_docs, id_col, text_col)
+    bg = _bigram_instances(train_docs)
     context = bg.groupBy("u").agg(F.count(F.lit(1)).alias("c_u"))
     bigrams = bg.groupBy("u", "w").agg(F.count(F.lit(1)).alias("c_uw"))
     vocab = (
-        train_docs.select(F.explode(tokenize(F.col(text_col))).alias("t"))
+        train_docs.select(F.explode(tokenize(F.col("text"))).alias("t"))
         .agg(F.countDistinct("t").alias("v"))
         .collect()[0]["v"]
     )
@@ -83,27 +82,23 @@ def perplexity(
     context: DataFrame,
     bigrams: DataFrame,
     vocab_size: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_model: bool = True,
     keep_micro: bool = False,
 ) -> DataFrame:
-    """Score documents: (id_col, n_bigrams, log2_ppl).
+    """Score documents ``docs(doc_id, text)``: (doc_id, n_bigrams, log2_ppl).
 
     log2_ppl = -(1/n) Σ log2 p(w_i | w_{i-1}) — lower is more fluent under
     the training corpus.  Each term is micro-rounded before the BIGINT sum
     (order-independent, engine-portable); the mean is computed once at the
     end in DOUBLE.
 
-    ``broadcast_model=True`` broadcasts both count tables (a trusted-corpus
-    LM is dictionary-sized next to the corpus being scored — CCNet's own
-    models are <1 GB); set False at true web scale to let the grams shuffle
-    on their keys instead.  ``keep_micro=True`` retains the exact BIGINT
+    Both count tables are broadcast: a trusted-corpus LM is
+    dictionary-sized next to the corpus being scored (CCNet's own models
+    are <1 GB).  ``keep_micro=True`` retains the exact BIGINT
     ``sum_micro`` column for integer-exact downstream comparison.
     """
-    ctx = F.broadcast(context) if broadcast_model else context
-    bgt = F.broadcast(bigrams) if broadcast_model else bigrams
-    inst = _bigram_instances(docs, id_col, text_col)
+    ctx = F.broadcast(context)
+    bgt = F.broadcast(bigrams)
+    inst = _bigram_instances(docs)
     V = F.lit(int(vocab_size))
     term = F.log2(
         (F.coalesce(F.col("c_uw"), F.lit(0)) + 1).cast("double")
@@ -115,7 +110,7 @@ def perplexity(
         .withColumn("__micro", F.floor(term * MICRO + 0.5).cast("bigint"))
     )
     out = (
-        scored.groupBy(F.col("id").alias(id_col))
+        scored.groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum("__micro").alias("sum_micro"),

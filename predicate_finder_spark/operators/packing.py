@@ -34,11 +34,10 @@ def pack_chunks(
     docs: DataFrame,
     budget: int,
     n_buckets: int = 8,
-    id_col: str = "doc_id",
     tokens_col: str | None = None,
-    text_col: str = "text",
 ) -> DataFrame:
-    """Assign each document its place in per-bucket concat-and-chunk packing.
+    """Assign each document of ``docs(doc_id, text)`` its place in
+    per-bucket concat-and-chunk packing.
 
     Returns the input ids plus:
 
@@ -56,16 +55,16 @@ def pack_chunks(
     n_tokens = (
         F.col(tokens_col)
         if tokens_col is not None
-        else F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)).otherwise(
-            F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
+        else F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0)).otherwise(
+            F.size(F.split(F.trim(F.col("text")), r"\s+"))
         )
     )
     base = docs.select(
-        F.col(id_col),
-        md5_bucket(F.col(id_col).cast("string"), n_buckets).alias("bucket"),
+        F.col("doc_id"),
+        md5_bucket(F.col("doc_id").cast("string"), n_buckets).alias("bucket"),
         n_tokens.cast("long").alias("n_tokens"),
     )
-    w = Window.partitionBy("bucket").orderBy(F.col(id_col).asc())
+    w = Window.partitionBy("bucket").orderBy(F.col("doc_id").asc())
     packed = (
         base.withColumn(
             "tok_offset",
@@ -90,7 +89,6 @@ def pack_chunks(
 def sliding_chunks(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
     size: int = 64,
     stride: int = 48,
 ) -> DataFrame:
@@ -111,7 +109,7 @@ def sliding_chunks(
     input splits, and value-exact in the q83 oracle."""
     if not (0 < stride <= size):
         raise ValueError("sliding_chunks: need 0 < stride <= size")
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(F.col("text"))
     rows = df.select(
         F.col(id_col).alias("id"), toks.alias("__toks"), F.size(toks).alias("__n")
     ).filter(F.col("__n") > 0)

@@ -156,9 +156,7 @@ def candidate_predicates(
     ).withColumn("pred", uri_localname("pred_uri"))
 
 
-def verify_entity_hash_injective(
-    aliases: DataFrame, kg_triples: DataFrame, entity_col: str = "entity"
-) -> int:
+def verify_entity_hash_injective(aliases: DataFrame, kg_triples: DataFrame) -> int:
     """Assert xxhash64 is injective over the joinable entity domain
     (alias-dictionary entities ∪ kg subjects ∪ kg objects) — the
     correctness precondition for candidate_predicates' int-keyed join.
@@ -170,7 +168,7 @@ def verify_entity_hash_injective(
     ValueError listing colliding entities otherwise.
     """
     ents = (
-        aliases.select(F.col(entity_col).alias("e"))
+        aliases.select(F.col("entity").alias("e"))
         .unionByName(kg_triples.select(F.col("s").alias("e")))
         .unionByName(kg_triples.select(F.col("o").alias("e")))
         .distinct()

@@ -7,7 +7,7 @@ module keeps the architecture the engine already uses for model fitting
 (operators/train.py: distributed features -> bounded collect -> IRLS
 logistic fit -> weights broadcast back) and adds the crucial scale
 property for the INFERENCE side: the fitted model is applied as a pure
-column expression — sigmoid(w·x + b) with literal weights — so scoring
+column expression — the log-odds w·x + b with literal weights (q71) — so scoring
 10^12 documents is ONE JVM-side projection with no Python worker, no
 Arrow transfer, no shuffle, and no UDF at all (the higher-order lambda
 parts are CodegenFallback but never leave the JVM; plan-guarded in
@@ -27,7 +27,6 @@ from predicate_finder_spark.functions.analysis import (
     repetition_ratio,
 )
 from predicate_finder_spark.functions.text import tokenize
-from predicate_finder_spark.operators.models import deserialize_linear_model
 from predicate_finder_spark.operators.train import fit_linear_reranker
 
 QUALITY_FEATURES: tuple[str, ...] = (
@@ -71,7 +70,8 @@ def fit_quality_classifier(
     l2: float = 1e-2,
 ) -> bytes:
     """IRLS logistic fit over the 6 features of a labeled document sample;
-    returns model bytes for :func:`quality_probability`.  Deterministic
+    returns model bytes (operators/models.deserialize_linear_model gives
+    the ``weights`` :func:`quality_logit` takes).  Deterministic
     (Newton solver, no SGD/seed)."""
     feats = with_quality_features(labeled, text_col)
     return fit_linear_reranker(
@@ -97,29 +97,15 @@ PINNED_QUALITY_WEIGHTS: tuple[tuple[float, ...], float] = (
 )
 
 
-def quality_logit(
-    text: Column, model_bytes: bytes | None = None, weights: tuple | None = None
-) -> Column:
+def quality_logit(text: Column, weights: tuple) -> Column:
     """Fitted log-odds ``w·x + b`` as ONE pure column expression: the
-    weights are folded in as literals, so the classifier runs entirely
-    JVM-side — the scale path a UDF-based scorer cannot match.  Pass
-    ``weights=(w_list, b)`` to bypass model bytes (pinned models for
-    oracle queries)."""
-    if weights is not None:
-        w, b = weights
-    else:
-        w, b = deserialize_linear_model(model_bytes)
+    ``weights=(w_list, b)`` are folded in as literals, so the classifier
+    runs entirely JVM-side — the scale path a UDF-based scorer cannot
+    match.  A fitted model's bytes give them through
+    operators/models.deserialize_linear_model."""
+    w, b = weights
     exprs = quality_feature_exprs(text)
     z = F.lit(float(b))
     for name, wi in zip(QUALITY_FEATURES, w):
         z = z + F.lit(float(wi)) * exprs[name]
     return z
-
-
-def quality_probability(
-    text: Column, model_bytes: bytes | None = None, weights: tuple | None = None
-) -> Column:
-    """P(high quality) = sigmoid(:func:`quality_logit`) — same pure-column
-    contract (no Python worker in the plan)."""
-    z = quality_logit(text, model_bytes, weights)
-    return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))

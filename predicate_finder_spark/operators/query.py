@@ -21,7 +21,9 @@ Scale shape (what .explain should show):
     small and avoids products;
   - a pattern set that cannot be connected through shared variables is a
     cartesian product of its components; that's almost always a query bug
-    at 10^12-triple scale, so it raises unless ``allow_product=True``.
+    at 10^12-triple scale, so it raises.
+
+The triples frame has the columns ``COLS`` = (subj, pred, obj).
 """
 
 from __future__ import annotations
@@ -33,6 +35,8 @@ from pyspark.sql import functions as F
 
 from .graph import _release, _state_digest
 
+COLS = ("subj", "pred", "obj")
+
 __all__ = ["bgp_match", "transitive_pairs", "parse_sparql", "sparql_select"]
 
 
@@ -41,8 +45,7 @@ def _is_var(term: str) -> bool:
 
 
 def _pattern_frame(
-    triples: DataFrame, pattern: tuple[str, str, str], cols: tuple[str, str, str],
-    path_max_hops: int | None = 16,
+    triples: DataFrame, pattern: tuple[str, str, str], path_max_hops: int | None = 16,
 ) -> tuple[DataFrame, list[str]]:
     """One pattern -> (bindings frame, bound variable names).
 
@@ -74,7 +77,7 @@ def _pattern_frame(
     p_term = pattern[1]
     if not _is_var(p_term) and p_term is not None and p_term.startswith("^") and len(p_term) > 1:
         inv, inv_names = _pattern_frame(
-            triples, (pattern[2], p_term[1:], pattern[0]), cols, path_max_hops
+            triples, (pattern[2], p_term[1:], pattern[0]), path_max_hops
         )
         # the recursion saw (obj, pred, subj), so its binding order is
         # flipped — restore the caller's subject-first order
@@ -93,28 +96,28 @@ def _pattern_frame(
                 f"predicate alternation {p_term!r} must list plain predicates "
                 "(no ^/+/* modifiers inside an unparenthesised alternation)"
             )
-        df = df.filter(F.col(cols[1]).isin(*alts))
+        df = df.filter(F.col(COLS[1]).isin(*alts))
     if not _is_var(p_term) and p_term is not None and len(p_term) > 1 and p_term[-1] in "+*":
         base, star = p_term[:-1], p_term.endswith("*")
-        reach = transitive_pairs(triples, base, None if star else path_max_hops, cols)
+        reach = transitive_pairs(triples, base, None if star else path_max_hops)
         if star:
             nodes = (
-                triples.select(F.col(cols[0]).alias("src"))
-                .unionByName(triples.select(F.col(cols[2]).alias("src")))
+                triples.select(F.col(COLS[0]).alias("src"))
+                .unionByName(triples.select(F.col(COLS[2]).alias("src")))
                 .distinct()
             )
             reach = reach.unionByName(
                 nodes.select("src", F.col("src").alias("dst"))
             ).distinct()
         reach = reach.select(
-            F.col("src").alias(cols[0]),
-            F.lit(base).alias(cols[1]),
-            F.col("dst").alias(cols[2]),
+            F.col("src").alias(COLS[0]),
+            F.lit(base).alias(COLS[1]),
+            F.col("dst").alias(COLS[2]),
         )
-        return _pattern_frame(reach, (pattern[0], base, pattern[2]), cols)
+        return _pattern_frame(reach, (pattern[0], base, pattern[2]))
     var_slot: dict[str, str] = {}
-    for slot, term in zip(cols, pattern):
-        if slot == cols[1] and alts is not None:
+    for slot, term in zip(COLS, pattern):
+        if slot == COLS[1] and alts is not None:
             continue  # alternation already filtered the predicate slot
         if _is_var(term):
             name = term[1:]
@@ -140,8 +143,6 @@ def transitive_pairs(
     triples: DataFrame,
     pred: str,
     max_hops: int | None,
-    cols: tuple[str, str, str] = ("subj", "pred", "obj"),
-    max_doubling: int = 40,
 ) -> DataFrame:
     """SPARQL property-path ``pred+``: every (src, dst) pair connected by
     1..max_hops edges of ``pred``; ``max_hops=None`` runs to the FIXPOINT
@@ -164,11 +165,12 @@ def transitive_pairs(
     The fixpoint run converges by the same order-independent digest the CC
     / chain-resolution operators use (graph._state_digest: count + xor of
     xxhash64 over the deduped pair set) — one tiny aggregate per doubling
-    round, O(log diameter) rounds total, ``max_doubling`` as the runaway
+    round, O(log diameter) rounds total, 40 doubling rounds as the runaway
     backstop (2^40 hops covers any real graph's diameter)."""
     if max_hops is not None and max_hops < 1:
         raise ValueError("max_hops must be >= 1 (or None for the fixpoint)")
-    s, p, o = cols
+    s, p, o = COLS
+    max_doubling = 40
 
     def compose(x: DataFrame, y: DataFrame) -> DataFrame:
         xy = (
@@ -222,8 +224,6 @@ def bgp_match(
     patterns: list[tuple[str, str, str]],
     select: list[str] | None = None,
     distinct: bool = True,
-    cols: tuple[str, str, str] = ("subj", "pred", "obj"),
-    allow_product: bool = False,
     optional: list | None = None,
     where=None,
     path_max_hops: int | None = 16,
@@ -238,8 +238,8 @@ def bgp_match(
     ``select``: variables to project (without the ``?``); default = every
     variable, in first-appearance order.
 
-    ``allow_product``: permit disconnected pattern groups (cartesian
-    product of their bindings).  Off by default — see module docstring.
+    Disconnected pattern groups (a cartesian product of their bindings)
+    raise — see module docstring.
 
     ``optional``: SPARQL OPTIONAL — a list of optional GROUPS; each group
     is a list of (s, p, o) patterns that matches AS A UNIT (a bare 3-tuple
@@ -265,7 +265,7 @@ def bgp_match(
     order: list[str] = []  # variables in first-appearance order
     n_const: list[int] = []
     for i, pat in enumerate(patterns):
-        df, names = _pattern_frame(triples, pat, cols, path_max_hops)
+        df, names = _pattern_frame(triples, pat, path_max_hops)
         frames.append((df, names, i))
         n_const.append(sum(1 for t in pat if not _is_var(t)))
         for n in names:
@@ -288,14 +288,11 @@ def bgp_match(
         remaining.remove(pick)
         df, names, _ = frames[pick]
         if shared == 0 and not (bound == set() or not names):
-            if not allow_product:
-                raise ValueError(
-                    f"pattern {patterns[pick]!r} shares no variable with the "
-                    "patterns joined so far — a cartesian product; pass "
-                    "allow_product=True if that is really the query"
-                )
-            acc = acc.crossJoin(df)
-        elif not names:
+            raise ValueError(
+                f"pattern {patterns[pick]!r} shares no variable with the "
+                "patterns joined so far — a cartesian product"
+            )
+        if not names:
             # existence gate: empty marker frame zeroes the result
             acc = acc.crossJoin(F.broadcast(df)).drop("__exists")
         else:
@@ -313,7 +310,7 @@ def bgp_match(
             grp = [grp]
         if not grp:
             raise ValueError("empty OPTIONAL group")
-        gframes = [_pattern_frame(triples, pat, cols, path_max_hops) for pat in grp]
+        gframes = [_pattern_frame(triples, pat, path_max_hops) for pat in grp]
         names = []
         for _, ns in gframes:
             for n_ in ns:
@@ -566,9 +563,7 @@ def parse_sparql(query: str) -> dict:
 def sparql_select(
     triples: DataFrame,
     query: str,
-    cols: tuple[str, str, str] = ("subj", "pred", "obj"),
     path_max_hops: int | None = 16,
-    allow_product: bool = False,
 ) -> DataFrame:
     """Run a SPARQL-subset SELECT (see :func:`parse_sparql`) over the
     triples table — the string front end to :func:`bgp_match`, giving the
@@ -593,9 +588,8 @@ def sparql_select(
         for grp in q["union_groups"]:
             pats = q["patterns"] + list(grp)
             bdf = bgp_match(
-                triples, pats, select=None, distinct=False, cols=cols,
-                allow_product=allow_product, optional=q["optional"],
-                where=None, path_max_hops=path_max_hops,
+                triples, pats, select=None, distinct=False,
+                optional=q["optional"], where=None, path_max_hops=path_max_hops,
             )
             branch_dfs.append(bdf)
             for c in bdf.columns:
@@ -623,8 +617,6 @@ def sparql_select(
             q["patterns"],
             select=q["select"],
             distinct=q["distinct"],
-            cols=cols,
-            allow_product=allow_product,
             optional=q["optional"],
             where=q["where"],
             path_max_hops=path_max_hops,

@@ -38,10 +38,9 @@ _HASH_SPACE = 4294967296  # 2^32: first 8 md5 hex chars parse into [0, 2^32)
 _WEIGHT_SCALE = 1000000
 
 
-def _hash32(col: Column, salt: str) -> Column:
-    """Uniform deterministic draw in [0, 2^32) from md5 of (value|salt)."""
-    keyed = F.concat(col.cast("string"), F.lit("|" + salt)) if salt else col.cast("string")
-    return F.conv(F.substring(F.md5(keyed), 1, 8), 16, 10).cast("long")
+def _hash32(col: Column) -> Column:
+    """Uniform deterministic draw in [0, 2^32) from md5 of the value."""
+    return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
 
 
 def mixture_plan(
@@ -101,7 +100,6 @@ def temperature_sample(
     key_col: str,
     target_rows: int,
     tau: float = 0.5,
-    salt: str = "",
 ) -> DataFrame:
     """Temperature-resample ``df`` toward ~``target_rows`` total rows with
     per-group share ∝ n_group^τ.  Returns surviving rows of ``df``
@@ -109,8 +107,7 @@ def temperature_sample(
 
     Plan: corpus → one groupBy count (dimension-sized result) →
     broadcast keep-threshold join → codegen'd filter.  Deterministic:
-    the kept set is a pure function of (key, group sizes, τ, target,
-    salt).
+    the kept set is a pure function of (key, group sizes, τ, target).
     """
     plan = mixture_plan(df, group_col, target_rows, tau=tau)
     return (
@@ -118,6 +115,6 @@ def temperature_sample(
             F.broadcast(plan.select("group", "thr32")),
             df[group_col] == F.col("group"),
         )
-        .filter(_hash32(F.col(key_col), salt) < F.col("thr32"))
+        .filter(_hash32(F.col(key_col)) < F.col("thr32"))
         .drop("group", "thr32")
     )

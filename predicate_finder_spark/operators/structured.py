@@ -50,10 +50,9 @@ def extract_jsonld_blocks(html: Column | str) -> Column:
     return F.regexp_extract_all(c.cast("string"), F.lit(_JSONLD_PATTERN), 1)
 
 
-def jsonld_triples(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
-    """(url, subj, pred, obj) facts from every JSON-LD block on every page.
+def jsonld_triples(pages: DataFrame) -> DataFrame:
+    """(url, subj, pred, obj) facts from every JSON-LD block on every page
+    of ``pages(url, html)``.
 
     ``subj`` is the block's ``@id`` when present, else the page URL (the
     JSON-LD default-subject rule).  ``@``-prefixed keys are JSON-LD
@@ -63,8 +62,8 @@ def jsonld_triples(
     decode losslessly; a malformed block parses to NULL and is dropped,
     never poisoning the page's other blocks.
     """
-    js = F.explode(extract_jsonld_blocks(F.col(html_col))).alias("__js")
-    blocks = pages.select(F.col(url_col).alias("url"), js)
+    js = F.explode(extract_jsonld_blocks(F.col("html"))).alias("__js")
+    blocks = pages.select("url", js)
     m = F.from_json("__js", "map<string,string>")
     kv = blocks.select(
         "url", F.coalesce(F.element_at(m, "@id"), F.col("url")).alias("subj"),
@@ -77,8 +76,6 @@ def structured_triples(
     pages: DataFrame,
     aliases: DataFrame,
     ontology: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
 ) -> DataFrame:
     """Fuse the two structured channels into linked, canonicalized triples
     (subj, pred, obj, score, url, provenance) — the same contract as the
@@ -108,9 +105,9 @@ def structured_triples(
     # per block (ANSI-safe on missing keys).  Value-identical: from_json's
     # map cannot hold duplicate keys, so the exploded branch also emitted
     # at most one 'about' row per block, with exactly this value.
-    js = F.explode(extract_jsonld_blocks(F.col(html_col))).alias("__js")
+    js = F.explode(extract_jsonld_blocks(F.col("html"))).alias("__js")
     about = (
-        pages.select(F.col(url_col).alias("url"), js)
+        pages.select("url", js)
         .select(
             "url",
             F.try_element_at(
@@ -119,7 +116,7 @@ def structured_triples(
         )
         .filter(F.col("subj_surface").isNotNull())
     )
-    facts = infobox_facts(pages, url_col, html_col)
+    facts = infobox_facts(pages)
     onto_keys = (
         ontology.select(
             F.regexp_replace(F.lower("label"), " ", "_").alias("key"),
@@ -160,9 +157,7 @@ def structured_triples(
     )
 
 
-def infobox_facts(
-    pages: DataFrame, url_col: str = "url", html_col: str = "html"
-) -> DataFrame:
+def infobox_facts(pages: DataFrame) -> DataFrame:
     """(url, key, value) facts from <th>/<td> rows of on-page tables.
 
     The DBpedia-style infobox channel: key is the header cell lowered and
@@ -171,11 +166,11 @@ def infobox_facts(
     markup stripped.  Rows lacking either cell (layout tables, spacers)
     drop out.
     """
-    c = F.col(html_col).cast("string")
+    c = F.col("html").cast("string")
     rows = F.explode(
         F.regexp_extract_all(c, F.lit(_TR_PATTERN), 0)
     ).alias("__row")
-    exploded = pages.select(F.col(url_col).alias("url"), rows)
+    exploded = pages.select("url", rows)
     key = strip_markup(F.regexp_extract("__row", _TH_PATTERN, 1))
     val = strip_markup(F.regexp_extract("__row", _TD_PATTERN, 1))
     return (

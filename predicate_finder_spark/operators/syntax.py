@@ -11,9 +11,9 @@ dead-loop guard when the parse is cyclic/broken (:41-43, :60-62).
 Spark re-expression: no server — a deterministic heuristic parser
 (`heuristic_parse`) produces (heads, deprels) for template-ish sentences,
 and the LCA walk (`shortest_path`) is a pure function; both run inside one
-Arrow-batched pandas UDF over token arrays.  Any real parser (spaCy etc.)
-can be plugged in by swapping `parse_fn` — the walk and the Spark plumbing
-do not change.
+Arrow-batched pandas UDF over token arrays.  A real parser (spaCy etc.)
+would replace `heuristic_parse` inside `make_syntax_path_udf` — the walk
+and the Spark plumbing do not change.
 """
 
 from __future__ import annotations
@@ -68,15 +68,15 @@ def shortest_path(
     deprels: list[str],
     src: int,
     dst: int,
-    max_steps: int = 64,
 ) -> list[str]:
     """LCA walk between two token indices -> interleaved [deprel, token, ...].
 
     Mirrors the reference's two-phase walk (ancestors of src, then dst up to
     the first common ancestor) including the dead-loop guard
     (syntactic_tree.py:41-43,60-62): a cyclic parse terminates after
-    ``max_steps`` instead of hanging.
+    64 steps instead of hanging.
     """
+    max_steps = 64
     n = len(tokens)
     if not (0 <= src < n and 0 <= dst < n):
         return []
@@ -112,8 +112,9 @@ def shortest_path(
     return out
 
 
-def make_syntax_path_udf(parse_fn=heuristic_parse):
-    """(tokens array<string>, src int, dst int) -> array<string> path UDF."""
+def make_syntax_path_udf():
+    """(tokens array<string>, src int, dst int) -> array<string> path UDF
+    over :func:`heuristic_parse`."""
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def syntax_path_udf(tokens: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
@@ -123,7 +124,7 @@ def make_syntax_path_udf(parse_fn=heuristic_parse):
             if not toks or s is None or d is None:
                 out.append([])
                 continue
-            heads, deprels = parse_fn(toks)
+            heads, deprels = heuristic_parse(toks)
             out.append(shortest_path(toks, heads, deprels, int(s), int(d)))
         return pd.Series(out)
 

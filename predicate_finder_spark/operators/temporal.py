@@ -76,52 +76,38 @@ def range_join(
     fact: DataFrame,
     intervals: DataFrame,
     value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
     bucket_width: float = 100.0,
-    how: str = "inner",
-    clamp: bool = True,
 ) -> DataFrame:
-    """Join fact rows to intervals with ``lo <= value < hi`` via bucketized
-    equi-join (no crossJoin/theta join: Catalyst would otherwise fall back
-    to BroadcastNestedLoopJoin, which dies at scale).
+    """Inner-join fact rows to ``intervals(lo, hi, ...)`` with
+    ``lo <= value < hi`` via bucketized equi-join (no crossJoin/theta join:
+    Catalyst would otherwise fall back to BroadcastNestedLoopJoin, which
+    dies at scale).
 
-    ``how`` must be 'inner': this bucketize-explode-filter formulation is
-    inner-only — an outer bucket join followed by the exact lo/hi filter
+    Inner only: an outer bucket join followed by the exact lo/hi filter
     would drop the very unmatched rows an outer join is supposed to keep,
-    and the clamp would additionally erase out-of-range intervals before
-    they could surface as unmatched.  Outer range semantics need a
-    different plan (inner result LEFT-joined back to the preserved side),
-    so rather than silently return inner results under an outer name we
-    refuse.
+    and the clamp below would additionally erase out-of-range intervals
+    before they could surface as unmatched.  Outer range semantics need a
+    different plan (inner result LEFT-joined back to the preserved side).
 
-    ``clamp`` (default on) first computes the fact table's observed
-    [min, max] of ``value_col`` (one cheap column-pruned agg) and clips each
-    interval's bucket range to it — an open-ended band like [150k, 1e9)
-    would otherwise explode into (hi-lo)/bucket_width rows (40k buckets for
-    one interval at width 25k).  Buckets outside the observed value range
-    can never match an inner join, so inner results are identical.
+    The join first computes the fact table's observed [min, max] of
+    ``value_col`` (one cheap column-pruned agg) and clips each interval's
+    bucket range to it — an open-ended band like [150k, 1e9) would
+    otherwise explode into (hi-lo)/bucket_width rows (40k buckets for one
+    interval at width 25k).  Buckets outside the observed value range can
+    never match an inner join, so inner results are identical.
     """
-    if how != "inner":
-        raise ValueError(
-            f"range_join supports how='inner' only (got {how!r}): the "
-            "post-join lo/hi filter and the bucket clamp both break outer "
-            "semantics; build outer results by left-joining the inner "
-            "output back to the preserved side"
-        )
     bounds = None
-    if clamp:
-        row = fact.agg(
-            F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
-        ).first()
-        if row["lo"] is not None:
-            bounds = (float(row["lo"]), float(row["hi"]))
+    row = fact.agg(
+        F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
+    ).first()
+    if row["lo"] is not None:
+        bounds = (float(row["lo"]), float(row["hi"]))
     f = fact.withColumn(
         "__bucket", F.floor(F.col(value_col) / bucket_width).cast("long")
     )
-    iv = bucketize_intervals(intervals, lo_col, hi_col, bucket_width, bounds)
-    joined = f.join(iv, "__bucket", how).filter(
-        (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
+    iv = bucketize_intervals(intervals, "lo", "hi", bucket_width, bounds)
+    joined = f.join(iv, "__bucket", "inner").filter(
+        (F.col(value_col) >= F.col("lo")) & (F.col(value_col) < F.col("hi"))
     )
     return joined.drop("__bucket")
 

@@ -40,18 +40,13 @@ def extract_outlinks(html: Column | str) -> Column:
     return F.regexp_extract_all(c.cast("string"), F.lit(_HREF_PATTERN), 1)
 
 
-def outlink_edges(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    canonicalize: bool = True,
-) -> DataFrame:
-    """(src, dst) edge list of the page graph, one row per distinct link.
+def outlink_edges(pages: DataFrame) -> DataFrame:
+    """(src, dst) edge list of the page graph of ``pages(url, html)``, one
+    row per distinct link.
 
-    ``canonicalize=True`` runs both endpoints through
-    functions/urls.canonicalize_url, so mirror spellings of the same target
-    (WWW-case, default ports, utm noise, fragments) collapse into one edge
-    BEFORE the distinct — the dedup the crawl graph needs to not double-
+    Both endpoints run through functions/urls.canonicalize_url, so mirror
+    spellings of the same target (WWW-case, default ports, utm noise,
+    fragments) collapse into one edge BEFORE the distinct — the dedup the crawl graph needs to not double-
     count every tracking-tagged copy of a link.  Self-loops are kept (a
     page may legitimately link to itself); empty hrefs never match the
     extraction regex.
@@ -70,27 +65,20 @@ def outlink_edges(
     # cause is unverified — plans/r06 holds only per-edge plans, so it can
     # show neither a codegen boundary nor a wider row (html carried through
     # the hoisted Project) in the per-page variant.
-    src = canonicalize_url(F.col(url_col)) if canonicalize else F.col(url_col)
-    dst = F.explode(F.array_distinct(extract_outlinks(F.col(html_col))))
+    src = canonicalize_url(F.col("url"))
+    dst = F.explode(F.array_distinct(extract_outlinks(F.col("html"))))
     edges = pages.select(src.alias("src"), dst.alias("__dst"))
-    if canonicalize:
-        edges = edges.select("src", canonicalize_url(F.col("__dst")).alias("dst"))
-    else:
-        edges = edges.select("src", F.col("__dst").alias("dst"))
+    edges = edges.select("src", canonicalize_url(F.col("__dst")).alias("dst"))
     return edges.distinct()
 
 
-def anchor_texts(
-    pages: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    canonicalize: bool = True,
-) -> DataFrame:
-    """(src, dst, anchor) — one row per <a> element, anchor markup
-    stripped, whitespace collapsed, empty anchors dropped.
+def anchor_texts(pages: DataFrame) -> DataFrame:
+    """(src, dst, anchor) — one row per <a> element of ``pages(url, html)``,
+    both urls canonicalized, anchor markup stripped, whitespace collapsed,
+    empty anchors dropped.
 
-    This is the crawl-native alias-mining source: feeding the output to
-    linking.build_alias_dictionary(surface_col="anchor", entity_col="dst")
+    This is the crawl-native alias-mining source: feeding the output, as
+    ``(surface=anchor, entity=dst)``, to linking.build_alias_dictionary
     yields the (alias, entity, prior) dictionary from the corpus itself —
     Wikipedia-anchor-statistics style (Mendes et al., I-Semantics 2011),
     which the reference outsources to Spotlight's prebuilt model.  NOT
@@ -98,7 +86,7 @@ def anchor_texts(
     """
     el = F.explode(
         F.regexp_extract_all(
-            F.col(html_col).cast("string"), F.lit(_A_PATTERN), 0
+            F.col("html").cast("string"), F.lit(_A_PATTERN), 0
         )
     ).alias("__el")
     # src canonicalization runs per exploded <a> element (ExtractGenerator
@@ -107,11 +95,9 @@ def anchor_texts(
     # 200k pages (1.43 s -> 2.60 s), although every page has at least two
     # <a> elements, so element rows outnumber page rows.  The cause is
     # unverified (see outlink_edges).
-    src = canonicalize_url(F.col(url_col)) if canonicalize else F.col(url_col)
+    src = canonicalize_url(F.col("url"))
     exploded = pages.select(src.alias("src"), el)
-    dst = F.regexp_extract("__el", _HREF_PATTERN, 1)
-    if canonicalize:
-        dst = canonicalize_url(dst)
+    dst = canonicalize_url(F.regexp_extract("__el", _HREF_PATTERN, 1))
     return exploded.select(
         "src",
         dst.alias("dst"),
@@ -119,13 +105,9 @@ def anchor_texts(
     ).filter(F.col("anchor") != "")
 
 
-def latest_snapshot(
-    pages: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    html_col: str = "html",
-) -> DataFrame:
-    """One row per canonical URL: the newest crawl snapshot.
+def latest_snapshot(pages: DataFrame) -> DataFrame:
+    """One row per canonical URL of ``pages(url, warc_ts, html)``: the
+    newest crawl snapshot.
 
     The same page arrives across crawls under mirror spellings and
     re-fetches; training/KG pipelines want exactly one — the freshest.
@@ -138,11 +120,11 @@ def latest_snapshot(
     the html bytes ride the exchange untouched exactly once, which any
     keep-one-copy dedup must pay.
     """
-    canon = canonicalize_url(F.col(url_col))
+    canon = canonicalize_url(F.col("url"))
     w = Window.partitionBy("canon_url").orderBy(
-        F.col(ts_col).desc(),
-        F.col(url_col).asc(),
-        F.md5(F.col(html_col)).asc(),
+        F.col("warc_ts").desc(),
+        F.col("url").asc(),
+        F.md5(F.col("html")).asc(),
     )
     return (
         pages.withColumn("canon_url", canon)

@@ -195,7 +195,7 @@ def extract_triples_incremental(
     cfg = cfg or PipelineConfig()
     prior_triples, seen_urls = incremental_state(spark, state_dir)
     batch_dir = os.path.join(_batches_dir(state_dir), batch_id)
-    if os.path.exists(os.path.join(batch_dir, _BATCH_MARKER)):
+    if read_json(os.path.join(batch_dir, _BATCH_MARKER)) is not None:
         return prior_triples  # this batch already committed
 
     ch = cfg.config_hash()

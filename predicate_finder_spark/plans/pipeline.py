@@ -299,13 +299,14 @@ def _triples_plan(
 
 
 def materialize_graph(
-    triples: DataFrame, with_salience: bool = False, salience_iters: int = 5
+    triples: DataFrame, with_salience: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     """Graph output: vertices(id, label, type) + edges(src, dst, pred,
     weight) — weight = supporting-page count, one groupBy shuffle each.
 
-    ``with_salience=True`` annotates vertices with PageRank over the edge
-    list (operators/graph.pagerank — integer micro-unit determinism), as
+    ``with_salience=True`` annotates vertices with 5-iteration PageRank over
+    the edge list (operators/graph.pagerank — integer micro-unit
+    determinism), as
     ``salience`` (double) + ``salience_units`` (long): the entity-
     importance signal graph consumers sort and prune by.  One extra
     equi-join on the vertex id; the rank state is vertex-sized."""
@@ -328,7 +329,7 @@ def materialize_graph(
     if with_salience:
         from predicate_finder_spark.operators.graph import pagerank
 
-        pr = pagerank(edges, n_iter=salience_iters)
+        pr = pagerank(edges, n_iter=5)
         vertices = vertices.join(
             pr.select(
                 F.col("node").alias("id"),

@@ -9,10 +9,8 @@ no shuffle — and writes them as partitioned text, so a 10^12-triple dump
 is exactly as parallel as the frame feeding it.
 
 IRI mapping: subjects/predicates/objects that are already absolute IRIs
-(contain "://") pass through; bare labels are minted under ``base``
-(percent-escaping the characters N-Triples forbids inside <>).  Literal
-objects (``object_literal=True``) render as quoted strings with the
-RDF-mandated backslash escapes instead.
+(contain "://") pass through; bare labels are minted under ``BASE``
+(percent-escaping the characters N-Triples forbids inside <>).
 """
 
 from __future__ import annotations
@@ -22,7 +20,7 @@ from pyspark.sql import functions as F
 
 __all__ = ["to_ntriples_lines", "write_ntriples"]
 
-_DEFAULT_BASE = "http://example.org/resource/"
+BASE = "http://example.org/resource/"
 
 
 _FORBIDDEN = (
@@ -40,7 +38,7 @@ def _escape_forbidden(col: Column, escape_percent: bool) -> Column:
     return escaped
 
 
-def _iri(col: Column, base: str) -> Column:
+def _iri(col: Column) -> Column:
     # escape the code points N-Triples forbids unescaped inside <...>
     # (space, quotes, angle brackets, braces, pipe, caret, backtick, \).
     # Minted IRIs also escape '%' first (so the later escapes aren't
@@ -52,44 +50,20 @@ def _iri(col: Column, base: str) -> Column:
     return F.concat(
         F.lit("<"),
         F.when(col.contains("://"), _escape_forbidden(col, escape_percent=False))
-        .otherwise(F.concat(F.lit(base), _escape_forbidden(col, escape_percent=True))),
+        .otherwise(F.concat(F.lit(BASE), _escape_forbidden(col, escape_percent=True))),
         F.lit(">"),
     )
 
 
-def _literal(col: Column) -> Column:
-    escaped = col
-    for ch, esc in (
-        ("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t"),
-    ):
-        escaped = F.replace(escaped, F.lit(ch), F.lit(esc))
-    return F.concat(F.lit('"'), escaped, F.lit('"'))
+def to_ntriples_lines(triples: DataFrame) -> DataFrame:
+    """One-column frame ``value`` of N-Triples lines over
+    ``triples(subj, pred, obj)`` — pure column expressions (whole-stage
+    codegen), row-parallel, order-free."""
+    s, p, o = (_iri(F.col(c)) for c in ("subj", "pred", "obj"))
+    return triples.select(F.concat_ws(" ", s, p, o, F.lit(".")).alias("value"))
 
 
-def to_ntriples_lines(
-    triples: DataFrame,
-    base: str = _DEFAULT_BASE,
-    cols: tuple[str, str, str] = ("subj", "pred", "obj"),
-    object_literal: bool = False,
-) -> DataFrame:
-    """One-column frame ``value`` of N-Triples lines — pure column
-    expressions (whole-stage codegen), row-parallel, order-free."""
-    s, p, o = (F.col(c) for c in cols)
-    obj = _literal(o) if object_literal else _iri(o, base)
-    return triples.select(
-        F.concat_ws(" ", _iri(s, base), _iri(p, base), obj, F.lit(".")).alias("value")
-    )
-
-
-def write_ntriples(
-    triples: DataFrame,
-    path: str,
-    base: str = _DEFAULT_BASE,
-    cols: tuple[str, str, str] = ("subj", "pred", "obj"),
-    object_literal: bool = False,
-) -> None:
+def write_ntriples(triples: DataFrame, path: str) -> None:
     """Write the graph as partitioned ``.nt`` text under ``path`` (one
     part file per partition — repartition upstream to size the dump)."""
-    to_ntriples_lines(
-        triples, base=base, cols=cols, object_literal=object_literal
-    ).write.mode("overwrite").text(path)
+    to_ntriples_lines(triples).write.mode("overwrite").text(path)

@@ -119,7 +119,6 @@ def write_stage(
     stage: str,
     config_hash: str,
     inputs: list[str] | None = None,
-    partition_by: list[str] | None = None,
     input_fp: str | None = None,
     metrics: dict | None = None,
 ) -> dict:
@@ -128,26 +127,18 @@ def write_stage(
     Returns the manifest dict.  Partition-level lineage = per-parquet-file
     row counts computed from the committed files themselves (so the
     manifest describes what is actually on disk, not what was planned).
-
-    ``partition_by`` writes hive-layout partitions (the parquet-dir twin of
-    Iceberg partition transforms): a reader filtering on those columns gets
-    partition pruning — only matching directories are listed and scanned.
     """
     t0 = time.time()
     tmp = path + ".__tmp__"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
 
     # per-file row counts from the parquet FOOTERS of the committed files —
     # metadata reads only, no second scan of the stage output (the previous
     # shape re-read the whole table through a groupBy(input_file_name),
-    # one extra full pass per checkpointed stage).  Keys stay relative to
-    # the table root so hive-partition subdirs (lang=en/part-*.parquet)
-    # remain distinct.
+    # one extra full pass per checkpointed stage).  Keys are relative to
+    # the table root.
     import pyarrow.parquet as pq
 
     partitions = {}

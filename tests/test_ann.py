@@ -54,7 +54,7 @@ def test_ivf_seeding_is_distributed_topk(vectors, spark):
     # per-partition top-k), never a global single-partition Window
     from predicate_finder_spark.operators.ann import _seed_vectors
 
-    plan = _seed_vectors(vectors, 8, "vec_id", "embedding")._jdf.queryExecution().explainString(
+    plan = _seed_vectors(vectors, 8)._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
     assert "TakeOrderedAndProject" in plan, plan
@@ -62,16 +62,25 @@ def test_ivf_seeding_is_distributed_topk(vectors, spark):
 
 
 def test_brute_force_quantized_recall(spark):
-    """quantized=True: 4x fewer corpus bytes, top-k overlap vs exact
-    stays high (candidate-generation quality)."""
-    from predicate_finder_spark.operators.ann import brute_force_topk
+    """Scored on int8-quantized vectors (functions/vectors.quantize_embedding,
+    4x fewer corpus bytes), brute-force top-k keeps its overlap with the
+    exact top-k high (candidate-generation quality)."""
+    from predicate_finder_spark.functions.vectors import (
+        dequantize_embedding,
+        quantize_embedding,
+    )
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     qs = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
+
+    def quantized(df, id_col):
+        deq = dequantize_embedding(quantize_embedding(F.col("embedding")))
+        return df.select(id_col, deq.alias("embedding"))
+
     exact = brute_force_topk(e, qs, k=10)
-    approx = brute_force_topk(e, qs, k=10, quantized=True)
+    approx = brute_force_topk(quantized(e, "vec_id"), quantized(qs, "query_id"), k=10)
     ex = {r["query_id"]: set() for r in exact.collect()}
     for r in exact.collect():
         ex[r["query_id"]].add(r["vec_id"])

@@ -97,8 +97,13 @@ def test_curate_then_extract_keeps_pr(spark):
 
 def test_cluster_victim_policy_is_transitive(spark):
     """The distinguishing shape: doc 3 is similar to BOTH 1 and 2, but 1
-    and 2 share nothing.  Pair policy only ever drops a pair's larger id,
-    so it keeps {1, 2}; cluster policy keeps only the component minimum."""
+    and 2 share nothing.  curate_docs' pair policy only ever drops a pair's
+    larger id, so it keeps {1, 2}; the cluster policy composed from the
+    same verified pairs (one survivor per connected component, the q65
+    operator) keeps only the component minimum."""
+    from predicate_finder_spark.operators.dedup import ngram_jaccard_pairs
+    from predicate_finder_spark.operators.graph import connected_components
+
     w = " ".join(f"w{i}" for i in range(1, 13))          # w1..w12
     v = " ".join(f"v{i}" for i in range(1, 13))          # v1..v12
     mix = " ".join([f"w{i}" for i in range(1, 7)] + [f"v{i}" for i in range(1, 7)])
@@ -106,24 +111,18 @@ def test_cluster_victim_policy_is_transitive(spark):
         [(1, w), (2, v), (3, mix)], "doc_id int, text string"
     )
     # 3-gram shingle jaccard(1,3) = jaccard(2,3) = 4/16 = 0.25; (1,2) = 0
-    kw = dict(
-        min_quality=0.0, langs=ALL_LANGS, near_dup="jaccard",
-        near_dup_threshold=0.2,
-    )
     pair_ids = sorted(
-        r["doc_id"] for r in curate_docs(docs, victim_policy="pair", **kw).collect()
+        r["doc_id"]
+        for r in curate_docs(
+            docs, min_quality=0.0, langs=ALL_LANGS, near_dup="jaccard",
+            near_dup_threshold=0.2,
+        ).collect()
     )
-    cluster_ids = sorted(
-        r["doc_id"] for r in curate_docs(docs, victim_policy="cluster", **kw).collect()
-    )
+    comp = connected_components(ngram_jaccard_pairs(docs, threshold=0.2))
+    victims = comp.filter("node != component").select(comp["node"].alias("doc_id"))
+    cluster_ids = sorted(r["doc_id"] for r in docs.join(victims, "doc_id", "left_anti").collect())
     assert pair_ids == [1, 2], pair_ids      # 3 is the only id_b anywhere
     assert cluster_ids == [1], cluster_ids   # transitive closure keeps the min
-
-
-def test_bad_victim_policy_raises(spark):
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id int, text string")
-    with pytest.raises(ValueError, match="victim_policy"):
-        curate_docs(docs, near_dup="jaccard", victim_policy="bogus")
 
 
 def test_bad_near_dup_mode_raises(spark):
@@ -132,32 +131,11 @@ def test_bad_near_dup_mode_raises(spark):
         curate_docs(docs, near_dup="bogus")
 
 
-def test_fitted_quality_model_gate(spark):
-    """quality_model switches the gate to the FITTED classifier: clean
-    prose survives, spam is dropped, and the gate stays Python-free (the
-    fitted inference is a column expression, plan-guarded in
-    test_quality)."""
-    from predicate_finder_spark.operators.quality import PINNED_QUALITY_WEIGHTS
-    from predicate_finder_spark.synth import synth_quality_sample
-
-    sample = synth_quality_sample(spark, 40)  # label 1 = prose, 0 = spam
-    kept = curate_docs(
-        sample, min_quality=0.5, langs=ALL_LANGS, near_dup=None,
-        quality_model=PINNED_QUALITY_WEIGHTS,
-    )
-    labels = {r["label"] for r in kept.select("label").distinct().collect()}
-    assert labels == {1.0}, labels
-    # every distinct prose text survives (exact dedup may fold docs whose
-    # 3 sentence draws collided); no spam text does
-    n_prose_texts = sample.filter("label = 1.0").select("text").distinct().count()
-    assert kept.count() == n_prose_texts
-
-
 def test_perplexity_gate(spark):
-    """ppl_model gate: off-domain gibberish is filtered by the bigram-LM
-    perplexity threshold while fluent in-domain docs survive."""
+    """A bigram-LM perplexity gate composed after curate_docs: off-domain
+    gibberish is filtered by the perplexity threshold while fluent
+    in-domain docs survive."""
     from predicate_finder_spark.operators.lm import fit_bigram_lm, perplexity
-    from predicate_finder_spark.plans.curation import curate_docs
 
     fluent = [
         "the cat sat on the mat near the door and the dog slept by the fire",
@@ -174,20 +152,17 @@ def test_perplexity_gate(spark):
     cut = (max(ppl[i] for i in (0, 1, 2)) + ppl[9]) / 2
     assert max(ppl[i] for i in (0, 1, 2)) < ppl[9]
 
-    kept = curate_docs(
-        docs, min_quality=0.0, langs=("en", "und"), near_dup=None,
-        ppl_model=model, max_log2_ppl=cut,
-    )
-    ids = sorted(r["doc_id"] for r in kept.collect())
-    assert ids == [0, 1, 2]
-    # survivors carry the score column
-    assert "log2_ppl" in kept.columns
+    kept = curate_docs(docs, min_quality=0.0, langs=("en", "und"), near_dup=None)
+    scores = perplexity(kept, *model).filter(f"log2_ppl <= {cut}")
+    kept = kept.join(scores.select("doc_id", "log2_ppl"), "doc_id")
+    assert sorted(r["doc_id"] for r in kept.collect()) == [0, 1, 2]
 
 
 def test_dup_span_cut_prestep(spark):
-    """dup_span_min_len cuts shared boilerplate BEFORE quality/dedup; the
+    """The duplicate-span cut runs BEFORE curate_docs (boilerplate is
+    removed before any quality statistics are computed on it); the
     rewritten texts then collapse under exact dedup."""
-    from predicate_finder_spark.plans.curation import curate_docs
+    from predicate_finder_spark.operators.dedup import cut_duplicate_spans, duplicate_spans
 
     boiler = "click here to accept cookies and continue reading this site"
     rows = [
@@ -196,10 +171,8 @@ def test_dup_span_cut_prestep(spark):
         (2, "a completely original sentence about orchestrating spark stages here"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = curate_docs(
-        docs, min_quality=0.0, langs=("en", "und"), near_dup=None,
-        dup_span_min_len=5,
-    )
+    cut = cut_duplicate_spans(docs, duplicate_spans(docs, min_len=5))
+    kept = curate_docs(cut, min_quality=0.0, langs=("en", "und"), near_dup=None)
     out = {r["doc_id"]: r["text"] for r in kept.collect()}
     # docs 0/1 were identical: boiler AND body are duplicated spans -> both
     # cut to empty, then exact dedup keeps only doc 0

@@ -61,16 +61,6 @@ def test_minhash_verify_jaccard_matches_exact(docs):
         assert abs(v - exact[k]) < 1e-9, (k, v, exact.get(k))
 
 
-def test_hot_shingle_cap_bounds_pairs(spark):
-    # 30 docs share one boilerplate shingle -> 435 pairs uncapped; the df cap
-    # drops the hot shingle from the universe, leaving no co-occurrence
-    rows = [(i, f"common boiler plate unique{i} token{i} word{i}") for i in range(30)]
-    docs30 = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = dedup.ngram_jaccard_pairs(docs30, threshold=1e-9).count()
-    capped = dedup.ngram_jaccard_pairs(docs30, threshold=1e-9, max_shingle_df=5).count()
-    assert uncapped == 435 and capped == 0
-
-
 def test_embedding_cosine_pairs(spark):
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),

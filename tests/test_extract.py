@@ -113,14 +113,14 @@ def test_native_equals_oracle_on_adversarial_inputs(spark):
 
 
 def test_native_equals_oracle_on_corpus(spark, corpus):
-    rows = extract_pages(corpus["pages"], replace=False).select("html", "text_extracted").collect()
-    assert rows and all(r.text_extracted == oracle(r.html) for r in rows)
+    rows = extract_pages(corpus["pages"]).select("html", "text").collect()
+    assert rows and all(r.text == oracle(r.html) for r in rows)
 
 
 def test_byte_identical_invariant(spark, corpus):
     """north_rule invariant: extracted text == gold text for every url."""
-    out = extract_pages(corpus["pages"], replace=False)
-    bad = out.filter(F.col("text_extracted") != F.col("text")).count()
+    out = extract_pages(corpus["pages"].withColumnRenamed("text", "gold"))
+    bad = out.filter(F.col("text") != F.col("gold")).count()
     total = out.count()
     assert total > 0 and bad == 0
 

@@ -1,4 +1,5 @@
-"""Connected components (large-star/small-star) vs a union-find oracle."""
+"""Connected components (large-star/small-star) vs a union-find oracle,
+PageRank vs its integer Python twin, and redirect-chain resolution."""
 
 from __future__ import annotations
 
@@ -6,10 +7,16 @@ import random
 
 from pyspark.sql import functions as F
 
-from predicate_finder_spark.operators.graph import cluster_dedup, connected_components
+from predicate_finder_spark.operators.graph import (
+    _release,
+    connected_components,
+    pagerank,
+    resolve_chains,
+)
 
 
 def _union_find_components(n_nodes, edges):
+    """node -> component minimum, for the nodes that appear in ``edges``."""
     parent = list(range(n_nodes))
 
     def find(x):
@@ -27,23 +34,31 @@ def _union_find_components(n_nodes, edges):
     for v in range(n_nodes):
         r = find(v)
         roots.setdefault(r, []).append(v)
+    seen = {v for e in edges for v in e}
     out = {}
     for members in roots.values():
         m = min(members)
         for v in members:
-            out[v] = m
+            if v in seen:
+                out[v] = m
     return out
 
 
-def _spark_components(spark, edges, vertices=None):
+def _spark_components(spark, edges):
     df = spark.createDataFrame(edges or [(0, 0)], "id_a long, id_b long")
     if not edges:
         df = df.filter(F.lit(False))
-    verts = None
-    if vertices is not None:
-        verts = spark.createDataFrame([(v,) for v in vertices], "doc_id long")
-    got = connected_components(df, vertices=verts)
+    got = connected_components(df)
     return {r["node"]: r["component"] for r in got.collect()}
+
+
+def _new_persisted(spark, before):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+
+
+def _unpersist(spark, ids):
+    for i in ids:
+        spark.sparkContext._jsc.getPersistentRDDs().get(i).unpersist(False)
 
 
 def test_two_components_and_chain(spark):
@@ -55,12 +70,10 @@ def test_two_components_and_chain(spark):
 def test_connected_components_releases_superseded_rounds(spark):
     """Each round's edge checkpoint is released once the next one is
     taken: a call leaves one newly persisted RDD, the result."""
-    from predicate_finder_spark.operators.graph import _release
-
     df = spark.createDataFrame([(i, i + 1) for i in range(30)], "id_a long, id_b long")
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     got = connected_components(df)
-    left = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) - before
+    left = _new_persisted(spark, before)
     assert len(left) == 1, f"{len(left)} RDDs left persisted"
     assert {r["node"]: r["component"] for r in got.collect()} == {i: 0 for i in range(31)}
     _release(got)
@@ -70,7 +83,7 @@ def test_long_chain_converges_fast(spark):
     # a 60-node path is the worst case for naive min-propagation
     # (60 rounds); large-star/small-star must finish in O(log^2).
     edges = [(i, i + 1) for i in range(60)]
-    got = _spark_components(spark, edges, vertices=range(61))
+    got = _spark_components(spark, edges)
     assert got == {i: 0 for i in range(61)}
 
 
@@ -84,46 +97,22 @@ def test_random_graphs_match_union_find(spark):
         ]
         edges = [(a, b) for a, b in edges if a != b]
         want = _union_find_components(n, edges)
-        got = _spark_components(spark, edges, vertices=range(n))
+        got = _spark_components(spark, edges)
         assert got == want, f"trial {trial} mismatch"
 
 
-def test_isolated_vertices_are_singletons(spark):
-    got = _spark_components(spark, [(1, 2)], vertices=[1, 2, 3, 4])
-    assert got == {1: 1, 2: 1, 3: 3, 4: 4}
-
-
 def test_empty_pairs(spark):
-    got = _spark_components(spark, [], vertices=[5, 6])
-    assert got == {5: 5, 6: 6}
-
-
-def test_cluster_dedup_transitive_counterexample(spark):
-    # {1,2,3} with pairs (1,3),(2,3): per-pair id_b-dropping keeps {1,2};
-    # cluster semantics must keep only the component minimum, {1}.
-    docs = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string")
-    pairs = spark.createDataFrame([(1, 3), (2, 3)], "id_a long, id_b long")
-    kept = cluster_dedup(docs, pairs)
-    assert [r["doc_id"] for r in kept.collect()] == [1]
-
-
-def test_cluster_dedup_keeps_unpaired_docs(spark):
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(6)], "doc_id long, text string"
-    )
-    pairs = spark.createDataFrame([(0, 4), (4, 5)], "id_a long, id_b long")
-    kept = cluster_dedup(docs, pairs)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [0, 1, 2, 3]
+    assert _spark_components(spark, []) == {}
 
 
 # --- pagerank ------------------------------------------------------------
 
-def _pagerank_py(edges, n_iter=5, damping=85, scale=10**12, vertices=()):
+def _pagerank_py(edges, n_iter=5, damping=85, scale=10**12):
     """Pure-python twin of operators/graph.pagerank's integer recurrence."""
     from collections import Counter, defaultdict
 
     e = sorted(set(edges))
-    nodes = sorted({u for u, _ in e} | {v for _, v in e} | set(vertices))
+    nodes = sorted({u for u, _ in e} | {v for _, v in e})
     n = len(nodes)
     deg = Counter(u for u, _ in e)
     teleport = ((100 - damping) * scale) // (100 * n)
@@ -142,8 +131,6 @@ def _pagerank_py(edges, n_iter=5, damping=85, scale=10**12, vertices=()):
 
 
 def _spark_pagerank(spark, edges, **kw):
-    from predicate_finder_spark.operators.graph import pagerank
-
     df = spark.createDataFrame(edges, "src string, dst string")
     return {
         r["node"]: r["rank_units"]
@@ -175,8 +162,6 @@ def test_pagerank_hub_ranks_highest(spark):
 def test_pagerank_partition_invariant(spark):
     """The integer-units design goal: identical rank_units regardless of
     input partitioning (float PageRank cannot promise this)."""
-    from predicate_finder_spark.operators.graph import pagerank
-
     random.seed(11)
     edges = [(f"n{random.randrange(40)}", f"n{random.randrange(40)}") for _ in range(200)]
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -188,24 +173,22 @@ def test_pagerank_partition_invariant(spark):
     assert a == b
 
 
-def test_pagerank_isolated_vertices_get_teleport_only(spark):
-    edges = [("a", "b")]
-    verts = spark.createDataFrame([("a",), ("b",), ("z",)], "id string")
+def test_pagerank_releases_superseded_checkpoints(spark):
+    """The node, edge and per-iteration rank checkpoints are released once
+    superseded: a call leaves one newly persisted RDD, the returned ranks."""
+    edges = [(f"n{i}", f"n{(i * 7 + 3) % 25}") for i in range(25)] + [("n1", "sink")]
     df = spark.createDataFrame(edges, "src string, dst string")
-    from predicate_finder_spark.operators.graph import pagerank
-
-    got = {r["node"]: r["rank_units"] for r in pagerank(df, vertices=verts, n_iter=3).collect()}
-    want = _pagerank_py(edges, n_iter=3, vertices=["z"])
-    assert got == want
-    # z receives only teleport + its dangling share back
-    assert got["z"] < got["b"]
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    got = pagerank(df, n_iter=5)
+    left = _new_persisted(spark, before)
+    assert len(left) == 1, f"{len(left)} RDDs left persisted"
+    assert {r["node"]: r["rank_units"] for r in got.collect()} == _pagerank_py(edges, n_iter=5)
+    _unpersist(spark, left)
 
 
 # --- redirect chain resolution / canonicalization -------------------------
 
 def test_resolve_chains_terminal_targets(spark):
-    from predicate_finder_spark.operators.graph import resolve_chains
-
     m = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"),      # 3-link chain
          ("x", "y"),                               # 1-link
@@ -217,9 +200,21 @@ def test_resolve_chains_terminal_targets(spark):
 
 
 def test_resolve_chains_long_chain_within_doubling(spark):
-    from predicate_finder_spark.operators.graph import resolve_chains
-
-    links = [(f"n{i}", f"n{i+1}") for i in range(20)]  # 20-link chain
+    # 6 doubling rounds resolve chains of up to 64 links
+    links = [(f"n{i}", f"n{i+1}") for i in range(64)]
     m = spark.createDataFrame(links, "src string, dst string")
-    got = {r.src: r.target for r in resolve_chains(m, max_doubling=5).collect()}
-    assert got == {f"n{i}": "n20" for i in range(20)}
+    got = {r.src: r.target for r in resolve_chains(m).collect()}
+    assert got == {f"n{i}": "n64" for i in range(64)}
+
+
+def test_resolve_chains_releases_superseded_rounds(spark):
+    """Each doubling round's checkpoint is released once the next one is
+    taken: a call leaves one newly persisted RDD, the last round's."""
+    links = [(f"n{i}", f"n{i+1}") for i in range(10)]
+    m = spark.createDataFrame(links, "src string, dst string")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    got = resolve_chains(m)
+    left = _new_persisted(spark, before)
+    assert len(left) == 1, f"{len(left)} RDDs left persisted"
+    assert {r.src: r.target for r in got.collect()} == {f"n{i}": "n10" for i in range(10)}
+    _unpersist(spark, left)

@@ -87,8 +87,9 @@ def test_committed_batch_is_noop_and_empty_delta(spark, corpus, dicts, tmp_path_
 
 
 def test_torn_batch_is_invisible_and_reprocessed(spark, corpus, dicts, tmp_path_factory):
-    """A batch dir without its marker (crash before commit) is ignored by
-    readers and its pages are reprocessed by the next batch."""
+    """A batch dir without its marker (crash before commit), or with a torn
+    one, is ignored by readers; its pages are reprocessed by the next batch,
+    and a retry under the torn batch's own id recommits it."""
     state = str(tmp_path_factory.mktemp("inc_state3"))
     pages = corpus["pages"]
     cum1 = _run_inc(spark, corpus, dicts, pages, state, "b1")
@@ -105,6 +106,10 @@ def test_torn_batch_is_invisible_and_reprocessed(spark, corpus, dicts, tmp_path_
     with open(os.path.join(state, "batches", "b2", "_batch.json"), "w") as f:
         f.write('{"batch_id": "b2", "commit')
     assert committed_batches(state) == []
+    # retrying the SAME batch id (a replayed stream epoch) recommits it
+    cum3 = _run_inc(spark, corpus, dicts, pages, state, "b2")
+    assert cum3 is not None and _sorted_triples(cum3) == want
+    assert committed_batches(state) == ["b2"]
 
 
 def test_requires_pinned_scorer_state(spark, corpus, tmp_path_factory):

@@ -102,15 +102,6 @@ def test_pmi_hand_computed(spark):
     assert abs(got[("b", "y")][1] - 1.0) < 1e-12
 
 
-def test_pmi_min_count_filters(spark):
-    from predicate_finder_spark.operators.cooccur import pmi_pairs
-
-    obs = spark.createDataFrame(
-        [("a", "x"), ("a", "x"), ("b", "y")], "subj string, obj string"
-    )
-    assert pmi_pairs(obs, min_count=2).count() == 1
-
-
 def test_predicate_stats_hand_computed(spark):
     from predicate_finder_spark.operators.cooccur import predicate_stats
 

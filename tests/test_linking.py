@@ -93,7 +93,7 @@ def test_lsh_blocked_fuzzy_linking(spark):
         [("alba arnheim", "Alba_Arnheim", 0.9), ("rosa jutland", "Rosa_Jutland", 0.9)],
         "alias string, entity string, prior double",
     )
-    got = lsh_blocked_candidates(m, aliases, shingle_size=3, num_hashes=16, bands=8).collect()
+    got = lsh_blocked_candidates(m, aliases).collect()
     ents = {r["entity"] for r in got}
     assert "Alba_Arnheim" in ents and "Rosa_Jutland" not in ents
 

@@ -16,7 +16,6 @@ from predicate_finder_spark.operators.quality import (
     QUALITY_FEATURES,
     fit_quality_classifier,
     quality_logit,
-    quality_probability,
     with_quality_features,
 )
 from predicate_finder_spark.synth import synth_quality_sample
@@ -53,29 +52,15 @@ def test_fitted_classifier_separates_heldout(sample):
     """Held-out accuracy on docs the fit never saw; the sample is
     paraphrase-mixed (3 sentences drawn per doc), so this is generalization,
     not memorization."""
-    model = fit_quality_classifier(sample.filter("doc_id < 300"))
+    weights = deserialize_linear_model(fit_quality_classifier(sample.filter("doc_id < 300")))
     scored = sample.filter("doc_id >= 300").select(
-        "label", quality_probability(F.col("text"), model).alias("p")
+        "label", quality_logit(F.col("text"), weights).alias("z")
     )
+    # p >= 0.5 exactly when the log-odds are >= 0
     acc = scored.select(
-        F.avg(((F.col("p") >= 0.5).cast("double") == F.col("label")).cast("double"))
+        F.avg(((F.col("z") >= 0).cast("double") == F.col("label")).cast("double"))
     ).first()[0]
     assert acc >= 0.95, acc
-
-
-def test_weights_bypass_matches_model_bytes(spark, sample):
-    model = fit_quality_classifier(sample.filter("doc_id < 300"))
-    w, b = deserialize_linear_model(model)
-    a = sample.select(
-        "doc_id", quality_logit(F.col("text"), model).alias("z")
-    ).collect()
-    bvals = sample.select(
-        "doc_id",
-        quality_logit(F.col("text"), weights=(list(w), b)).alias("z"),
-    ).collect()
-    assert sorted((r.doc_id, r.z) for r in a) == sorted(
-        (r.doc_id, r.z) for r in bvals
-    )
 
 
 def test_inference_plan_is_jvm_only_single_stage(spark, sample):
@@ -85,7 +70,7 @@ def test_inference_plan_is_jvm_only_single_stage(spark, sample):
     leave the JVM) and must not shuffle (no Exchange: embarrassingly
     parallel over input splits)."""
     scored = sample.select(
-        quality_probability(F.col("text"), weights=PINNED_QUALITY_WEIGHTS).alias("p")
+        quality_logit(F.col("text"), weights=PINNED_QUALITY_WEIGHTS).alias("z")
     )
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, plan

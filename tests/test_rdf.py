@@ -17,10 +17,10 @@ def test_bare_labels_minted_under_base(spark):
     tri = spark.createDataFrame(
         [("Berlin", "capitalOf", "Germany")], ["subj", "pred", "obj"]
     )
-    [line] = _lines(to_ntriples_lines(tri, base="http://ex.org/r/"))
+    [line] = _lines(to_ntriples_lines(tri))
     assert line == (
-        "<http://ex.org/r/Berlin> <http://ex.org/r/capitalOf> "
-        "<http://ex.org/r/Germany> ."
+        "<http://example.org/resource/Berlin> <http://example.org/resource/capitalOf> "
+        "<http://example.org/resource/Germany> ."
     )
 
 
@@ -38,25 +38,16 @@ def test_iri_escaping_forbidden_chars(spark):
     tri = spark.createDataFrame(
         [('a b"c<d>e', "p", "o")], ["subj", "pred", "obj"]
     )
-    [line] = _lines(to_ntriples_lines(tri, base="http://ex.org/"))
-    assert line.split(" ")[0] == "<http://ex.org/a%20b%22c%3Cd%3Ee>"
+    [line] = _lines(to_ntriples_lines(tri))
+    assert line.split(" ")[0] == "<http://example.org/resource/a%20b%22c%3Cd%3Ee>"
     # every produced line must match the N-Triples grammar
     assert _NT_LINE.match(line)
 
 
 def test_percent_not_double_escaped(spark):
     tri = spark.createDataFrame([("a%20b", "p", "o")], ["subj", "pred", "obj"])
-    [line] = _lines(to_ntriples_lines(tri, base="http://ex.org/"))
-    assert line.split(" ")[0] == "<http://ex.org/a%2520b>"
-
-
-def test_literal_objects_escaped(spark):
-    tri = spark.createDataFrame(
-        [("s", "p", 'he said "hi"\nbye\\end')], ["subj", "pred", "obj"]
-    )
-    [line] = _lines(to_ntriples_lines(tri, object_literal=True))
-    assert line.endswith('"he said \\"hi\\"\\nbye\\\\end" .')
-    assert _NT_LINE.match(line)
+    [line] = _lines(to_ntriples_lines(tri))
+    assert line.split(" ")[0] == "<http://example.org/resource/a%2520b>"
 
 
 def test_write_and_grammar_roundtrip(spark, tmp_path):
@@ -93,7 +84,7 @@ def test_passthrough_iri_forbidden_chars_escaped(spark):
         [("see http://x > y", "http://ex.org/p", "http://ex.org/a%20b")],
         ["subj", "pred", "obj"],
     )
-    [line] = _lines(to_ntriples_lines(tri, base="http://ex.org/"))
+    [line] = _lines(to_ntriples_lines(tri))
     first = line.split("> <")[0] + ">"
     assert first == "<see%20http://x%20%3E%20y>"
     # pre-encoded %20 in a passthrough IRI is NOT double-escaped

@@ -233,3 +233,156 @@ def test_no_unused_module_imports():
 def test_allow_list_names_existing_functions():
     defined = {f"{m}.{n.name}" for m, tree in _package_trees() for n in tree.body if isinstance(n, DEFS)}
     assert not ALLOW.keys() - defined, f"ALLOW names what does not exist: {sorted(ALLOW.keys() - defined)}"
+
+
+# ---------------------------------------------------------------------------
+# Option level: every defaulted parameter and config field has a caller.
+
+# Files whose calls count as callers of a package option, besides package
+# code: the function roots, and the bench files, which are frozen or
+# measure the product.
+BENCH_FILES = ("bench.py", "bench_extra.py", "BENCH/*.py", "perfbench/*.py")
+CALLER_ROOTS = (*FUNCTION_ROOTS, *BENCH_FILES)
+CONFIG = "PipelineConfig"
+
+# ``module.function(param)``, ``module.PipelineConfig.field`` or a whole
+# ``module`` -> why it stays although no caller sets it.
+OPTION_ALLOW = {
+    # The library API that README documents (the function walk's ALLOW).
+    "plans.incremental.extract_triples_incremental(idf)": "README: pinned IDF frame",
+    "plans.incremental.extract_triples_incremental(dedup_content)": "README: crawl-mirror skip",
+    "plans.incremental.incremental_state(as_of)": "README: time travel",
+    "plans.incremental.compact_batches(remove_old)": "README: batch compaction",
+    "streaming.ingest.streaming_triples(cfg)": "README: streamed micro-batch triples",
+    "streaming.ingest.streaming_triples(max_files_per_trigger)": "README: streamed micro-batch triples",
+    "streaming.sessions.sessionize_stream(gap_seconds)": "README: streamed sessionization",
+    "sources.tables.write_bucketed_table(n_buckets)": "README: bucketed table sink",
+    "sources.tables.write_bucketed_table(sort_cols)": "README: bucketed table sink",
+    # The paper reproduction: the re-ranker and matcher channels of the
+    # flagship, the LC-QuAD question path and its trainers.
+    "plans.pipeline.extract_triples(rerank_model)": "paper: feature re-ranker",
+    "plans.pipeline.extract_triples(rerank_framework)": "paper: feature re-ranker",
+    "plans.pipeline.extract_triples(matcher_model)": "paper: fitted M1 matcher channel",
+    "plans.questions.answer_questions(blacklist)": "paper: LC-QuAD question answering",
+    "plans.questions.answer_questions(max_ngram)": "paper: LC-QuAD question answering",
+    "plans.questions.argmax_answers(rank_col)": "paper: re-ranked answers",
+    "sources.corpus.read_question_corpus(simple_only)": "paper: LC-QuAD template filter",
+    "operators.features.negative_sample(key)": "paper: matcher training negatives",
+    "operators.features.train_dev_split(train_frac)": "paper: matcher train/dev split",
+    "operators.train.fit_matcher(channels_col)": "paper: trainer",
+    "operators.train.fit_matcher(label_col)": "paper: trainer",
+    "operators.train.fit_matcher(l2)": "paper: trainer",
+    "operators.train.fit_linear_reranker(max_iter)": "paper: trainer",
+    "operators.train.fit_linear_reranker(tol)": "paper: trainer",
+    "operators.quality.fit_quality_classifier(text_col)": "trainer of the pinned q71 weights",
+    "operators.quality.fit_quality_classifier(label_col)": "trainer of the pinned q71 weights",
+    "operators.quality.fit_quality_classifier(l2)": "trainer of the pinned q71 weights",
+    "streaming.sessions.batch_sessions(gap_seconds)": "batch twin of sessionize_stream",
+    # README's "driver pulls are budgeted" guard: safety code for open-web
+    # vocabularies, off on the bounded corpora the callers run.
+    "config.PipelineConfig.idf_min_df": "README: budgeted driver pulls",
+    "config.PipelineConfig.max_vocab": "README: budgeted driver pulls",
+    # Fixture generators: their size and shape knobs are for tests.
+    "synth": "fixture generator",
+}
+
+
+def _caller_trees():
+    yield from (tree for _, tree in _package_trees())
+    for pattern in CALLER_ROOTS:
+        for path in sorted(REPO.glob(pattern)):
+            yield ast.parse(path.read_text(), str(path))
+
+
+def _callee(node: ast.Call) -> str | None:
+    f = node.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
+    """``(position, name)`` of each defaulted parameter; keyword-only ones
+    have no position."""
+    positional = fn.args.posonlyargs + fn.args.args
+    first = len(positional) - len(fn.args.defaults)
+    out = [(i, a.arg) for i, a in enumerate(positional) if i >= first]
+    out += [(None, a.arg) for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults) if d is not None]
+    return out
+
+
+def _options() -> dict[str, set[str]]:
+    """Per module, the ``function(param)`` of every defaulted parameter of a
+    top-level def and the ``PipelineConfig.field`` of every config field."""
+    out: dict[str, set[str]] = {}
+    for module, tree in _package_trees():
+        opts = out.setdefault(module, set())
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                opts |= {f"{node.name}({param})" for _, param in _defaulted(node)}
+            elif isinstance(node, ast.ClassDef) and node.name == CONFIG:
+                opts |= {
+                    f"{CONFIG}.{stmt.target.id}"
+                    for stmt in node.body
+                    if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name)
+                }
+    return out
+
+
+def _unset_options() -> list[str]:
+    """``module.function(param)`` of each defaulted parameter of a top-level
+    package def that no call in a caller file passes, by keyword, by
+    position or through ``**``, and ``module.PipelineConfig.field`` of each
+    config field that no caller's ``PipelineConfig(...)`` sets and no bench
+    file reads.  Calls match the def by name alone, like the function walk:
+    a name collision can keep an option alive, never flag a set one."""
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in _caller_trees():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and (name := _callee(node)):
+                calls.setdefault(name, []).append(node)
+    bench_reads = {
+        name
+        for pattern in BENCH_FILES
+        for path in sorted(REPO.glob(pattern))
+        for name in _used_names([ast.parse(path.read_text(), str(path))])
+    }
+
+    def passed(name: str, pos: int | None, param: str) -> bool:
+        for call in calls.get(name, ()):
+            if any(k.arg in (param, None) for k in call.keywords):
+                return True
+            if pos is not None and (
+                len(call.args) > pos or any(isinstance(a, ast.Starred) for a in call.args)
+            ):
+                return True
+        return False
+
+    unset = []
+    for module, tree in _package_trees():
+        if module in OPTION_ALLOW:
+            continue
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                unset += [
+                    f"{module}.{node.name}({param})"
+                    for pos, param in _defaulted(node)
+                    if not passed(node.name, pos, param)
+                ]
+            elif isinstance(node, ast.ClassDef) and node.name == CONFIG:
+                unset += [
+                    f"{module}.{CONFIG}.{field}"
+                    for field in (o.partition(".")[2] for o in _options()[module] if o.startswith(CONFIG))
+                    if field not in bench_reads and not passed(CONFIG, None, field)
+                ]
+    return sorted(o for o in unset if o not in OPTION_ALLOW)
+
+
+def test_every_package_option_has_a_caller():
+    unset = _unset_options()
+    assert not unset, f"options no caller sets ({len(unset)}): {unset}"
+
+
+def test_option_allow_names_existing_options():
+    options = _options()
+    existing = set(options) | {f"{m}.{o}" for m, opts in options.items() for o in opts}
+    missing = sorted(OPTION_ALLOW.keys() - existing)
+    assert not missing, f"OPTION_ALLOW names what does not exist: {missing}"

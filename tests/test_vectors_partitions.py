@@ -1,4 +1,4 @@
-"""Partitioned stage writes with pruning + int8 embedding quantization."""
+"""Stage-write manifest counts + int8 embedding quantization."""
 
 from __future__ import annotations
 
@@ -9,30 +9,10 @@ from pyspark.sql import functions as F
 from predicate_finder_spark.sources.tables import write_stage
 
 
-def test_partitioned_stage_write_and_pruning(spark, corpus, tmp_path):
-    out = str(tmp_path / "pages_part")
-    m = write_stage(
-        corpus["pages"].select("url", "lang"), out, "pages_part", "h1",
-        partition_by=["lang"],
-    )
-    # hive layout on disk + per-partition lineage keys carry the dir
-    assert any(k.startswith("lang=") for k in m["partitions"])
-    assert os.path.isdir(os.path.join(out, "lang=en"))
-    # partition pruning: a lang filter reaches the scan as PartitionFilters
-    df = spark.read.parquet(out).filter(F.col("lang") == "en")
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "PartitionFilters" in plan and "lang" in plan.split("PartitionFilters")[1][:200]
-    n_en = df.count()
-    assert 0 < n_en < corpus["pages"].count()
-
-
 def test_write_stage_manifest_counts_from_footers(spark, corpus, tmp_path):
     """Manifest row counts come from parquet footer metadata (no second
     scan of the stage output): totals and per-file counts must equal what
-    a real read of the committed table reports, for both flat and
-    hive-partitioned layouts."""
+    a real read of the committed table reports."""
     import pyarrow.parquet as pq
 
     flat = str(tmp_path / "flat")
@@ -43,15 +23,6 @@ def test_write_stage_manifest_counts_from_footers(spark, corpus, tmp_path):
     for rel, n in m["partitions"].items():
         assert pq.ParquetFile(os.path.join(flat, rel)).metadata.num_rows == n
     assert m["n_files"] == len(m["partitions"]) > 0
-
-    part = str(tmp_path / "part")
-    mp = write_stage(df, part, "part", "h1", partition_by=["lang"])
-    assert mp["rows"] == df.count()
-    assert all("/" in k and k.startswith("lang=") for k in mp["partitions"])
-    by_lang = {r["lang"]: r["n"] for r in df.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    for lang, n in by_lang.items():
-        got = sum(v for k, v in mp["partitions"].items() if k.startswith(f"lang={lang}/"))
-        assert got == n
 
 
 def test_quantize_embedding_roundtrip_bound(spark):

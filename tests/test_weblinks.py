@@ -93,7 +93,9 @@ def test_anchor_texts_feed_alias_dictionary(spark, corpus):
     pages = corpus["pages"]
     n = pages.count()
     anchors = weblinks.anchor_texts(pages)
-    d = build_alias_dictionary(anchors, surface_col="anchor", entity_col="dst")
+    d = build_alias_dictionary(
+        anchors.select(F.col("anchor").alias("surface"), F.col("dst").alias("entity"))
+    )
     rows = d.filter(F.col("alias") == "next").collect()
     assert len(rows) == n
     assert all(abs(r["prior"] - 1.0 / n) < 1e-12 for r in rows)
