@@ -309,6 +309,14 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
     return out
 
 
+def _config_fields(cls: ast.ClassDef) -> list[str]:
+    return [
+        stmt.target.id
+        for stmt in cls.body
+        if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name)
+    ]
+
+
 def _options() -> dict[str, set[str]]:
     """Per module, the ``function(param)`` of every defaulted parameter of a
     top-level def and the ``PipelineConfig.field`` of every config field."""
@@ -319,11 +327,7 @@ def _options() -> dict[str, set[str]]:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 opts |= {f"{node.name}({param})" for _, param in _defaulted(node)}
             elif isinstance(node, ast.ClassDef) and node.name == CONFIG:
-                opts |= {
-                    f"{CONFIG}.{stmt.target.id}"
-                    for stmt in node.body
-                    if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name)
-                }
+                opts |= {f"{CONFIG}.{field}" for field in _config_fields(node)}
     return out
 
 
@@ -370,7 +374,7 @@ def _unset_options() -> list[str]:
             elif isinstance(node, ast.ClassDef) and node.name == CONFIG:
                 unset += [
                     f"{module}.{CONFIG}.{field}"
-                    for field in (o.partition(".")[2] for o in _options()[module] if o.startswith(CONFIG))
+                    for field in _config_fields(node)
                     if field not in bench_reads and not passed(CONFIG, None, field)
                 ]
     return sorted(o for o in unset if o not in OPTION_ALLOW)
